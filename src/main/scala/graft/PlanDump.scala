@@ -9,7 +9,8 @@ import java.nio.file.{Files, Paths}
   * No data is executed — plans only (AQE initial plan,
   * `isFinalPlan=false`) — EXCEPT for queries whose construction runs an
   * eager localCheckpoint (q_dsir, q_mad_outlier, q_spearman,
-  * q_pagerank, q_margin_nn, q_triangles, q_assortativity, q_lm_score):
+  * q_pagerank, q_margin_nn, q_triangles, q_assortativity, q_lm_score,
+  * q_funnel):
   * those materialize their checkpointed intermediates (real jobs) at
   * construction time, and their dumps show LogicalRDD leaves where the
   * checkpoint truncated the plan (ADVICE r16 #3).

@@ -7,10 +7,16 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker,
+  WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-file column statistics for data skipping — the read-path feature
   * that makes Delta's storage layer fast (per-file min/max in the commit
@@ -20,12 +26,18 @@ import org.apache.spark.sql.types._
   * "nullCount"}), so the same payload serves both the sink's own marker
   * (`statsB64`) and the external `_delta_log` mirror.
   *
-  * Collection is ONE distributed aggregation over the freshly written
-  * directory grouped by `input_file_name()` — Delta computes the same
-  * stats inline during its write; without a write hook, the post-write
-  * pass (over files still hot in page cache) is the honest equivalent,
-  * and it yields EXACT values (footer stats can be writer-truncated for
-  * strings, which would make max-prefix pruning unsound).
+  * Stats are collected INSIDE the write, as Delta's
+  * `DeltaJobStatisticsTracker` does: [[Tracker]] rides Spark's
+  * `FileFormatWriter` beside its basic stats tracker
+  * (`org.apache.spark.sql.graft.StatsWrite.writeWithStats`), each write
+  * task folds its rows into per-file accumulators, and the driver merges
+  * the committed tasks' results into the JSON. Values are EXACT (footer
+  * stats can be writer-truncated for strings, which would make
+  * max-prefix pruning unsound). [[collect]] derives the same JSON by a
+  * read-back aggregation over a finished directory; it serves the one
+  * dir the engine did not write itself (a streaming epoch's, produced
+  * by executor-side V2 writers) and is the oracle the write-side
+  * tracker is tested against.
   *
   * Pruning ([[mayMatch]]) is deliberately conservative: it only ever
   * answers "this file CANNOT satisfy the predicate" for the shapes it
@@ -61,8 +73,7 @@ object FileStats {
 
   /** One aggregation pass over `dir`: per-file stats, serialized as
     * `{"<fileName>": {"numRecords":N,"minValues":{...},"maxValues":{...},
-    * "nullCount":{...}}}`. Returns None when the schema has no eligible
-    * columns AND the dir is empty of use (still records numRecords). */
+    * "nullCount":{...}}}`. */
   def collect(spark: SparkSession, dir: String, schema: StructType): String = {
     val cols = statsColumns(schema)
     val df = spark.read.schema(schema).parquet(dir)
@@ -75,32 +86,40 @@ object FileStats {
       }
     val rows = df.groupBy(input_file_name().as("_file"))
       .agg(aggs.head, aggs.tail: _*).collect()
-    val root = mapper.createObjectNode()
+    val withRows = rows.map { r =>
+      r.getString(0).split('/').last -> Summary(r.getLong(1),
+        cols.indices.map(i => r.get(2 + i * 3)),
+        cols.indices.map(i => r.get(3 + i * 3)),
+        cols.indices.map(i => r.getLong(4 + i * 3)))
+    }.toMap
     // zero-row part files never reach the aggregation but still exist on
     // disk; record them with numRecords 0 so (a) every data file has a
     // stats entry (the _delta_log mirror attaches stats per add action)
     // and (b) the pruner can skip them outright
-    df.inputFiles.map(_.split('/').last)
-      .filterNot(f => rows.exists(_.getString(0).split('/').last == f))
-      .foreach { f =>
-        val entry = root.putObject(f)
-        entry.put("numRecords", 0L)
-        entry.putObject("minValues")
-        entry.putObject("maxValues")
-        entry.putObject("nullCount")
-      }
-    rows.foreach { r =>
-      val fileName = r.getString(0).split('/').last
+    val empty = df.inputFiles.map(_.split('/').last)
+      .filterNot(withRows.contains).map(_ -> Summary(0L, Nil, Nil, Nil))
+    render(cols, withRows ++ empty)
+  }
+
+  /** One file's stats before rendering: row count and, per stats
+    * column, min/max as external Scala values (null when the column has
+    * no non-null value) and the null count. */
+  private final case class Summary(numRecords: Long, mins: Seq[Any],
+      maxs: Seq[Any], nulls: Seq[Long])
+
+  /** The stats JSON, files in name order. A zero-row file gets empty
+    * min/max/null objects. */
+  private def render(cols: Seq[StructField],
+      files: Map[String, Summary]): String = {
+    val root = mapper.createObjectNode()
+    files.toSeq.sortBy(_._1).foreach { case (fileName, s) =>
       val entry = root.putObject(fileName)
-      entry.put("numRecords", r.getLong(1))
+      entry.put("numRecords", s.numRecords)
       val minN = entry.putObject("minValues")
       val maxN = entry.putObject("maxValues")
       val nullN = entry.putObject("nullCount")
-      cols.zipWithIndex.foreach { case (f, i) =>
-        val minVal = r.get(2 + i * 3)
-        val maxVal = r.get(3 + i * 3)
-        val nulls = r.getLong(4 + i * 3)
-        nullN.put(f.name, nulls)
+      if (s.numRecords > 0) cols.zipWithIndex.foreach { case (f, i) =>
+        nullN.put(f.name, s.nulls(i))
         // NaN/Infinity are not JSON and their ordering is engine-specific
         // — omit the bound, leaving the column un-prunable for this file
         def finite(v: Any): Boolean = v match {
@@ -108,13 +127,133 @@ object FileStats {
           case fl: java.lang.Float => !fl.isNaN && !fl.isInfinite
           case _ => true
         }
-        if (minVal != null && maxVal != null && finite(minVal) && finite(maxVal)) {
-          putValue(minN, f, minVal)
-          putValue(maxN, f, maxVal)
+        val (lo, hi) = (s.mins(i), s.maxs(i))
+        if (lo != null && hi != null && finite(lo) && finite(hi)) {
+          putValue(minN, f, lo)
+          putValue(maxN, f, hi)
         }
       }
     }
     mapper.writeValueAsString(root)
+  }
+
+  // ---- collection inside the write ---------------------------------------
+
+  /** One file's running stats inside a write task; min/max are Catalyst
+    * internal values. */
+  private final class Acc(n: Int) extends Serializable {
+    var numRecords = 0L
+    val mins = new Array[Any](n)
+    val maxs = new Array[Any](n)
+    val nulls = new Array[Long](n)
+  }
+
+  private final case class TaskFiles(files: Map[String, Acc])
+      extends WriteTaskStats
+
+  /** Per write task: folds every written row into its file's [[Acc]].
+    * Min and max use Spark's interpreted ordering, the one the `min`/`max`
+    * aggregates of [[collect]] use (NaN above every number, -0.0 equal to
+    * 0.0, the first of equal values kept; strings in UTF-8 byte order). */
+  private final class TaskTracker(exprs: Array[Expression])
+      extends WriteTaskStatsTracker {
+    private val orderings =
+      exprs.map(e => TypeUtils.getInterpretedOrdering(e.dataType))
+    private val files = scala.collection.mutable.Map.empty[String, Acc]
+    private var curPath: String = _
+    private var cur: Acc = _
+
+    private def fileName(path: String) = path.substring(path.lastIndexOf('/') + 1)
+
+    // rows of a written file arrive in reused buffers: keep own copies
+    private def own(v: Any): Any = v match {
+      case u: UTF8String => u.clone()
+      case d: Decimal => d.clone()
+      case other => other
+    }
+
+    override def newPartition(partitionValues: InternalRow): Unit = ()
+
+    /** Registers the file before any row, so a zero-row file still gets
+      * its numRecords-0 entry. */
+    override def newFile(filePath: String): Unit = {
+      curPath = filePath
+      cur = new Acc(exprs.length)
+      files(fileName(filePath)) = cur
+    }
+
+    override def closeFile(filePath: String): Unit = ()
+
+    override def newRow(filePath: String, row: InternalRow): Unit = {
+      if (filePath != curPath) {
+        curPath = filePath
+        cur = files(fileName(filePath))
+      }
+      cur.numRecords += 1
+      var i = 0
+      while (i < exprs.length) {
+        val v = exprs(i).eval(row)
+        if (v == null) cur.nulls(i) += 1
+        else {
+          if (cur.mins(i) == null || orderings(i).lt(v, cur.mins(i)))
+            cur.mins(i) = own(v)
+          if (cur.maxs(i) == null || orderings(i).gt(v, cur.maxs(i)))
+            cur.maxs(i) = own(v)
+        }
+        i += 1
+      }
+    }
+
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      TaskFiles(files.toMap)
+  }
+
+  /** The job side of the in-write collection: ships [[TaskTracker]]s to
+    * the write tasks and renders the JSON [[collect]] would produce for
+    * the same directory from the results of the COMMITTED task attempts
+    * (Spark hands `processStats` one result per partition, so a retried
+    * or speculative attempt is never counted twice). */
+  final class Tracker private[FileStats] (cols: Seq[StructField],
+      exprs: Seq[Expression]) extends WriteJobStatsTracker {
+    @transient private var results: Seq[TaskFiles] = Nil
+
+    override def newTaskInstance(): WriteTaskStatsTracker =
+      new TaskTracker(exprs.toArray)
+
+    override def processStats(stats: Seq[WriteTaskStats],
+        jobCommitTime: Long): Unit =
+      results = stats.map(_.asInstanceOf[TaskFiles])
+
+    /** The stats JSON of the finished write. */
+    def json: String = {
+      val toScala = cols.map(f =>
+        CatalystTypeConverters.createToScalaConverter(f.dataType))
+      def external(vs: Array[Any]) = vs.indices.map(i => toScala(i)(vs(i)))
+      render(cols, results.flatMap(_.files).map { case (name, a) =>
+        name -> Summary(a.numRecords, external(a.mins), external(a.maxs),
+          a.nulls.toSeq)
+      }.toMap)
+    }
+  }
+
+  /** A [[Tracker]] for a write whose rows have the layout `output`,
+    * collecting the stats of `statsSchema`'s [[statsColumns]]. A stats
+    * column is found in `output` by name the way a parquet read with
+    * `statsSchema` would find it: missing, it is all-null; of another
+    * type, its values are cast to the stats type. */
+  def tracker(output: Seq[Attribute], statsSchema: StructType,
+      conf: SQLConf): Tracker = {
+    val cols = statsColumns(statsSchema)
+    val exprs = cols.map { f =>
+      output.indexWhere(a => conf.resolver(a.name, f.name)) match {
+        case -1 => Literal(null, f.dataType)
+        case i =>
+          val ref = BoundReference(i, output(i).dataType, output(i).nullable)
+          if (ref.dataType == f.dataType) ref
+          else Cast(ref, f.dataType, Some(conf.sessionLocalTimeZone))
+      }
+    }
+    new Tracker(cols, exprs)
   }
 
   private def putValue(node: com.fasterxml.jackson.databind.node.ObjectNode,

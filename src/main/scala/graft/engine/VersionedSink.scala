@@ -6,6 +6,7 @@ import java.util.{Base64, UUID}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.graft.StatsWrite
 import org.apache.spark.sql.types.StructType
 
 /** Append-only table with a checkpointed commit log — the Delta-semantics
@@ -632,13 +633,16 @@ final class VersionedParquetSink(basePath: String,
     *
     * Governance: a plain table (no constraints / column mapping /
     * generated columns) claims the dir DIRECTLY — zero extra data
-    * movement, per-file stats collected in one distributed pass, and
-    * the claim pins "no governance" so a concurrent ADD CONSTRAINT /
-    * rename aborts it (the epoch retries and takes the governed path).
-    * A governed table re-stages the rows through the full append
-    * machinery (constraint guard, generated-column completion,
-    * physical-name mapping) — one extra write, only when governance
-    * features are actually in play. */
+    * movement — and the claim pins "no governance" so a concurrent ADD
+    * CONSTRAINT / rename aborts it (the epoch retries and takes the
+    * governed path). Its per-file stats come from the one read-back
+    * pass ([[FileStats.collect]]) left in the table layer: the executor
+    * writers of this dir carry no stats tracker, while every write the
+    * sink makes itself collects its stats inside the write
+    * (`StatsWrite.writeWithStats`). A governed table re-stages the rows
+    * through the full append machinery (constraint guard,
+    * generated-column completion, physical-name mapping) — one extra
+    * write, only when governance features are actually in play. */
   def commitStreamEpoch(spark: SparkSession, table: String, unique: String,
       querySchema: StructType, commitKey: String,
       replace: Boolean = false): Boolean = {
@@ -799,9 +803,8 @@ final class VersionedParquetSink(basePath: String,
     val unique = s"d-${UUID.randomUUID()}"
     val shaped = optimizeWrite(guarded, VersionedParquetSink.Constraints
       .parse(entries.lastOption.flatMap(_.props)).toMap)
-    toPhysical(shaped, extended).write.mode(SaveMode.ErrorIfExists)
-      .parquet(s"${tableDir(table)}/$unique") // step 1: unique data dir
-    val stats = FileStats.collect(spark, s"${tableDir(table)}/$unique",
+    val stats = StatsWrite.writeWithStats(toPhysical(shaped, extended),
+      s"${tableDir(table)}/$unique", // step 1: unique data dir
       VersionedParquetSink.ColumnMapping
         .physicalSchema(completed.schema, extended))
     VersionedParquetSink.Staged(table, unique, completed.schema.toDDL,
@@ -1690,17 +1693,15 @@ final class VersionedParquetSink(basePath: String,
         ZOrder.zOrderedN(content, zorderBy, targetFiles.getOrElse(8))
       else targetFiles.fold(content)(n => content.coalesce(n))
     val unique = s"d-${UUID.randomUUID()}"
-    out.write.mode(SaveMode.ErrorIfExists)
-      .parquet(s"${tableDir(table)}/$unique")
+    val stats = StatsWrite.writeWithStats(out,
+      s"${tableDir(table)}/$unique", physSchema.getOrElse(out.schema))
     commitLoop(spark, table, unique, commitKey, compacts = None,
       schemaDdl = entries.lastOption.flatMap(_.schemaDdl)
         .getOrElse(out.schema.toDDL),
       cleanupOnKeyLoss = true,
       requireBase = Some(baseV), rewriteOnlyConflict = true,
       op = Some("compact"),
-      statsJson = Some(FileStats.collect(spark,
-        s"${tableDir(table)}/$unique",
-        physSchema.getOrElse(out.schema))),
+      statsJson = Some(stats),
       replaces = folded.map(_.dir.split('/').last) ++ alsoReplaces)
       .orElse(commitKey.flatMap(k =>
         manifest(spark, table).find(_.key.contains(k)).map(_.version)))
@@ -1718,8 +1719,9 @@ final class VersionedParquetSink(basePath: String,
     val snap = readAt(spark, table, maxV)
     val out = layout(snap)
     val unique = s"d-${UUID.randomUUID()}"
-    toPhysical(out, mapping).write.mode(SaveMode.ErrorIfExists)
-      .parquet(s"${tableDir(table)}/$unique")
+    val stats = StatsWrite.writeWithStats(toPhysical(out, mapping),
+      s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
+        .physicalSchema(snap.schema, mapping))
     // `compacts = maxV` records exactly which versions were folded in —
     // an append that commits while the rewrite runs gets a version > maxV
     // and stays visible alongside the compacted dir.
@@ -1729,10 +1731,7 @@ final class VersionedParquetSink(basePath: String,
       cleanupOnKeyLoss = true, // same-key racer won: drop our rewrite
       requireBase = Some(maxV), rewriteOnlyConflict = true,
       op = Some("compact"),
-      statsJson = Some(FileStats.collect(spark,
-        s"${tableDir(table)}/$unique",
-        VersionedParquetSink.ColumnMapping
-          .physicalSchema(snap.schema, mapping))))
+      statsJson = Some(stats))
       .orElse(commitKey.flatMap(k =>
         manifest(spark, table).find(_.key.contains(k)).map(_.version)))
       .getOrElse(throw new IllegalStateException(
@@ -1884,27 +1883,26 @@ final class VersionedParquetSink(basePath: String,
               schemaTypes.fields.find(_.name == g).get.dataType))
         }
           .select(dataCols.map(col): _*)
+        val ddl = entries.last.schemaDdl.getOrElse(
+          readAt(spark, table, baseV).schema.toDDL)
         // updated images must still satisfy the CHECK constraints
-        toPhysical(constraintGuard(updated,
-          entries.lastOption.flatMap(_.constraints), table), mapping)
-          .write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"${tableDir(table)}/$unique")
+        val stats = StatsWrite.writeWithStats(
+          toPhysical(constraintGuard(updated,
+            entries.lastOption.flatMap(_.constraints), table), mapping),
+          s"${tableDir(table)}/$unique",
+          VersionedParquetSink.ColumnMapping.physicalSchema(
+            StructType(StructType.fromDDL(ddl)
+              .fields.map(_.copy(nullable = true))), mapping))
         matched
           .select(col("__dv_path").as("path"), col("__dv_pos").as("pos"))
           .sort("path", "pos") // row-group-skippable executor mask reads
           .write.mode(SaveMode.ErrorIfExists)
           .parquet(s"${tableDir(table)}/$unique/_dv")
-        val ddl = entries.last.schemaDdl.getOrElse(
-          readAt(spark, table, baseV).schema.toDDL)
         commitLoop(spark, table, unique, commitKey,
           compacts = None, schemaDdl = ddl,
           cleanupOnKeyLoss = true, requireBase = Some(baseV),
           op = Some("update"),
-          statsJson = Some(FileStats.collect(spark,
-            s"${tableDir(table)}/$unique",
-            VersionedParquetSink.ColumnMapping.physicalSchema(
-              StructType(StructType.fromDDL(ddl)
-                .fields.map(_.copy(nullable = true))), mapping))))
+          statsJson = Some(stats))
           .orElse(commitKey.flatMap(k =>
             manifest(spark, table).find(_.key.contains(k)).map(_.version)))
           .getOrElse(throw new IllegalStateException(
@@ -2442,17 +2440,15 @@ final class VersionedParquetSink(basePath: String,
         VersionedParquetSink.ColumnMapping.parse(restoredMapJson)
       val out = readAt(spark, table, toVersion)
       val unique = s"d-${UUID.randomUUID()}"
-      toPhysical(out, restoredMap).write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"${tableDir(table)}/$unique")
+      val stats = StatsWrite.writeWithStats(toPhysical(out, restoredMap),
+        s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
+          .physicalSchema(out.schema, restoredMap))
       commitLoop(spark, table, unique, commitKey,
         compacts = Some(baseV),
         schemaDdl = restoredDdl.getOrElse(out.schema.toDDL),
         cleanupOnKeyLoss = true, requireBase = Some(baseV),
         op = Some("restore"),
-        statsJson = Some(FileStats.collect(spark,
-          s"${tableDir(table)}/$unique",
-          VersionedParquetSink.ColumnMapping
-            .physicalSchema(out.schema, restoredMap))),
+        statsJson = Some(stats),
         newMapping = Some(restoredMapJson),
         newGenerated = Some(atTo.lastOption.flatMap(_.generated)))
         .orElse(commitKey.flatMap(k =>
@@ -2517,17 +2513,15 @@ final class VersionedParquetSink(basePath: String,
         entries.lastOption.flatMap(_.mapping))
       val out = transform(readAt(spark, table, baseV))
       val unique = s"d-${UUID.randomUUID()}"
-      toPhysical(out, mapping).write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"${tableDir(table)}/$unique")
+      val stats = StatsWrite.writeWithStats(toPhysical(out, mapping),
+        s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
+          .physicalSchema(out.schema, mapping))
       commitLoop(spark, table, unique, commitKey,
         compacts = Some(baseV),
         schemaDdl = entries.last.schemaDdl.getOrElse(out.schema.toDDL),
         cleanupOnKeyLoss = true, requireBase = Some(baseV),
         op = Some(opName),
-        statsJson = Some(FileStats.collect(spark,
-          s"${tableDir(table)}/$unique",
-          VersionedParquetSink.ColumnMapping
-            .physicalSchema(out.schema, mapping))))
+        statsJson = Some(stats))
         // None = a same-key racer committed first; report its version
         .orElse(commitKey.flatMap(k =>
           manifest(spark, table).find(_.key.contains(k)).map(_.version)))
@@ -2867,16 +2861,14 @@ final class VersionedParquetSink(basePath: String,
           s"col-${UUID.randomUUID()}", maxId + 1 + i)
       }
       val unique = s"d-${UUID.randomUUID()}"
-      toPhysical(guarded, extended).write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"${tableDir(table)}/$unique")
+      val stats = StatsWrite.writeWithStats(toPhysical(guarded, extended),
+        s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
+          .physicalSchema(completed.schema, extended))
       commitLoop(spark, table, unique, commitKey = commitKey,
         compacts = Some(baseV),
         schemaDdl = completed.schema.toDDL, cleanupOnKeyLoss = true,
         requireBase = Some(baseV), op = Some("overwrite"),
-        statsJson = Some(FileStats.collect(spark,
-          s"${tableDir(table)}/$unique",
-          VersionedParquetSink.ColumnMapping
-            .physicalSchema(completed.schema, extended))),
+        statsJson = Some(stats),
         enforcedConstraints = Some(cons),
         newMapping = if (mappingJson.isDefined)
           Some(VersionedParquetSink.ColumnMapping.render(extended))

@@ -1,5 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{
+  SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Pipeline, VersionedParquetSink}
@@ -202,5 +211,49 @@ class MultiTableTxnSpec extends AnyFunSuite {
     assert(sink.read(spark, "state").count() == 1)
     // and a further run appends nothing (state anti-join + keyed txn)
     assert(Pipeline.run(spark, feeds, sink).newArticles == 0)
+  }
+
+  test("a 4-table commit reads none of the dirs it just staged") {
+    // per-file stats come from the writes themselves: a read-back pass
+    // over a staged d-* dir (two jobs per table) must not come back
+    val base = TestSpark.tmpDir("txnjobs")
+    val sink = new VersionedParquetSink(base)
+    val tables = Seq("raw", "curated", "actors", "state")
+    assert(sink.multiAppendOnce(tables.map(batch(3) -> _), "seed"))
+    def dataDirs = tables.flatMap(t =>
+      Option(new java.io.File(base, t).list()).toSeq.flatten)
+      .filter(_.startsWith("d-")).toSet
+    val before = dataDirs
+    val sc = spark.sparkContext
+    val jobExecs = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobExecs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse("none"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.executionId.toString -> s.physicalPlanDescription)
+        case a: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(a.executionId.toString -> a.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try assert(sink.multiAppendOnce(tables.map(batch(5) -> _), "k"))
+    finally {
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val staged = dataDirs -- before
+    assert(staged.size == 4)
+    val jobs = jobExecs.asScala.toSeq
+    for (exec <- jobs; (id, plan) <- plans.asScala if id == exec;
+        d <- staged)
+      assert(!plan.contains(d), s"a job of the commit scans staged $d:\n$plan")
+    // one write job per table, and nothing else
+    assert(jobs.size == 4, s"jobs of one 4-table commit: $jobs")
   }
 }

@@ -171,11 +171,14 @@ class PlanAuditSpec extends AnyFunSuite {
     // (TrainingQueries.ModelBroadcastMaxRows), so at real-corpus vocab
     // the hints are absent by construction and the plan degrades to
     // the shuffle join this audit protects. At test scale the model is
-    // ~1k rows, so exactly the two model-side hints must appear.
+    // ~1k rows, so exactly the two model-side hints must appear — as
+    // the optimized Join's `strategy=broadcast` hint, not any "hint"
+    // substring of the plan text.
     val lm = SparkEntry.queries("q_lm_score")(spark, sf)
       .queryExecution.optimizedPlan.toString
-    assert("hint".r.findAllIn(lm.toLowerCase).length <= 2,
-      s"q_lm_score hints beyond its two size-gated model sides:\n$lm")
+    assert("strategy=broadcast".r.findAllIn(lm).length == 2,
+      s"q_lm_score must broadcast exactly its two size-gated model " +
+        s"sides at test scale:\n$lm")
     // q_inner_join keeps exactly one hint — the fixed 25-row nation
     // table (scale-invariant, safe); the customer side must be unhinted.
     val ij = SparkEntry.queries("q_inner_join")(spark, sf)
