@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   * `isFinalPlan=false`) — EXCEPT for queries whose construction runs an
   * eager localCheckpoint (q_dsir, q_mad_outlier, q_spearman,
   * q_pagerank, q_margin_nn, q_triangles, q_assortativity, q_lm_score,
-  * q_funnel):
+  * q_funnel, q_boilerplate):
   * those materialize their checkpointed intermediates (real jobs) at
   * construction time, and their dumps show LogicalRDD leaves where the
   * checkpoint truncated the plan (ADVICE r16 #3).

@@ -47,46 +47,54 @@ object GraftRelation {
       table: String): BaseRelation = {
     require(entries.nonEmpty, s"no committed versions for $table")
     val live = VersionedParquetSink.liveEntries(entries)
-    val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
-    val masks: Option[GraftMasks] =
-      if (dvs.isEmpty) None
-      else {
-        val fs = new Path(tableDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dirs = dvs.map(e => VersionedParquetSink.resolveDir(
-          tableDir, VersionedParquetSink.maskDir(e)))
-          .filter(d => fs.exists(new Path(d)))
-        if (dirs.isEmpty) None
-        else {
-          // one distributed pass for the masked-file SET (small: one
-          // string per masked file, independent of masked-row count)
-          val maskedPaths = spark.read.schema("path STRING, pos BIGINT")
-            .parquet(dirs: _*)
-            .select("path").distinct()
-            .collect().map(_.getString(0)).toSet
-          if (maskedPaths.isEmpty) None
-          else Some(GraftMasks(dirs, maskedPaths,
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sparkContext.hadoopConfiguration)))
-        }
-      }
     forDirs(spark, tableDir, entries,
-      live.filterNot(VersionedParquetSink.isDv), table, masks)
+      live.filterNot(VersionedParquetSink.isDv), table,
+      masks(spark, tableDir, live))
+  }
+
+  /** The masks of every merge-on-read commit in `live`, or None when no
+    * live mask hides a row. One distributed pass over the mask parquet
+    * for the masked-file SET (small: one string per masked file,
+    * independent of masked-row count), listed through the same
+    * log-derived index as the data. */
+  def masks(spark: SparkSession, tableDir: String,
+      live: Seq[Commit]): Option[GraftMasks] = {
+    val fs = new Path(tableDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an update that matched no row leaves no `_dv/` dir
+    val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
+      .map(e => GraftFileIndex.Dir(e.version,
+        VersionedParquetSink.maskDir(e), None))
+      .filter(d => fs.exists(
+        new Path(VersionedParquetSink.resolveDir(tableDir, d.dir))))
+    if (dvs.isEmpty) None
+    else {
+      val maskSchema = StructType.fromDDL("path STRING, pos BIGINT")
+      val maskedPaths = spark.baseRelationToDataFrame(HadoopFsRelation(
+          new GraftFileIndex(spark, tableDir, dvs, maskSchema, Nil),
+          StructType(Nil), maskSchema, None, new ParquetFileFormat,
+          Map.empty)(spark))
+        .select("path").distinct()
+        .collect().map(_.getString(0)).toSet
+      if (maskedPaths.isEmpty) None
+      else Some(GraftMasks(
+        dvs.map(d => VersionedParquetSink.resolveDir(tableDir, d.dir)),
+        maskedPaths, new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)))
+    }
   }
 
   /** Relation over an explicit scan set (schema/mapping still from the
-    * full `entries` snapshot) — the streaming source's per-batch form,
-    * scoped to one version range's append dirs. */
+    * full `entries` snapshot): the streaming source's per-batch form,
+    * the change feed's append range and the selective fold's input. */
   def forDirs(spark: SparkSession, tableDir: String, entries: Seq[Commit],
       scan: Seq[Commit], table: String,
       masks: Option[GraftMasks] = None): BaseRelation = {
     require(entries.nonEmpty, s"no committed versions for $table")
-    val logical = entries.lastOption.flatMap(_.schemaDdl) match {
-      case Some(ddl) => StructType(
-        StructType.fromDDL(ddl).fields.map(_.copy(nullable = true)))
-      case None => throw new IllegalStateException(
-        s"table '$table' predates schema-bearing markers")
-    }
+    val logical = StructType((entries.last.schemaDdl match {
+      case Some(ddl) => StructType.fromDDL(ddl)
+      case None => footerSchema(spark, tableDir, entries, table)
+    }).fields.map(_.copy(nullable = true)))
     val mapping = ColumnMapping.parse(entries.lastOption.flatMap(_.mapping))
     // Bloom-index config for equality file skipping: configured logical
     // columns resolved to their stable physical names (sidecars key on
@@ -98,8 +106,28 @@ object GraftRelation {
         .filter(f => BloomIndex.supported(f.dataType))
         .map(f => ColumnMapping.physicalName(mapping, f.name) -> f.dataType)
         .toMap
+    relation(spark, tableDir, scan.map(e =>
+      GraftFileIndex.Dir(e.version, e.dir, e.stats)), logical, mapping, bloom,
+      masks)
+  }
+
+  /** Relation over one written but not yet committed dir (`dir` relative
+    * to `tableDir`), read with the given logical schema (nullable-ized,
+    * as file sources read) and mapping. */
+  def ofDir(spark: SparkSession, tableDir: String, dir: String,
+      logical: StructType,
+      mapping: Seq[(String, ColumnMapping.Entry)] = Nil): BaseRelation =
+    relation(spark, tableDir, Seq(GraftFileIndex.Dir(-1L, dir, None)),
+      StructType(logical.fields.map(_.copy(nullable = true))), mapping,
+      Map.empty, None)
+
+  private def relation(spark: SparkSession, tableDir: String,
+      dirs: Seq[GraftFileIndex.Dir], logical: StructType,
+      mapping: Seq[(String, ColumnMapping.Entry)],
+      bloom: Map[String, org.apache.spark.sql.types.DataType],
+      masks: Option[GraftMasks]): BaseRelation =
     HadoopFsRelation(
-      location = new GraftFileIndex(spark, tableDir, scan, logical, mapping,
+      location = new GraftFileIndex(spark, tableDir, dirs, logical, mapping,
         bloom),
       partitionSchema = StructType(Nil),
       dataSchema = logical,
@@ -107,6 +135,19 @@ object GraftRelation {
       fileFormat = new GraftParquetFileFormat(
         mapping.map { case (l, e) => l -> e.physical }.toMap, masks),
       options = Map.empty)(spark)
+
+  /** Markers written before commits carried their schema: read it from
+    * the footers of the snapshot's live data files. */
+  private def footerSchema(spark: SparkSession, tableDir: String,
+      entries: Seq[Commit], table: String): StructType = {
+    val files = new GraftFileIndex(spark, tableDir,
+      VersionedParquetSink.liveEntries(entries)
+        .filterNot(VersionedParquetSink.isDv)
+        .map(e => GraftFileIndex.Dir(e.version, e.dir, None)),
+      StructType(Nil), Nil).allFiles
+    new ParquetFileFormat().inferSchema(spark, Map.empty, files).getOrElse(
+      throw new IllegalStateException(
+        s"table '$table' has no schema in its log and no data files"))
   }
 }
 
@@ -163,9 +204,17 @@ final case class GraftMasks(maskDirs: Seq[String],
   * catalyst expressions over the logical schema); files whose min/max
   * ranges cannot satisfy them are never opened. The snapshot is pinned
   * at construction — a DataFrame keeps reading the versions it was
-  * planned against, like Delta's snapshot isolation. */
+  * planned against, like Delta's snapshot isolation — so each dir is
+  * listed once, on first use, and the listing serves `listFiles`,
+  * `inputFiles` and `sizeInBytes` alike.
+  *
+  * Equality is by value over what the scan reads (table dir, scanned
+  * (version, dir) pairs, logical schema, mapping), like
+  * `InMemoryFileIndex`'s over its root paths: two reads of one snapshot
+  * canonicalize equal, so cached plans and exchange reuse match. The
+  * live masks are part of [[GraftParquetFileFormat]]'s equality. */
 final class GraftFileIndex(spark: SparkSession, tableDir: String,
-    dataEntries: Seq[Commit], logical: StructType,
+    dirs: Seq[GraftFileIndex.Dir], logical: StructType,
     mapping: Seq[(String, ColumnMapping.Entry)],
     bloom: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
     extends FileIndex {
@@ -175,6 +224,25 @@ final class GraftFileIndex(spark: SparkSession, tableDir: String,
   private val physSchema = ColumnMapping.physicalSchema(logical, mapping)
   private def fs = new Path(tableDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private val identity =
+    (tableDir, dirs.map(d => (d.version, d.dir)), logical, mapping)
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftFileIndex => o.identity == identity
+    case _ => false
+  }
+  override def hashCode: Int = identity.hashCode
+
+  /** Every scanned dir's parquet files, listed once. A missing dir is a
+    * committed dir that was vacuumed: reading it fails loudly. */
+  private lazy val listed: Seq[(GraftFileIndex.Dir, Seq[FileStatus])] =
+    dirs.map { d =>
+      d -> fs.listStatus(new Path(
+          VersionedParquetSink.resolveDir(tableDir, d.dir))).toSeq
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    }
+
+  private[engine] def allFiles: Seq[FileStatus] = listed.flatMap(_._2)
 
   /** Per-sidecar driver cache, pinned with the snapshot (commit dirs are
     * immutable, so an entry never invalidates). Loaded lazily and only
@@ -237,13 +305,6 @@ final class GraftFileIndex(spark: SparkSession, tableDir: String,
       }
     }
 
-  private def listDir(e: Commit): Seq[FileStatus] = {
-    val p = new Path(VersionedParquetSink.resolveDir(tableDir, e.dir))
-    if (!fs.exists(p)) Seq.empty // metadata-only commits have no files
-    else fs.listStatus(p).toSeq.filter(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
-  }
-
   override def rootPaths: Seq[Path] = Seq(new Path(tableDir))
   override def partitionSchema: StructType = StructType(Nil)
   override def refresh(): Unit = () // snapshot semantics: never refreshes
@@ -255,19 +316,19 @@ final class GraftFileIndex(spark: SparkSession, tableDir: String,
       case a: AttributeReference if mappingMap.contains(a.name) =>
         a.withName(mappingMap(a.name))
     })
-    val kept: Seq[(FileStatus, Option[String])] = dataEntries.flatMap { e =>
-      val files = listDir(e)
-      // clone-local sidecar root for inherited dirs (read fallback)
-      val ext = if (e.dir.startsWith("../"))
-        Some(BloomIndex.extRoot(tableDir, e.dir)) else None
-      val survivors = (e.stats, physPred) match {
-        case (Some(json), Some(p)) =>
-          val perFile = FileStats.parse(json)
-          files.filter(f => perFile.get(f.getPath.getName)
-            .forall(pf => FileStats.mayMatch(p, physSchema, pf)))
-        case _ => files
-      }
-      survivors.map(f => (f, ext))
+    val kept: Seq[(FileStatus, Option[String])] = listed.flatMap {
+      case (d, files) =>
+        // clone-local sidecar root for inherited dirs (read fallback)
+        val ext = if (d.dir.startsWith("../"))
+          Some(BloomIndex.extRoot(tableDir, d.dir)) else None
+        val survivors = (d.stats, physPred) match {
+          case (Some(json), Some(p)) =>
+            val perFile = FileStats.parse(json)
+            files.filter(f => perFile.get(f.getPath.getName)
+              .forall(pf => FileStats.mayMatch(p, physSchema, pf)))
+          case _ => files
+        }
+        survivors.map(f => (f, ext))
     }
     // Bloom pass AFTER min/max pruning: point predicates on indexed
     // columns drop files whose filters rule the value out (sidecars
@@ -283,10 +344,16 @@ final class GraftFileIndex(spark: SparkSession, tableDir: String,
   }
 
   override def inputFiles: Array[String] =
-    dataEntries.flatMap(listDir).map(_.getPath.toString).toArray
+    allFiles.map(_.getPath.toString).toArray
 
-  override def sizeInBytes: Long = dataEntries.flatMap(listDir)
-    .map(_.getLen).sum
+  override def sizeInBytes: Long = allFiles.map(_.getLen).sum
+}
+
+object GraftFileIndex {
+  /** One dir the index scans: its commit version (-1 for a dir not yet
+    * committed), its path relative to the table dir, and the commit's
+    * per-file stats when it carries them. */
+  final case class Dir(version: Long, dir: String, stats: Option[String])
 }
 
 /** [[ParquetFileFormat]] that reads files written under column mapping:
@@ -313,6 +380,17 @@ final class GraftParquetFileFormat(mappingMap: Map[String, String],
 
   private def maskedPaths: Set[String] =
     masks.map(_.maskedPaths).getOrElse(Set.empty)
+
+  /** By value over the mapping and the live masks (their dirs and
+    * masked-file set): ParquetFileFormat's own equality is by class,
+    * which would let two snapshots with different masks compare equal. */
+  private val identity =
+    (mappingMap, masks.map(m => (m.maskDirs, m.maskedPaths)))
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftParquetFileFormat => o.identity == identity
+    case _ => false
+  }
+  override def hashCode: Int = identity.hashCode
 
   /** Table-relative form (`<commitDir>/<file>.parquet`) of a scan path
     * — the key the mask's `path` column uses. */

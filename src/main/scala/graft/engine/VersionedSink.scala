@@ -58,10 +58,16 @@ import org.apache.spark.sql.types.StructType
   * / [[updateVectored]]): Delta's deletion-vector shape — DELETE/UPDATE
   * commit positional masks (and, for UPDATE, the updated row images)
   * instead of rewriting data files, so small DML on a huge table writes
-  * kilobytes; readers anti-join the live masks and the next
-  * compact/delete/merge materializes them back into plain files. The
-  * copy-on-write forms ([[delete]] / [[deleteMatching]] / [[merge]])
-  * remain for read-heavy tables where per-scan mask joins aren't wanted.
+  * kilobytes; every read applies the live masks inside its file scan
+  * and the next compact/delete/merge materializes them back into plain
+  * files. The copy-on-write forms ([[delete]] / [[deleteMatching]] /
+  * [[merge]]) remain for read-heavy tables where masked files (read
+  * unsplit, without parquet filter pushdown) aren't wanted.
+  *
+  * '''Reads''' ([[read]], [[readAt]], [[readWhere]], `format("graft")`,
+  * streaming, the change feed, the selective fold) all go through
+  * [[GraftRelation]]: the file list comes from the log, never from a
+  * directory listing of the table.
   */
 final class VersionedParquetSink(basePath: String,
     checkpointInterval: Int = 10,
@@ -328,8 +334,8 @@ final class VersionedParquetSink(basePath: String,
         val ext: Seq[Long] =
           if (extremes.nonEmpty || stagedRows == 0L) extremes.toSeq
           else {
-            val r = spark.read
-              .parquet(s"${tableDir(table)}/${staged.unique}")
+            val r = scanStaged(spark, table, staged.unique, StructType(Seq(
+                StructType.fromDDL(staged.schemaDdl)(c).copy(name = phys))))
               .agg((if (step > 0)
                 org.apache.spark.sql.functions.max(col(phys))
               else org.apache.spark.sql.functions.min(col(phys)))
@@ -659,8 +665,7 @@ final class VersionedParquetSink(basePath: String,
       // data change). Epoch outputs are aggregate-sized, so re-staging
       // through the governed overwrite path costs one small extra write
       // and buys uniform schema-replace/governance semantics.
-      val df = spark.read.schema(querySchema)
-        .parquet(s"${tableDir(table)}/$unique")
+      val df = scanStaged(spark, table, unique, querySchema)
       overwrite(df, table, Some(commitKey))
       f.delete(dirPath, true)
       return true
@@ -673,8 +678,7 @@ final class VersionedParquetSink(basePath: String,
       identityDecls(VersionedParquetSink.Constraints.parse(e.props)
         .toMap).nonEmpty)
     if (governed) {
-      val df = spark.read.schema(querySchema)
-        .parquet(s"${tableDir(table)}/$unique")
+      val df = scanStaged(spark, table, unique, querySchema)
       val ok = appendOnce(df, table, commitKey)
       f.delete(dirPath, true)
       ok
@@ -1020,13 +1024,7 @@ final class VersionedParquetSink(basePath: String,
       try {
         val schema = StructType.fromDDL(s.schemaDdl)
         val mapping = VersionedParquetSink.ColumnMapping.parse(s.mapping)
-        val phys = spark.read.schema(VersionedParquetSink.ColumnMapping
-            .physicalSchema(schema, mapping))
-          .parquet(s"${tableDir(s.table)}/${s.unique}")
-        val logical = if (mapping.isEmpty) phys
-          else phys.select(schema.fields.toSeq.map(fl =>
-            col(VersionedParquetSink.ColumnMapping
-              .physicalName(mapping, fl.name)).as(fl.name)): _*)
+        val logical = scanStaged(spark, s.table, s.unique, schema, mapping)
         // provided generated columns validate per row against the NEW
         // expressions, constraints guard likewise — executing the
         // guarded plan IS the validation (raise_error on violation)
@@ -1087,6 +1085,15 @@ final class VersionedParquetSink(basePath: String,
           .otherwise(lit(true)))
     }
   }
+
+  /** A written but not yet committed dir of `table`, scanned through
+    * the same log-style file index as committed data. */
+  private def scanStaged(spark: SparkSession, table: String, unique: String,
+      schema: StructType,
+      mapping: Seq[(String, VersionedParquetSink.ColumnMapping.Entry)] = Nil):
+      DataFrame =
+    spark.baseRelationToDataFrame(
+      GraftRelation.ofDir(spark, tableDir(table), unique, schema, mapping))
 
   /** Rename a frame's columns logical -> physical for writing (identity
     * on unmapped tables — physical == logical until the first
@@ -1599,10 +1606,10 @@ final class VersionedParquetSink(basePath: String,
     * live deletion-vector mask by folding ONLY the data dirs the masks
     * target (plus merge-on-read update dirs, whose `_dv/` masks ride
     * their data), and RETIRE every mask-carrying commit via the fold's
-    * `replaces` list — after the purge no reader pays the mask
-    * anti-join, and the `_delta_log` mirror's unmaterialized-DV lag
-    * clears. Cost ∝ masked data, never table size (the point of REORG
-    * vs full OPTIMIZE). No live masks: no commit, returns the current
+    * `replaces` list — after the purge no reader applies a mask, and
+    * the `_delta_log` mirror's unmaterialized-DV lag clears. Cost ∝
+    * masked data, never table size (the point of REORG vs full
+    * OPTIMIZE). No live masks: no commit, returns the current
     * version. Content-preserving; same conflict/replay rules as
     * [[compactWhere]]. */
   def reorgPurge(spark: SparkSession, table: String,
@@ -1614,15 +1621,11 @@ final class VersionedParquetSink(basePath: String,
       val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
       if (dvs.isEmpty) baseV
       else {
-        // dirs targeted by any live mask (bounded: masks are position
-        // lists; the distinct-dir projection is tiny)
-        val maskDirs = dvs.map(e => VersionedParquetSink.resolveDir(
-          tableDir(table), VersionedParquetSink.maskDir(e)))
-        val targeted: Set[String] = spark.read
-          .schema("path STRING, pos BIGINT").parquet(maskDirs: _*)
-          .select(org.apache.spark.sql.functions
-            .expr("split_part(path, '/', 1)").as("d"))
-          .distinct().collect().map(_.getString(0)).toSet
+        // dirs targeted by any live mask: the commit-dir part of the
+        // masked-file set (one string per masked file)
+        val targeted: Set[String] =
+          GraftRelation.masks(spark, tableDir(table), live).toSeq
+            .flatMap(_.maskedPaths).map(_.split('/').head).toSet
         // fold: data-bearing live dirs the masks target (the newest
         // full compaction included — its watermark role survives the
         // dir replacement) + every update commit's own data dir
@@ -1640,7 +1643,7 @@ final class VersionedParquetSink(basePath: String,
           // every live mask targets only already-replaced dirs (stale
           // no-op masks): nothing to rewrite — commit an EMPTY data dir
           // whose replaces list retires the mask commits, so readers
-          // stop paying the anti-join
+          // stop applying them
           val unique = s"d-${UUID.randomUUID()}"
           fs(spark, tableDir(table))
             .mkdirs(new Path(s"${tableDir(table)}/$unique"))
@@ -1660,44 +1663,31 @@ final class VersionedParquetSink(basePath: String,
       }
     }
 
-  /** Shared selective-fold body: scan `folded`'s dirs physically, apply
-    * every live mask, lay out, and commit with
+  /** Shared selective-fold body: scan `folded`'s dirs with every live
+    * mask applied, lay out, and commit with
     * `replaces = folded ++ alsoReplaces`. */
   private def foldSelected(spark: SparkSession, table: String,
       entries: Seq[Commit], folded: Seq[Commit],
       alsoReplaces: Seq[String], targetFiles: Option[Int],
       zorderBy: Seq[String], commitKey: Option[String]): Long = {
     val baseV = entries.last.version
-    val live = liveEntries(entries)
-    val logical = entries.lastOption.flatMap(_.schemaDdl).map(ddl =>
-      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
     val mapping = VersionedParquetSink.ColumnMapping.parse(
       entries.lastOption.flatMap(_.mapping))
-    val physSchema = logical.map(
-      VersionedParquetSink.ColumnMapping.physicalSchema(_, mapping))
-    val dirs = folded.map(e =>
-      VersionedParquetSink.resolveDir(tableDir(table), e.dir))
-    // scan PHYSICAL (write stays physical — no mapping round-trip);
     // pre-evolution files read the later columns as null
-    val plain = physSchema match {
-      case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
-      case None => spark.read.parquet(dirs: _*)
-    }
-    val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
-    val content =
-      if (dvs.isEmpty) plain
-      else applyDvMask(spark, table, withPosCols(spark, table, plain),
-        dvs).drop("__dv_path", "__dv_pos")
+    val content = spark.baseRelationToDataFrame(GraftRelation.forDirs(
+      spark, tableDir(table), entries, folded, table,
+      GraftRelation.masks(spark, tableDir(table), liveEntries(entries))))
     val out =
       if (zorderBy.nonEmpty)
         ZOrder.zOrderedN(content, zorderBy, targetFiles.getOrElse(8))
       else targetFiles.fold(content)(n => content.coalesce(n))
     val unique = s"d-${UUID.randomUUID()}"
-    val stats = StatsWrite.writeWithStats(out,
-      s"${tableDir(table)}/$unique", physSchema.getOrElse(out.schema))
+    val stats = StatsWrite.writeWithStats(toPhysical(out, mapping),
+      s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
+        .physicalSchema(content.schema, mapping))
     commitLoop(spark, table, unique, commitKey, compacts = None,
       schemaDdl = entries.lastOption.flatMap(_.schemaDdl)
-        .getOrElse(out.schema.toDDL),
+        .getOrElse(content.schema.toDDL),
       cleanupOnKeyLoss = true,
       requireBase = Some(baseV), rewriteOnlyConflict = true,
       op = Some("compact"),
@@ -1766,12 +1756,14 @@ final class VersionedParquetSink(basePath: String,
   /** DELETE via a deletion vector (Delta's merge-on-read DVs): instead of
     * rewriting the live set, commits a parquet of `(path, pos)` row
     * positions — the rows where `condition` is TRUE — and every reader
-    * anti-joins the mask. Deleting 3 rows from a 100 TB table writes
-    * kilobytes; [[delete]]'s copy-on-write would rewrite the table. The
-    * read-side cost is a (normally broadcast) anti-join per scan, paid
-    * until a [[compact]] / [[delete]] / [[merge]] materializes the mask
-    * into plain files (all three derive from [[readAt]], which applies
-    * DVs, and their `compacts` watermark then retires the DV commits).
+    * skips the masked positions in its scan. Deleting 3 rows from a
+    * 100 TB table writes kilobytes; [[delete]]'s copy-on-write would
+    * rewrite the table. The read-side cost — one planning pass for the
+    * masked-file set, and masked files read unsplit with no parquet
+    * filter pushdown — is paid until a [[compact]] / [[delete]] /
+    * [[merge]] materializes the mask into plain files (all three derive
+    * from [[readAt]], which applies DVs, and their `compacts` watermark
+    * then retires the DV commits).
     *
     * Same SQL DELETE null semantics and serializable isolation as
     * [[delete]]: aborts and retries from a fresh snapshot if ANY commit
@@ -1810,7 +1802,7 @@ final class VersionedParquetSink(basePath: String,
       matching: DataFrame => DataFrame): Long =
     retryingRewrite(spark, table, "dv", commitKey) { entries =>
       val baseV = entries.last.version
-      val dv = matching(readAtPos(spark, table, baseV, keepPos = true))
+      val dv = matching(withPosCols(readAt(spark, table, baseV)))
         .select(col("__dv_path").as("path"), col("__dv_pos").as("pos"))
       val unique = s"d-${UUID.randomUUID()}"
       // globally sorted by (path, pos): executor-side mask resolution
@@ -1853,7 +1845,7 @@ final class VersionedParquetSink(basePath: String,
     require(set.nonEmpty, "updateVectored requires at least one SET column")
     retryingRewrite(spark, table, "update", commitKey) { entries =>
       val baseV = entries.last.version
-      val snap = readAtPos(spark, table, baseV, keepPos = true)
+      val snap = withPosCols(readAt(spark, table, baseV))
       val dataCols = snap.columns
         .filterNot(c => c == "__dv_path" || c == "__dv_pos")
       set.keys.foreach(k => require(dataCols.contains(k),
@@ -2553,7 +2545,6 @@ final class VersionedParquetSink(basePath: String,
     val upToTo = entries.filter(_.version <= toV)
     require(upToTo.nonEmpty, s"no committed versions <= $toV for $table")
     val range = entries.filter(e => e.version > fromV && e.version <= toV)
-    val schemaDdl = upToTo.last.schemaDdl
     def withType(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t))
     // a mask-carrying commit (DV delete / merge-on-read update) CHANGES
@@ -2569,30 +2560,9 @@ final class VersionedParquetSink(basePath: String,
     if (range.forall(e =>
         (e.compacts.isEmpty && !VersionedParquetSink.isMergeOnRead(e)) ||
           e.op.contains("compact"))) {
-      val toSchema = schemaDdl.map(ddl => StructType(
-        StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-      if (fastRange.isEmpty) {
-        val schema = toSchema.getOrElse(
-          readAt(spark, table, toV).schema)
-        return withType(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), "insert")
-      }
-      val dirs = fastRange.map(e =>
-        VersionedParquetSink.resolveDir(tableDir(table), e.dir))
-      // mapped tables: scan physical, alias back to logical (as of toV)
-      val mapping = VersionedParquetSink.ColumnMapping.parse(
-        upToTo.lastOption.flatMap(_.mapping))
-      val df = toSchema match {
-        case Some(schema) =>
-          val scanned = spark.read.schema(VersionedParquetSink.ColumnMapping
-            .physicalSchema(schema, mapping)).parquet(dirs: _*)
-          if (mapping.isEmpty) scanned
-          else scanned.select(schema.fields.toSeq.map(f =>
-            col(VersionedParquetSink.ColumnMapping
-              .physicalName(mapping, f.name)).as(f.name)): _*)
-        case None => spark.read.parquet(dirs: _*)
-      }
-      withType(df, "insert")
+      // schema and mapping as of toV; an empty range reads no files
+      withType(spark.baseRelationToDataFrame(GraftRelation.forDirs(spark,
+        tableDir(table), upToTo, fastRange, table)), "insert")
     } else {
       val b = readAt(spark, table, toV)
       val a0 =
@@ -2900,55 +2870,11 @@ final class VersionedParquetSink(basePath: String,
     * schema comes from the log, not file footers): after schema
     * evolution, files written before a column existed read it as null —
     * and time travel to a pre-evolution version projects the later
-    * columns away entirely. */
+    * columns away entirely. Served by [[GraftRelation]]: the file list
+    * comes from the log, live deletion-vector masks apply inside the
+    * scan, and a filter on the result prunes files by their stats. */
   def readAt(spark: SparkSession, table: String, v: Long): DataFrame =
-    readAtPos(spark, table, v, keepPos = false)
-
-  /** [[readAt]] with the merge-on-read machinery exposed: scans the live
-    * DATA dirs, anti-joins any live deletion-vector masks, and (for the
-    * DV writer) can keep the `__dv_path`/`__dv_pos` position columns. */
-  private def readAtPos(spark: SparkSession, table: String, v: Long,
-      keepPos: Boolean): DataFrame = {
-    val entries = manifest(spark, table).filter(_.version <= v)
-    require(entries.nonEmpty, s"no committed versions <= $v for $table")
-    val live = liveEntries(entries)
-    // an update commit is BOTH: its dir scans as data, its _dv/ masks
-    val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
-    val datas = live.filterNot(VersionedParquetSink.isDv)
-    val dirs = datas.map(e =>
-      VersionedParquetSink.resolveDir(tableDir(table), e.dir))
-    // column mapping: files carry physical names — scan with the
-    // PHYSICAL schema (as of v), alias back to logical at the end
-    val mapping = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
-    val logicalSchema = entries.lastOption.flatMap(_.schemaDdl).map(ddl =>
-      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-    val plain = logicalSchema match {
-      case Some(logical) =>
-        // nullable-ized: pre-evolution files lack the new columns
-        spark.read.schema(VersionedParquetSink.ColumnMapping
-          .physicalSchema(logical, mapping)).parquet(dirs: _*)
-      case None => spark.read.parquet(dirs: _*) // pre-schema-field markers
-    }
-    def logicalize(d: DataFrame): DataFrame =
-      if (mapping.isEmpty) d
-      else {
-        val keep = d.columns.toSeq
-          .filter(c => c == "__dv_path" || c == "__dv_pos")
-        d.select(logicalSchema.get.fields.toSeq.map(f =>
-          col(VersionedParquetSink.ColumnMapping
-            .physicalName(mapping, f.name)).as(f.name)) ++
-          keep.map(col): _*)
-      }
-    if (dvs.isEmpty && !keepPos) logicalize(plain) // zero overhead sans DVs
-    else {
-      val withPos = withPosCols(spark, table, plain)
-      val masked =
-        if (dvs.isEmpty) withPos
-        else applyDvMask(spark, table, withPos, dvs)
-      logicalize(if (keepPos) masked else masked.drop("__dv_path", "__dv_pos"))
-    }
-  }
+    spark.baseRelationToDataFrame(baseRelation(spark, table, Some(v)))
 
   /** Attach the (file-relative path, row position) identity of every
     * scanned row, from the parquet source's `_metadata` columns — exact
@@ -2960,46 +2886,18 @@ final class VersionedParquetSink(basePath: String,
     * reason) and a SHALLOW CLONE's masks key identically whether a row
     * was scanned through the source table or through the clone's
     * re-pointed dirs. Same convention as GraftParquetFileFormat's
-    * executor-side mask. */
-  private def withPosCols(spark: SparkSession, table: String,
-      df: DataFrame): DataFrame =
+    * executor-side mask, which leaves `row_index` at the row's position
+    * in its file. */
+  private def withPosCols(df: DataFrame): DataFrame =
     df.withColumn("__dv_path", org.apache.spark.sql.functions.expr(
         "array_join(slice(split(_metadata.file_path, '/'), -2, 2), '/')"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
 
-  /** Anti-join the union of live deletion vectors: each masked
-    * (path, pos) row disappears from the scan. The mask is broadcast
-    * while small (the overwhelmingly common shape — DVs hold row
-    * POSITIONS, not rows), so the data side never shuffles; a
-    * pathologically large mask degrades to a shuffled anti-join, still
-    * never a rewrite. */
-  private def applyDvMask(spark: SparkSession, table: String,
-      dfWithPos: DataFrame, dvs: Seq[Commit]): DataFrame = {
-    val f = fs(spark, tableDir(table))
-    val dirs = dvs.map(e =>
-      VersionedParquetSink.resolveDir(tableDir(table),
-        VersionedParquetSink.maskDir(e)))
-    // explicit schema: an all-rows-kept DV write may produce no part
-    // files, and schema inference on an empty dir would throw
-    val mask0 = spark.read.schema("path STRING, pos BIGINT")
-      .parquet(dirs: _*)
-      .withColumnRenamed("path", "__dv_path")
-      .withColumnRenamed("pos", "__dv_pos")
-    val maskBytes = dirs.map { d =>
-      val p = new Path(d)
-      if (f.exists(p)) f.listStatus(p).filter(_.isFile).map(_.getLen).sum
-      else 0L
-    }.sum
-    val mask =
-      if (maskBytes <= 64L * 1024 * 1024)
-        org.apache.spark.sql.functions.broadcast(mask0)
-      else mask0
-    dfWithPos.join(mask, Seq("__dv_path", "__dv_pos"), "left_anti")
-  }
-
   /** Data-skipping read (Delta's stats-based file pruning — its core
-    * read-path win): scans ONLY the files whose per-file min/max stats
-    * could satisfy `condition`, then applies the full filter. Pruning is
+    * read-path win): the planner hands `condition` to the relation's
+    * file index, which opens ONLY the files whose per-file min/max stats
+    * (and Bloom sidecars, for point predicates on indexed columns) could
+    * satisfy it; the full filter then applies above the scan. Pruning is
     * an optimization, never a correctness dependency — every unprunable
     * shape (unknown predicate, cast-wrapped column, commit written
     * before stats existed) degrades to scanning that commit's whole
@@ -3013,89 +2911,23 @@ final class VersionedParquetSink(basePath: String,
   /** [[readWhere]] with time travel: the table as of version `v`,
     * stats-pruned for `condition`. */
   def readAtWhere(spark: SparkSession, table: String, v: Long,
-      condition: org.apache.spark.sql.Column): DataFrame = {
-    val entries = manifest(spark, table).filter(_.version <= v)
-    require(entries.nonEmpty, s"no committed versions <= $v for $table")
-    val schema = entries.lastOption.flatMap(_.schemaDdl).map(ddl =>
-      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-    // stats are keyed by PHYSICAL column names (stable across renames):
-    // resolve the predicate against the user-facing logical schema, then
-    // rewrite its attribute references into physical names
-    val mapping = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
-    val physSchema = schema.map(
-      VersionedParquetSink.ColumnMapping.physicalSchema(_, mapping))
-    val pred = schema.flatMap(FileStats.resolvePredicate(spark, _, condition))
-      .map(_.transform {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if mapping.nonEmpty =>
-          a.withName(
-            VersionedParquetSink.ColumnMapping.physicalName(mapping, a.name))
-      })
-    val paths = scanPaths(table, entries, pred, physSchema)
-    val base =
-      if (paths.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        physSchema.getOrElse(readAt(spark, table, v).schema))
-      else physSchema match {
-        case Some(s) => spark.read.schema(s).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    // deletion vectors compose with pruning: masks key on file-relative
-    // paths, so a pruned-away file's mask rows simply never match
-    val dvs = liveEntries(entries).filter(VersionedParquetSink.isMergeOnRead)
-    val masked =
-      if (dvs.isEmpty || paths.isEmpty) base
-      else applyDvMask(spark, table, withPosCols(spark, table, base), dvs)
-        .drop("__dv_path", "__dv_pos")
-    val logical =
-      if (mapping.isEmpty) masked
-      else masked.select(schema.get.fields.toSeq.map(f =>
-        col(VersionedParquetSink.ColumnMapping
-          .physicalName(mapping, f.name)).as(f.name)): _*)
-    logical.filter(condition)
-  }
-
-  /** The concrete paths a [[readAtWhere]] scan opens: pruned FILE paths
-    * for commits carrying stats, whole directories otherwise. Exposed
-    * for the scale tests ("a selective predicate touches few files"). */
-  private[graft] def scanPaths(table: String, entries: Seq[Commit],
-      pred: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-      schema: Option[StructType]): Seq[String] =
-    liveEntries(entries).filterNot(VersionedParquetSink.isDv).flatMap { e =>
-      val dirPath = VersionedParquetSink.resolveDir(tableDir(table), e.dir)
-      (e.stats, pred, schema) match {
-        case (Some(json), Some(p), Some(sc)) =>
-          FileStats.parse(json).collect {
-            case (f, pf) if FileStats.mayMatch(p, sc, pf) => s"$dirPath/$f"
-          }.toSeq.sorted
-        case _ => Seq(dirPath)
-      }
-    }
+      condition: org.apache.spark.sql.Column): DataFrame =
+    readAt(spark, table, v).filter(condition)
 
   /** Test/observability hook: (files surviving pruning, total files) for
-    * a predicate at the latest version. */
+    * a predicate at the latest version — the file index's answer to the
+    * data filters the planner derives for [[readWhere]]. */
   private[graft] def pruningStats(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column): (Int, Int) = {
-    val entries = manifest(spark, table)
-    val schema = entries.lastOption.flatMap(_.schemaDdl).map(ddl =>
-      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-    val mapping = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
-    val physSchema = schema.map(
-      VersionedParquetSink.ColumnMapping.physicalSchema(_, mapping))
-    val live = liveEntries(entries).filterNot(VersionedParquetSink.isDv)
-    val total = live.map(e =>
-      e.stats.map(FileStats.parse(_).size).getOrElse(1)).sum
-    val pred = schema.flatMap(FileStats.resolvePredicate(spark, _, condition))
-      .map(_.transform {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if mapping.nonEmpty =>
-          a.withName(
-            VersionedParquetSink.ColumnMapping.physicalName(mapping, a.name))
-      })
-    val kept = scanPaths(table, entries, pred, physSchema).size
-    (kept, total)
+    val scan = readWhere(spark, table, condition).queryExecution.sparkPlan
+      .collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.getOrElse(throw new IllegalStateException(
+        s"readWhere on '$table' planned no file scan"))
+    def files(filters: Seq[org.apache.spark.sql.catalyst.expressions
+        .Expression]): Int =
+      scan.relation.location.listFiles(Nil, filters).map(_.files.size).sum
+    (files(scan.dataFilters), files(Nil))
   }
 
   /** Timestamp time travel (Delta's `timestampAsOf`): the table as of the
@@ -3149,7 +2981,9 @@ final class VersionedParquetSink(basePath: String,
         throw new IllegalArgumentException(
           s"no version of $table committed at or before $ts")).version
     }).getOrElse(Long.MaxValue)
-    GraftRelation(spark, tableDir(table), all.filter(_.version <= v), table)
+    val entries = all.filter(_.version <= v)
+    require(entries.nonEmpty, s"no committed versions <= $v for $table")
+    GraftRelation(spark, tableDir(table), entries, table)
   }
 
   /** Per-commit admission sizes for streaming rate limits
@@ -3198,15 +3032,26 @@ final class VersionedParquetSink(basePath: String,
     val entries = manifest(spark, table).filter(_.version <= untilVersion)
     require(entries.nonEmpty,
       s"no committed versions for $table at or before v$untilVersion")
+    appendsSince(spark, table, entries, fromVersion, skipChangeCommits)
+  }
+
+  /** The appends in `(fromVersion, entries.last]` as a relation projected
+    * to the snapshot's schema; an append-free range reads no files.
+    * Throws on a data-changing commit in range unless skipped. */
+  private def appendsSince(spark: SparkSession, table: String,
+      entries: Seq[Commit], fromVersion: Long, skipChangeCommits: Boolean):
+      org.apache.spark.sql.sources.BaseRelation = {
     val range = entries.filter(_.version > fromVersion)
     val changing = range.filter(e =>
       (e.compacts.isDefined && !e.op.contains("compact")) ||
         VersionedParquetSink.isMergeOnRead(e))
     if (changing.nonEmpty && !skipChangeCommits)
       throw new IllegalStateException(
-        s"stream over '$table': data-changing commit(s) " +
-          s"${changing.map(e => s"v${e.version}").mkString(", ")} in " +
-          "range — set skipChangeCommits=true for appends-only delivery")
+        s"stream over '$table' from v$fromVersion: data-changing commit(s) " +
+          s"${changing.map(e => s"v${e.version}(${e.op.getOrElse("rewrite")})")
+            .mkString(", ")} in range — streaming a table that rewrites " +
+          "history needs skipChangeCommits=true (appends-only delivery) " +
+          "or a CDF consumer (changesBetween)")
     GraftRelation.forDirs(spark, tableDir(table), entries,
       range.filter(e =>
         e.compacts.isEmpty && e.replaces.isEmpty &&
@@ -3302,39 +3147,8 @@ final class VersionedParquetSink(basePath: String,
       .filter(e => untilVersion.forall(e.version <= _))
     require(entries.nonEmpty, s"no committed versions for $table" +
       untilVersion.fold("")(u => s" at or before v$u"))
-    val latest = entries.last.version
-    val range = entries.filter(_.version > fromVersion)
-    val changing = range.filter(e =>
-      (e.compacts.isDefined && !e.op.contains("compact")) ||
-        VersionedParquetSink.isMergeOnRead(e))
-    if (changing.nonEmpty && !skipChangeCommits)
-      throw new IllegalStateException(
-        s"streamSince($table, $fromVersion): data-changing commit(s) " +
-          s"${changing.map(e => s"v${e.version}(${e.op.getOrElse("rewrite")})")
-            .mkString(", ")} in range — streaming a table that rewrites " +
-          "history needs skipChangeCommits=true (appends-only delivery) " +
-          "or a CDF consumer (changesBetween)")
-    val appendDirs = range
-      .filter(e => e.compacts.isEmpty && e.replaces.isEmpty &&
-        !VersionedParquetSink.isMergeOnRead(e))
-      .map(e => VersionedParquetSink.resolveDir(tableDir(table), e.dir))
-    val mapping = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
-    val logical = entries.lastOption.flatMap(_.schemaDdl).map(ddl =>
-      StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-      .getOrElse(readAt(spark, table, latest).schema)
-    val df =
-      if (appendDirs.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
-      else {
-        val scanned = spark.read.schema(VersionedParquetSink.ColumnMapping
-          .physicalSchema(logical, mapping)).parquet(appendDirs: _*)
-        if (mapping.isEmpty) scanned
-        else scanned.select(logical.fields.toSeq.map(f =>
-          col(VersionedParquetSink.ColumnMapping
-            .physicalName(mapping, f.name)).as(f.name)): _*)
-      }
-    (latest, df)
+    (entries.last.version, spark.baseRelationToDataFrame(
+      appendsSince(spark, table, entries, fromVersion, skipChangeCommits)))
   }
 }
 

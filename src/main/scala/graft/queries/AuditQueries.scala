@@ -101,8 +101,11 @@ object AuditQueries {
     * monotonically_increasing_id over the distinct-trigram table — ids
     * are unique by construction (not hashes: a 64-bit hash would
     * collide at real-corpus vocab sizes and silently merge trigram
-    * counts), and retry-stable because the distinct table is the
-    * output of a deterministic hash-partitioned aggregate. The
+    * counts). monotonically_increasing_id depends on partition layout
+    * and row order, which a recompute may permute, so the dictionary is
+    * frozen by an eager localCheckpoint: its ids live in materialized
+    * blocks, and an evicted or retried partition of this cached table
+    * re-joins against the same tri -> tid mapping. The
     * trigram STRING never leaves this build: q_boilerplate's two
     * aggregates and its join key on the long (per-row string hashing
     * was 4.6 of its 5.4 s summed task CPU at sf0.1), and the cached
@@ -127,6 +130,7 @@ object AuditQueries {
       // in the one-time build touches per-doc-distinct rows only
       val dict = dt0.select("tri").distinct()
         .withColumn("tid", monotonically_increasing_id())
+        .localCheckpoint(true)
       dt0.join(dict, "tri")
         .select("doc_id", "source", "tid", "c")
     }

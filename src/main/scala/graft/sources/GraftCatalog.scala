@@ -299,8 +299,9 @@ final class GraftTable(val base: String, val table: String,
   }
 
   /** The sink-API read honoring the pin — live DVs, mapping and
-    * schema evolution all composed (the fallback scan's source, and
-    * the correctness reference for the planner-integrated path). */
+    * schema evolution all composed; the fallback scan's source. It is
+    * the same [[graft.engine.GraftRelation]] scan the planner-integrated
+    * path uses, not an independent reference for it. */
   private[graft] def readDF(spark: SparkSession): DataFrame =
     (versionAsOf, timestampAsOf) match {
       case (Some(v), _) => sink.readAt(spark, table, v)

@@ -57,6 +57,16 @@ class BloomIndexSpec extends AnyFunSuite {
     val _ = sink
   }
 
+  test("sink readWhere prunes through the bloom index") {
+    val (sink, _) = interleaved("bl1b")
+    val lookup = () => sink.readWhere(spark, "t", col("id") === 601L)
+    assert(lookup().collect().map(_.getString(1)).toSeq == Seq("s1-200"))
+    val scanned = scanOf(lookup()).metrics("numFiles")
+    assert(scanned.value == 1,
+      s"bloom should leave 1 of 4 files, scanned ${scanned.value}")
+    assert(sink.pruningStats(spark, "t", col("id") === 601L) == ((1, 4)))
+  }
+
   test("string-column lookup prunes through its own filters") {
     val (_, base) = interleaved("bl2")
     val scanned = scanOf(

@@ -325,16 +325,27 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(viaLog(1) == "new" && viaLog.size == 10, s"$viaLog")
   }
 
-  test("mask anti-join BROADCASTS: the data side never shuffles for a small DV") {
+  test("live mask applies in the scan: one GraftParquet scan, no join, " +
+      "no exchange") {
     val sink = new VersionedParquetSink(TestSpark.tmpDir("dv17"))
     sink.append((1 to 1000).map(i => (i, s"v$i")).toDF("id", "v"), "t")
     sink.deleteVectored(spark, "t", col("id") <= 5)
-    val plan = sink.read(spark, "t").queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"mask join is not a broadcast anti-join:\n$plan")
-    // no Exchange on the data side: the only exchange is the broadcast
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"data side shuffled for a kilobyte mask:\n$plan")
+    val df = sink.read(spark, "t")
+    assert(df.count() == 995L)
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1 && scans.head.relation.fileFormat
+      .isInstanceOf[graft.engine.GraftParquetFileFormat], s"$plan")
+    assert(plan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }.isEmpty, s"mask read joins or shuffles:\n$plan")
   }
 
   test("write amplification: DV delete writes KBs where copy-on-write rewrites") {

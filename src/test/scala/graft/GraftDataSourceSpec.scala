@@ -166,10 +166,10 @@ class GraftDataSourceSpec extends AnyFunSuite {
     sink.append((1 to 10).map(i => (i, s"r$i")).toDF("id", "v")
       .coalesce(1), "t")
     sink.deleteVectored(spark, "t", col("id") === 3 || col("id") === 7)
-    // the masked read equals the sink API's own merge-on-read result
+    // the masked read holds exactly the unmasked ids
     val viaFormat = spark.read.format("graft").load(s"$base/t")
     assert(viaFormat.collect().map(_.getInt(0)).sorted.toSeq ==
-      sink.read(spark, "t").collect().map(_.getInt(0)).sorted.toSeq)
+      (1 to 10).filterNot(Set(3, 7)))
     assert(viaFormat.count() == 8)
     // predicates still answer correctly over masked files (the full
     // filter re-applies above the scan; pushdown is withheld per file)
@@ -208,11 +208,10 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .head().getLong(0) ==
       (1 to 300000).filter(i => i % 97 >= 30 && i % 97 != 96)
         .map(_.toLong).sum)
-    // equals the sink API's own merge-on-read result on a sample slice
+    // a sample slice holds exactly the unmasked ids
     assert(viaFormat.filter(col("id") <= 1000).collect()
       .map(_.getInt(0)).sorted.toSeq ==
-      sink.read(spark, "t").filter(col("id") <= 1000).collect()
-        .map(_.getInt(0)).sorted.toSeq)
+      (1 to 1000).filter(i => i % 97 >= 30 && i % 97 != 96))
   }
 
   test("stats skipping stays engaged while a deletion vector is live") {

@@ -23,13 +23,16 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   *
   * Every rename's destination is recorded so specs can assert no
   * rename ever LANDS a claim (a `.commit` marker or a txn manifest
-  * json) while the conditional-PUT coordinator is active.
+  * json) while the conditional-PUT coordinator is active, and every
+  * listing is counted per directory so specs can bound re-listing.
   */
 class LagListFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "lag"
   override def getUri: URI = URI.create("lag:///")
 
   override def listStatus(p: Path): Array[FileStatus] = {
+    LagListFileSystem.listings.computeIfAbsent(p.toUri.getPath,
+      _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
     val all = super.listStatus(p)
     val lag = LagListFileSystem.lagMs.get()
     if (lag <= 0L ||
@@ -53,6 +56,11 @@ object LagListFileSystem {
   /** Destinations of every rename through this FS (all schemes' tests
     * share the JVM-wide queue; filter by path prefix). */
   val renames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** `listStatus` calls per directory path (all schemes' tests share
+    * the JVM-wide map; key by path). */
+  val listings = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.AtomicInteger]()
 
   /** Registers the scheme on the given Hadoop configuration. */
   def register(conf: org.apache.hadoop.conf.Configuration): Unit =
