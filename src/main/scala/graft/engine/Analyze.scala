@@ -79,19 +79,35 @@ object Analyze {
     }
   }
 
-  /** news -> news + nested `analysis` struct column (null = failed row,
-    * U2). mapPartitions batches rows per partition — the distributed
-    * replacement for the reference's sequential per-row loop. */
-  def withAnalysis(
+  /** news -> `(id, analysis)`, one row per input row (`analysis` null =
+    * failed row, U2). The analyzer runs via `mapPartitions`, which
+    * batches rows per partition: the distributed replacement for the
+    * reference's sequential per-row loop. The plan is a projection of
+    * `news` and the analyzer, with no join, so over a cached `news` it
+    * reads the cache. The pipelines feed [[explodeActors]] from this
+    * frame directly: their batches hold each `id` once, and
+    * [[explodeActors]] reads only `id` and `analysis`, so the actor
+    * rows equal those of [[withAnalysis]]. */
+  def analyses(
       spark: SparkSession, news: DataFrame,
       analyzer: TextAnalyzer = RuleBasedAnalyzer): DataFrame = {
     import spark.implicits._
-    val analyzed = news
+    news
       .select("id", "title", "description").as[(String, String, String)]
       .mapPartitions(analyzer.analyzeBatch)
       .toDF("id", "analysis")
-    news.join(analyzed, Seq("id"), "left")
   }
+
+  /** news -> news + nested `analysis` struct column: `news` left-joined
+    * to [[analyses]] on `id`. This is a self-join of `news`, and one of
+    * its sides can plan outside `news`'s cache (a foreachBatch
+    * micro-batch measured that way: the actors write re-ran the
+    * stateful dedup), so the pipelines do not use it. It serves callers
+    * that need the other `news` columns next to the analysis. */
+  def withAnalysis(
+      spark: SparkSession, news: DataFrame,
+      analyzer: TextAnalyzer = RuleBasedAnalyzer): DataFrame =
+    news.join(analyses(spark, news, analyzer), Seq("id"), "left")
 
   /** Flatten nested actor lists to rows (collector.py:168-213): one row
     * per actor, main flagged true — pure built-ins (explode = Catalyst

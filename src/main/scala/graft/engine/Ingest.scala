@@ -78,9 +78,4 @@ object Ingest {
     if (sink.exists(spark, "state")) sink.read(spark, "state")
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.state)
-
-  /** Append the newly processed ids to state (collector.py:113-115).
-    * Append-only: the anti-join treats the union of appends as the set. */
-  def saveState(sink: TableSink, processed: DataFrame): Unit =
-    sink.append(processed.select(col("id")), "state")
 }

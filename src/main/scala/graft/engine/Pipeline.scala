@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
 
 /** Batch end-to-end wiring (SURVEY.md §3.1): the reference's
   * `main.py` -> `process_feeds()` flow as one lazy Spark job graph.
@@ -9,10 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * analyze -> explode -> write actors, all through the TableSink.
   *
   * The reference executes the source graph twice (raw at collector.py:234,
-  * curated at 235-236); here the ingested batch is cached once and fanned
-  * out to the three sinks (SURVEY.md §7.4 risk 5). Re-running on the same
-  * snapshots appends nothing: the state anti-join (T1/T2) makes the
-  * pipeline idempotent at the batch level.
+  * curated at 235-236). Here the new rows of a batch are computed once:
+  * ONE action caches them and returns the row count and the batch key
+  * together, and then every write of the commit (raw, curated, actors,
+  * state) reads that cache. The actor rows come from
+  * [[Analyze.analyses]] with no join; the self-join in
+  * [[Analyze.withAnalysis]] cost one more broadcast job per poll and
+  * adds nothing here, since the batch holds each id once. Re-running
+  * on the same snapshots appends nothing: the state anti-join (T1/T2)
+  * makes the pipeline idempotent at the batch level.
   */
 object Pipeline {
 
@@ -31,8 +37,7 @@ object Pipeline {
       // min/max freshness over the PARSED time — the raw RFC-1123 string
       // starts with the weekday name, so its lexicographic bounds are
       // meaningless; null counters stay on the raw column
-      tsRange = Some(Ingest.parsePublished(
-        org.apache.spark.sql.functions.col("published"))))
+      tsRange = Some(Ingest.parsePublished(col("published"))))
     val news = Ingest.toNews(entries)
     val state = Ingest.loadState(spark, sink)
     // dropDuplicates(id): the SAME new guid can appear in two snapshot
@@ -41,10 +46,9 @@ object Pipeline {
     // dropDuplicatesWithinWatermark)
     val fresh = Ingest.newEntries(news, state).dropDuplicates("id").cache()
     try {
-      // one materialization: empty-batch guard AND the action that fires
-      // the observe() accumulators — quality comes for free with it
-      val n = fresh.count()
-      if (n == 0) return Result(0, obs.get) // T3 empty-batch short-circuit
+      // ONE action before the commit: it materializes the cache, fires
+      // the observe() accumulators (quality comes for free with it), and
+      // returns both the empty-batch guard's row count and the batch key.
       // Content-derived batch key: a crash between the appends and the
       // state write re-runs the same logical batch (same fresh-id set ->
       // same key), and appendOnce makes the re-appends no-ops on a
@@ -55,14 +59,13 @@ object Pipeline {
       // 60-bit md5-derived id-set digest (order-independent sum): crc32
       // sums collide at birthday-of-2^16 rates, enough to silently no-op
       // a real batch via appendOnce; md5 prefix sums push that to ~2^30
-      val sig = fresh.agg(
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.expr(
-            "cast(conv(substr(md5(cast(id as binary)), 1, 15), 16, 10) as decimal(20,0))")))
-        .head().getDecimal(0)
-      val batchKey = s"ingest-$n-$sig"
+      val head = fresh.agg(count(lit(1)), sum(expr(
+          "cast(conv(substr(md5(cast(id as binary)), 1, 15), 16, 10) as decimal(20,0))")))
+        .head()
+      val n = head.getLong(0)
+      if (n == 0) return Result(0, obs.get) // T3 empty-batch short-circuit
+      val batchKey = s"ingest-$n-${head.getDecimal(1)}"
       val curated = Curate(fresh)
-      val analyzed = Analyze.withAnalysis(spark, curated, analyzer)
       // ONE cross-table commit for the whole batch: on the versioned
       // sink the four tables land all-or-none (a crash between table
       // writes can no longer leave raw ahead of curated); on the plain
@@ -71,7 +74,8 @@ object Pipeline {
       sink.multiAppendOnce(Seq(
         fresh -> "raw",
         curated -> "curated",
-        Analyze.explodeActors(analyzed) -> "actors",
+        Analyze.explodeActors(Analyze.analyses(spark, curated, analyzer))
+          -> "actors",
         fresh.select("id") -> "state"), batchKey)
       Result(n, obs.get)
     } finally fresh.unpersist()

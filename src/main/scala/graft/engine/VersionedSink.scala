@@ -6,6 +6,8 @@ import java.util.{Base64, UUID}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.graft.StatsWrite
 import org.apache.spark.sql.types.StructType
 
@@ -710,6 +712,40 @@ final class VersionedParquetSink(basePath: String,
     }
   }
 
+  /** Size-targeted partition count for an append: Catalyst's planned
+    * size over the target bin, at least 1. */
+  private def sizedPartitions(df: DataFrame,
+      props: Map[String, String]): Int = {
+    val target = props.get("graft.optimizeWrite.targetBytes")
+      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+      .getOrElse(128L * 1024 * 1024)
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    ((est + target - 1) / target).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** The frame's partition count, read without running it.
+    * `df.rdd.getNumPartitions` would run every exchange below an
+    * adaptive plan to learn the final count, and the write would then
+    * run them all again. An adaptive plan reports the count its initial
+    * plan declares (before AQE coalesces); a plan without an exchange
+    * builds its RDD without a job. None when the plan declares none. */
+  private def plannedPartitions(df: DataFrame): Option[Int] =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        Some(a.initialPlan.outputPartitioning.numPartitions).filter(_ > 0)
+      case p if !p.exists(_.isInstanceOf[Exchange]) =>
+        Some(df.rdd.getNumPartitions)
+      case p => Some(p.outputPartitioning.numPartitions).filter(_ > 0)
+    }
+
+  /** Clustering columns of a clustered table (Delta liquid-clustering
+    * UX: declare once in TBLPROPERTIES, every write and maintenance
+    * pass keeps the layout): `graft.cluster.columns` = comma list of
+    * numeric/date/timestamp columns. */
+  private def clusterColumns(props: Map[String, String]): Seq[String] =
+    props.get("graft.cluster.columns").toSeq
+      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+
   /** Optimized writes (Delta's `autoOptimize.optimizeWrite` parity):
     * with `TBLPROPERTIES('graft.optimizeWrite'='true')`, an append's
     * partitions COALESCE down so each output file targets
@@ -722,43 +758,23 @@ final class VersionedParquetSink(basePath: String,
     * genuinely large append keeps its parallelism. The size estimate is
     * Catalyst's in-memory `sizeInBytes`, so on-disk parquet files land
     * a few× smaller than the target — same ballpark Delta's binning
-    * hits. Complements [[maybeAutoCompact]]: this shapes files at write
-    * time, that folds history after. */
-  /** Size-targeted partition count for an append: Catalyst's planned
-    * size over the target bin, clamped to [1, incoming partitions] so a
-    * write never LOSES parallelism it arrived with. */
-  private def sizedPartitions(df: DataFrame,
-      props: Map[String, String]): Int = {
-    val target = props.get("graft.optimizeWrite.targetBytes")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(128L * 1024 * 1024)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val want = ((est + target - 1) / target).toLong
-    val cur = df.rdd.getNumPartitions
-    math.max(1L, math.min(want, cur.toLong)).toInt
-  }
-
-  /** Clustering columns of a clustered table (Delta liquid-clustering
-    * UX: declare once in TBLPROPERTIES, every write and maintenance
-    * pass keeps the layout): `graft.cluster.columns` = comma list of
-    * numeric/date/timestamp columns. */
-  private def clusterColumns(props: Map[String, String]): Seq[String] =
-    props.get("graft.cluster.columns").toSeq
-      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-
+    * hits. Both partition counts come from the plan, so the shaping
+    * itself runs no job over the frame. Complements
+    * [[maybeAutoCompact]]: this shapes files at write time, that folds
+    * history after. */
   private def optimizeWrite(df: DataFrame,
       props: Map[String, String]): DataFrame = {
     val cluster = clusterColumns(props)
     if (cluster.nonEmpty) {
       // clustered tables imply optimized writes (Delta's coupling): the
       // batch Morton-clusters on the declared columns into size-targeted
-      // files, so every append's per-file stats are tight on all of them
-      ZOrder.zOrderedN(df, cluster, sizedPartitions(df, props))
+      // files, so every append's per-file stats are tight on all of them;
+      // the range shuffle never fans out wider than the incoming plan
+      val want = sizedPartitions(df, props)
+      ZOrder.zOrderedN(df, cluster, plannedPartitions(df).fold(want)(want.min))
     } else if (!props.get("graft.optimizeWrite").exists(_.toBoolean)) df
-    else {
-      val n = sizedPartitions(df, props)
-      if (n >= df.rdd.getNumPartitions) df else df.coalesce(n)
-    }
+    // coalesce never raises the partition count: no clamp needed
+    else df.coalesce(sizedPartitions(df, props))
   }
 
   /** Everything [[doAppend]] does BEFORE the commit claim: governance

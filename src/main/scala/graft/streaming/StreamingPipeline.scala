@@ -19,8 +19,15 @@ import graft.engine.{Analyze, Curate, Ingest, Schemas, TableSink}
   *    beyond the watermark age out instead of accumulating (the fix for
   *    the reference's unbounded state, SURVEY.md §7.4 risk 4);
   *  - the three-table fan-out (raw/curated/actors, collector.py:234-240)
-  *    is one `foreachBatch`, so each micro-batch is read once, not three
-  *    times — and the sink writes stay idempotent per batch.
+  *    is one `foreachBatch` over the cached micro-batch, so each
+  *    micro-batch is computed once, not three times, and the sink
+  *    writes stay idempotent per batch. Every write reads the cache.
+  *    The batch is a `LogicalRDD` over the epoch's incremental plan, so
+  *    any action that misses the cache re-runs the stateful dedup. The
+  *    actor rows therefore come from [[Analyze.analyses]]: the self-join
+  *    in [[Analyze.withAnalysis]] planned one side of the batch outside
+  *    the cache, and the actors write ran the dedup a second time, so
+  *    the state store counted every id twice.
   *
   * Exactly-once: checkpointed offsets + state; on restart, a re-run
   * micro-batch re-appends only rows the dedup state has not seen.
@@ -84,9 +91,11 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val cached = batch.cache()
-          try {
+        // every action on the batch itself re-runs the stateful dedup,
+        // so even the empty-batch check reads the cache
+        val cached = batch.cache()
+        try {
+          if (!cached.isEmpty) {
             // ONE cross-table transaction per micro-batch, keyed by
             // batchId: on a VersionedParquetSink the three tables land
             // all-or-none (a crash can no longer leave raw ahead of
@@ -95,7 +104,6 @@ object StreamingPipeline {
             // fan-out. On the plain parquet sink this degrades to
             // per-table at-least-once, the reference's own contract.
             val curated = Curate(cached)
-            val analyzed = Analyze.withAnalysis(cached.sparkSession, curated, analyzer)
             // round-9 members ride the SAME transaction: corpus-stats
             // monitor rows + reservoir candidates land with (or not at
             // all alongside) the corpus tables they describe
@@ -121,7 +129,8 @@ object StreamingPipeline {
             sink.multiAppendOnce(Seq(
               cached -> "raw",
               curated -> "curated",
-              Analyze.explodeActors(analyzed) -> "actors") ++ extras,
+              Analyze.explodeActors(Analyze.analyses(
+                cached.sparkSession, curated, analyzer)) -> "actors") ++ extras,
               s"batch-$batchId")
             // periodic OPTIMIZE: only meaningful on the versioned sink
             // (the plain parquet sink appends files, not directories);
@@ -145,9 +154,8 @@ object StreamingPipeline {
                 }
               case _ => ()
             }
-            ()
-          } finally cached.unpersist()
-        }
+          }
+        } finally cached.unpersist()
       }
       .start()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Analyze
 import graft.engine.Analyze.{Actor, Analysis}
@@ -60,5 +60,26 @@ class AnalyzeSpec extends AnyFunSuite {
     val byId = out.collect().map(r => r.getString(r.fieldIndex("id")) ->
       (r.get(r.fieldIndex("analysis")) != null)).toMap
     assert(byId("id1") && !byId("id2"))
+  }
+
+  test("explodeActors over analyses equals explodeActors over withAnalysis") {
+    val news = Seq(
+      ("a1", null, "President Alice Smith resigns"), // null title: failed
+      ("a2", "", "Mayor Bob Kane appoints Carol Day"), // empty title
+      ("a3", "no capitals here", "none at all"), // no names: failed
+      ("a4", "Acme Corp launches Widget Pro", "Alice Smith and Bob Lee"),
+      ("a5", "Parliament protest grows", null),
+      ("a6", "Housing rent crisis", "warns Dana Reed, Eve Ray, Finn Holt"))
+      .toDF("id", "title", "description")
+    def rows(df: DataFrame) =
+      Analyze.explodeActors(df).collect().map(r =>
+        (r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3)))
+        .toSeq.sorted
+    val direct = rows(Analyze.analyses(spark, news))
+    assert(direct == rows(Analyze.withAnalysis(spark, news)))
+    // several actors per row, and only rows with a title and a name
+    assert(direct.map(_._1).distinct == Seq("a4", "a5", "a6"))
+    assert(direct.count(_._1 == "a6") >= 4)
+    assert(direct.filter(_._4).map(_._1) == Seq("a4", "a5", "a6"))
   }
 }

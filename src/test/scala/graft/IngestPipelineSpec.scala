@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Ingest, ParquetTableSink, Pipeline}
+import graft.engine.{Ingest, ParquetTableSink, Pipeline, VersionedParquetSink}
 
 class IngestPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -97,5 +100,70 @@ class IngestPipelineSpec extends AnyFunSuite {
     val r3 = Pipeline.run(spark, feeds, sink)
     assert(r3.newArticles == 1)
     assert(sink.read(spark, "raw").count() == 3)
+  }
+
+  /** Jobs started while `body` runs, and the SQL executions they ran
+    * under, counted once the listener bus has delivered every event. */
+  private def jobsDuring[A](body: => A): (A, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(execs.add)
+      }
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val out = try body finally {
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (out, jobs.get, execs.size)
+  }
+
+  test("a poll computes its batch once: one action, then the commit's writes") {
+    val store = TestSpark.tmpDir("jobstore")
+    val sink = new VersionedParquetSink(store)
+    val first = TestSpark.tmpDir("jobfeed1")
+    writeFeed(first, "a.json", Seq(
+      entry("j1", "President Alice Smith resigns", "Politics"),
+      entry("j2", "Acme Corp launches Widget Pro", "Technology")))
+    assert(Pipeline.run(spark, first, sink).newArticles == 2)
+    // second poll on a new snapshot, with all four tables in place: one
+    // SQL execution caches the batch and returns its count and key (its
+    // adaptive stages run as 5 jobs), then the four staged writes read
+    // the cache, one job each; no second action over the batch and no
+    // broadcast for a self-join
+    val second = TestSpark.tmpDir("jobfeed2")
+    writeFeed(second, "b.json", Seq(
+      entry("j2", "Acme Corp launches Widget Pro", "Technology"),
+      entry("j3", "Parliament protest grows, says Bob Lee", "Politics"),
+      entry("j4", "Housing rent crisis, warns Dana Reed", "Housing")))
+    val (r, jobs, execs) = jobsDuring(Pipeline.run(spark, second, sink))
+    assert(r.newArticles == 2)
+    assert(execs == 5, s"a second poll ran $execs SQL executions")
+    assert(jobs == 9, s"a second poll started $jobs jobs")
+    assert(sink.read(spark, "raw").count() == 4)
+  }
+
+  test("batch key pin: the raw commit's key is the id-set digest") {
+    val feeds = TestSpark.tmpDir("keyfeed")
+    val sink = new VersionedParquetSink(TestSpark.tmpDir("keystore"))
+    writeFeed(feeds, "k.json", Seq(
+      entry("k1", "President Alice Smith resigns", "Politics"),
+      entry("k2", "Acme Corp launches Widget Pro", "Technology"),
+      entry("k3", "Parliament protest grows, says Bob Lee", "Politics"),
+      // the same guid in the same poll counts once
+      entry("k3", "Parliament protest grows, says Bob Lee", "Politics")))
+    assert(Pipeline.run(spark, feeds, sink).newArticles == 3)
+    // the literal is the key earlier releases wrote for this batch: a
+    // batch replayed across an upgrade must still be a keyed no-op
+    val keys = sink.history(spark, "raw").select("commitKey")
+      .collect().map(_.getString(0)).toSeq
+    assert(keys == Seq("ingest-3-2374610963161246156"), s"raw commit keys: $keys")
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.VersionedParquetSink
@@ -56,6 +60,34 @@ class OptimizeWriteSpec extends AnyFunSuite {
         .repartition(8), "t")
     assert(filesOf(base, "t").size == 9,
       s"expected clamp at 8 incoming partitions: ${filesOf(base, "t").size}")
+    assert(sink.read(spark, "t").count() == 65L)
+  }
+
+  test("shaping an append does not run the frame's shuffle a second time") {
+    val base = TestSpark.tmpDir("ow4")
+    val sink = new VersionedParquetSink(base)
+    sink.append(Seq((0L, "seed")).toDF("id", "v"), "t")
+    sink.setProperties(spark, "t", Map("graft.optimizeWrite" -> "true"))
+    val sc = spark.sparkContext
+    val mapStages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          mapStages.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try sink.append(
+      (1 to 64).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+        .repartition(8), "t")
+    finally {
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the write's own run of the repartition is the only one: learning
+    // the partition count must not execute the exchange first
+    assert(mapStages.get == 1, s"shuffle-map stages run: ${mapStages.get}")
+    assert(filesOf(base, "t").size == 2)
     assert(sink.read(spark, "t").count() == 65L)
   }
 }

@@ -99,4 +99,27 @@ class StreamingPipelineSpec extends AnyFunSuite {
       compactEvery = Some(1)).awaitTermination()
     assert(sink.read(spark, "raw").count() == 2)
   }
+
+  test("each micro-batch runs the stateful dedup once") {
+    val feeds = TestSpark.tmpDir("ofeeds")
+    val ckpt = TestSpark.tmpDir("ockpt")
+    val sink = new graft.engine.VersionedParquetSink(TestSpark.tmpDir("ostore"))
+    // state rows after a batch = distinct ids streamed so far; a second
+    // run of the batch plan inside foreachBatch (a write that misses the
+    // batch's cache) re-runs the dedup and counts each row again
+    def stateRowsAfter(file: String, ids: Seq[String]): Long = {
+      Files.write(Paths.get(feeds, file),
+        ids.map(i => entry(i, s"President Alice Smith meets $i"))
+          .mkString("\n").getBytes)
+      val q = StreamingPipeline.stream(spark, feeds, sink, ckpt)
+      q.awaitTermination()
+      val withData = q.recentProgress.filter(_.numInputRows > 0)
+      assert(withData.length == 1)
+      withData.head.stateOperators(0).numRowsTotal
+    }
+    assert(stateRowsAfter("o1.json", Seq("o1", "o2", "o3", "o3")) == 3L)
+    assert(stateRowsAfter("o2.json", Seq("o3", "o4", "o5")) == 5L)
+    assert(sink.read(spark, "raw").count() == 5L)
+    assert(sink.read(spark, "actors").select("news_id").distinct().count() == 5L)
+  }
 }
