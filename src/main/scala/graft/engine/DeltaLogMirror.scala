@@ -8,8 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
-import graft.engine.VersionedParquetSink.{isMergeOnRead, liveEntries, Commit}
-
 /** Write-side mirror of the sink's commit log as a `_delta_log/`
   * directory per the PUBLIC Delta Lake transaction protocol
   * (https://github.com/delta-io/delta/blob/master/PROTOCOL.md): one
@@ -65,12 +63,11 @@ object DeltaLogMirror {
 
   private def logName(v: Long): String = f"$v%020d.json"
 
-  /** Mirror every not-yet-mirrored version of `entries` (ascending) into
+  /** Mirror every not-yet-mirrored version of `snap` into
     * `<tableDir>/_delta_log/`. Never throws. */
-  def sync(spark: SparkSession, tableDir: String,
-      entries: Seq[Commit]): Unit =
+  def sync(spark: SparkSession, tableDir: String, snap: Snapshot): Unit =
     try {
-      if (entries.isEmpty) return
+      if (snap.isEmpty) return
       val logDir = new Path(s"$tableDir/_delta_log")
       val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(logDir)
@@ -78,15 +75,12 @@ object DeltaLogMirror {
         .map(_.getPath.getName).filter(_.endsWith(".json")).toSet
       // lag while an unmaterialized DV is live: everything from the first
       // live DV on is inexpressible until a rewrite materializes it
-      val mirrorable = liveEntries(entries).filter(isMergeOnRead)
-        .map(_.version).minOption match {
-        case Some(firstLiveDv) => entries.filter(_.version < firstLiveDv)
-        case None => entries
-      }
-      mirrorable.filterNot(e => existing.contains(logName(e.version)))
-        .sortBy(_.version)
+      val mirrorable = snap.live.filter(_.isMergeOnRead)
+        .map(_.version).minOption.fold(snap)(dv => snap.upTo(dv - 1))
+      mirrorable.entries
+        .filterNot(e => existing.contains(logName(e.version)))
         .foreach { e =>
-          val body = renderVersion(spark, tableDir, entries, e)
+          val body = renderVersion(spark, tableDir, snap, e)
           val tmp = new Path(s"$tableDir/_delta_log/.tmp-${UUID.randomUUID()}")
           val out = fs.create(tmp, true)
           try out.write(body.getBytes(StandardCharsets.UTF_8))
@@ -104,11 +98,11 @@ object DeltaLogMirror {
     }
 
   private def renderVersion(spark: SparkSession, tableDir: String,
-      entries: Seq[Commit], e: Commit): String = {
+      snap: Snapshot, e: Commit): String = {
     val fs = new Path(tableDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val upTo = entries.filter(_.version <= e.version)
-    val prev = upTo.filterNot(_.version == e.version)
+    val upTo = snap.upTo(e.version)
+    val prev = snap.upTo(e.version - 1)
     val ts = e.ts.getOrElse(System.currentTimeMillis())
     val lines = Seq.newBuilder[String]
 
@@ -123,8 +117,8 @@ object DeltaLogMirror {
       mapper.writeValueAsString(ci)
     }
 
-    val prevWriter = (2 +: prev.map(writerVersion)).max
-    val prevReader = (1 +: prev.map(readerVersion)).max
+    val prevWriter = (2 +: prev.entries.map(writerVersion)).max
+    val prevReader = (1 +: prev.entries.map(readerVersion)).max
     if (e.version == 0L || writerVersion(e) > prevWriter ||
         readerVersion(e) > prevReader) {
       val p = mapper.createObjectNode()
@@ -147,15 +141,14 @@ object DeltaLogMirror {
     // spells it
     def normSchema(ddl: String): String =
       mirroredSchemaJson(ddl, e.mapping, e.generated, e.props)
-    val prevDdl = prev.lastOption.flatMap(_.schemaDdl)
-    val consChanged = e.constraints != prev.lastOption.flatMap(_.constraints)
-    val mapChanged = e.mapping != prev.lastOption.flatMap(_.mapping)
-    val genChanged = e.generated != prev.lastOption.flatMap(_.generated)
+    val prevDdl = prev.schemaDdl
+    val consChanged = e.constraints != prev.constraints
+    val mapChanged = e.mapping != prev.mapping
+    val genChanged = e.generated != prev.generated
     // identity props re-emit metaData whenever a declaration appears or
     // a high water advances — Delta updates the field metadata per
     // identity transaction the same way
-    val identChanged =
-      identityProps(e.props) != identityProps(prev.lastOption.flatMap(_.props))
+    val identChanged = identityProps(e.props) != identityProps(prev.props)
     if (e.version == 0L || consChanged || mapChanged || genChanged ||
         identChanged ||
         (e.schemaDdl.isDefined &&
@@ -163,7 +156,7 @@ object DeltaLogMirror {
       e.schemaDdl.foreach { ddl =>
         val m = mapper.createObjectNode()
         m.set[com.fasterxml.jackson.databind.node.ObjectNode]("metaData",
-          metaDataNode(tableDir, e, ddl, upTo.head.ts.getOrElse(ts)))
+          metaDataNode(tableDir, e, ddl, upTo.entries.head.ts.getOrElse(ts)))
         lines += mapper.writeValueAsString(m)
       }
     }
@@ -175,8 +168,8 @@ object DeltaLogMirror {
     if (e.compacts.isDefined || e.replaces.nonEmpty) {
       // DV dirs hold mask positions, never mirrored as data — they must
       // not appear as removes (they were never adds)
-      val before = liveEntries(prev).filterNot(isMergeOnRead).map(_.dir).toSet
-      val after = liveEntries(upTo).filterNot(isMergeOnRead).map(_.dir).toSet
+      val before = prev.live.filterNot(_.isMergeOnRead).map(_.dir).toSet
+      val after = upTo.live.filterNot(_.isMergeOnRead).map(_.dir).toSet
       (before -- after).toSeq.sorted.foreach { dir =>
         parquetFiles(fs, VersionedParquetSink.resolveDir(tableDir, dir))
             .foreach { st =>
@@ -195,7 +188,7 @@ object DeltaLogMirror {
     // backfilled placeholder once a rewrite materialized it) contributes
     // NO add: its dir is a positional mask, not table data, and its
     // effect lives in the materializing rewrite's remove+add.
-    if (!isMergeOnRead(e)) {
+    if (!e.isMergeOnRead) {
       val statsByFile: Map[String, String] = e.stats.map { json =>
         import scala.jdk.CollectionConverters._
         mapper.readTree(json).properties().asScala
@@ -315,15 +308,15 @@ object DeltaLogMirror {
     * JSON. Idempotent and race-benign like the JSON mirror: an existing
     * checkpoint file is never rewritten. */
   private def maybeCheckpoint(spark: SparkSession, tableDir: String,
-      mirrorable: Seq[Commit]): Unit = {
-    val latest = mirrorable.map(_.version).maxOption.getOrElse(return)
+      mirrorable: Snapshot): Unit = {
+    val latest = mirrorable.version
     val due = latest - latest % CheckpointInterval
     if (due <= 0) return
     val logDir = new Path(s"$tableDir/_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ckPath = new Path(logDir, f"$due%020d.checkpoint.parquet")
     if (fs.exists(ckPath)) return
-    val upTo = mirrorable.filter(_.version <= due)
+    val upTo = mirrorable.upTo(due)
 
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -361,13 +354,13 @@ object DeltaLogMirror {
       Row(txn, add, remove, meta, proto)
 
     val rows = Seq.newBuilder[Row]
-    rows += row(proto = Row((1 +: upTo.map(readerVersion)).max,
-      (2 +: upTo.map(writerVersion)).max))
+    rows += row(proto = Row((1 +: upTo.entries.map(readerVersion)).max,
+      (2 +: upTo.entries.map(writerVersion)).max))
 
     // metaData: the state at `due` = latest schema DDL with the latest
     // commit's constraint/mapping/generated configuration
-    val last = upTo.last
-    val lastDdl = upTo.reverse.flatMap(_.schemaDdl).headOption
+    val last = upTo.entries.last
+    val lastDdl = upTo.entries.reverse.flatMap(_.schemaDdl).headOption
     lastDdl.foreach { ddl =>
       val confMap = Seq.newBuilder[(String, String)]
       VersionedParquetSink.Constraints.parse(last.constraints).foreach {
@@ -383,11 +376,11 @@ object DeltaLogMirror {
       rows += row(meta = Row(tableId(tableDir), Row("parquet", Map.empty),
         mirroredSchemaJson(ddl, last.mapping, last.generated, last.props),
         Seq.empty[String], confMap.result().toMap,
-        upTo.head.ts.getOrElse(last.ts.getOrElse(0L))))
+        upTo.entries.head.ts.getOrElse(last.ts.getOrElse(0L))))
     }
 
-    val dataEntries = upTo.filterNot(isMergeOnRead)
-    val liveNow = liveEntries(upTo).filterNot(isMergeOnRead)
+    val dataEntries = upTo.entries.filterNot(_.isMergeOnRead)
+    val liveNow = upTo.live.filterNot(_.isMergeOnRead)
     liveNow.foreach { e =>
       val statsByFile: Map[String, String] = e.stats.map { json =>
         import scala.jdk.CollectionConverters._
@@ -406,9 +399,9 @@ object DeltaLogMirror {
       .filterNot(liveDirs).distinct.flatMap { dir =>
         // deletionTimestamp = the first rewrite (full compaction or
         // selective fold) that dropped it
-        upTo.find(c => (c.compacts.exists(_ >= 0) || c.replaces.nonEmpty) &&
-          !liveEntries(upTo.filter(_.version <= c.version))
-            .exists(_.dir == dir))
+        upTo.entries.find(c =>
+          (c.compacts.exists(_ >= 0) || c.replaces.nonEmpty) &&
+            !upTo.upTo(c.version).live.exists(_.dir == dir))
           .flatMap(_.ts).map(dir -> _)
       }.toMap
     dataEntries.map(_.dir).filterNot(liveDirs).distinct.foreach { dir =>
@@ -449,10 +442,9 @@ object DeltaLogMirror {
       if (!fs.exists(lcPath)) -1L
       else try {
         val in = fs.open(lcPath)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(body)
-          .map(_.group(1).toLong).getOrElse(-1L)
+        try Option(mapper.readTree(in).get("version"))
+          .filter(_.isIntegralNumber).fold(-1L)(_.asLong)
+        finally in.close()
       } catch { case scala.util.control.NonFatal(_) => -1L }
     if (due <= prior) return
     val lc = s"""{"version":$due,"size":${built.length}}"""

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
-import graft.engine.VersionedParquetSink.{ColumnMapping, Commit}
+import graft.engine.VersionedParquetSink.ColumnMapping
 
 /** The `spark.read.format("graft")` integration, assembled the way
   * Delta integrates its own log with Spark's scan planning: a custom
@@ -43,14 +43,10 @@ object GraftRelation {
     * pushed-down parquet filters (masked files only) and columnar
     * batches are disabled while a mask is live (row positions must be
     * counted in file order, so masked files read every row group). */
-  def apply(spark: SparkSession, tableDir: String, entries: Seq[Commit],
-      table: String): BaseRelation = {
-    require(entries.nonEmpty, s"no committed versions for $table")
-    val live = VersionedParquetSink.liveEntries(entries)
-    forDirs(spark, tableDir, entries,
-      live.filterNot(VersionedParquetSink.isDv), table,
-      masks(spark, tableDir, live))
-  }
+  def apply(spark: SparkSession, tableDir: String,
+      snap: Snapshot): BaseRelation =
+    forDirs(spark, tableDir, snap, snap.live.filterNot(_.isDv),
+      masks(spark, tableDir, snap.live))
 
   /** The masks of every merge-on-read commit in `live`, or None when no
     * live mask hides a row. One distributed pass over the mask parquet
@@ -62,9 +58,8 @@ object GraftRelation {
     val fs = new Path(tableDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // an update that matched no row leaves no `_dv/` dir
-    val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
-      .map(e => GraftFileIndex.Dir(e.version,
-        VersionedParquetSink.maskDir(e), None))
+    val dvs = live.filter(_.isMergeOnRead)
+      .map(e => GraftFileIndex.Dir(e.version, e.maskDir, None))
       .filter(d => fs.exists(
         new Path(VersionedParquetSink.resolveDir(tableDir, d.dir))))
     if (dvs.isEmpty) None
@@ -85,23 +80,17 @@ object GraftRelation {
   }
 
   /** Relation over an explicit scan set (schema/mapping still from the
-    * full `entries` snapshot): the streaming source's per-batch form,
-    * the change feed's append range and the selective fold's input. */
-  def forDirs(spark: SparkSession, tableDir: String, entries: Seq[Commit],
-      scan: Seq[Commit], table: String,
-      masks: Option[GraftMasks] = None): BaseRelation = {
-    require(entries.nonEmpty, s"no committed versions for $table")
-    val logical = StructType((entries.last.schemaDdl match {
-      case Some(ddl) => StructType.fromDDL(ddl)
-      case None => footerSchema(spark, tableDir, entries, table)
-    }).fields.map(_.copy(nullable = true)))
-    val mapping = ColumnMapping.parse(entries.lastOption.flatMap(_.mapping))
+    * whole `snap`): the streaming source's per-batch form, the change
+    * feed's append range and the selective fold's input. */
+  def forDirs(spark: SparkSession, tableDir: String, snap: Snapshot,
+      scan: Seq[Commit], masks: Option[GraftMasks] = None): BaseRelation = {
+    val logical = logicalSchema(spark, tableDir, snap)
+    val mapping = ColumnMapping.parse(snap.mapping)
     // Bloom-index config for equality file skipping: configured logical
     // columns resolved to their stable physical names (sidecars key on
     // physical names, so pre-rename dirs keep pruning after a rename)
     val bloom: Map[String, org.apache.spark.sql.types.DataType] =
-      BloomIndex.configured(VersionedParquetSink.Constraints.parse(
-          entries.lastOption.flatMap(_.props)).toMap)
+      BloomIndex.configured(snap.properties)
         .flatMap(lc => logical.fields.find(_.name == lc))
         .filter(f => BloomIndex.supported(f.dataType))
         .map(f => ColumnMapping.physicalName(mapping, f.name) -> f.dataType)
@@ -136,18 +125,23 @@ object GraftRelation {
         mapping.map { case (l, e) => l -> e.physical }.toMap, masks),
       options = Map.empty)(spark)
 
-  /** Markers written before commits carried their schema: read it from
-    * the footers of the snapshot's live data files. */
-  private def footerSchema(spark: SparkSession, tableDir: String,
-      entries: Seq[Commit], table: String): StructType = {
-    val files = new GraftFileIndex(spark, tableDir,
-      VersionedParquetSink.liveEntries(entries)
-        .filterNot(VersionedParquetSink.isDv)
-        .map(e => GraftFileIndex.Dir(e.version, e.dir, None)),
-      StructType(Nil), Nil).allFiles
-    new ParquetFileFormat().inferSchema(spark, Map.empty, files).getOrElse(
-      throw new IllegalStateException(
-        s"table '$table' has no schema in its log and no data files"))
+  /** The schema a read of `snap` exposes: the logical schema its latest
+    * commit carries, nullable as file sources read. Markers written
+    * before commits carried their schema fall back to the footers of the
+    * snapshot's live data files. */
+  def logicalSchema(spark: SparkSession, tableDir: String,
+      snap: Snapshot): StructType = {
+    require(snap.nonEmpty, s"no committed versions for ${snap.table}")
+    val declared = snap.schemaDdl.map(StructType.fromDDL).getOrElse {
+      val files = new GraftFileIndex(spark, tableDir,
+        snap.live.filterNot(_.isDv)
+          .map(e => GraftFileIndex.Dir(e.version, e.dir, None)),
+        StructType(Nil), Nil).allFiles
+      new ParquetFileFormat().inferSchema(spark, Map.empty, files).getOrElse(
+        throw new IllegalStateException(
+          s"table '${snap.table}' has no schema in its log and no data files"))
+    }
+    StructType(declared.fields.map(_.copy(nullable = true)))
   }
 }
 

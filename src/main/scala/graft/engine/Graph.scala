@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   *    (which only shrinks toward one-per-vertex), and convergence is
   *    O(log^2 n) rounds with every round a groupBy-on-vertex shuffle.
   *    This is the variant that survives edge-heavy graphs at 100 TB.
-  *  - `iterativeMinLabel`: distributed min-label propagation with pointer
-  *    jumping — kept as an alternative; its per-round state is the full
-  *    vertex label set.
   */
 object Graph {
 
@@ -81,7 +78,7 @@ object Graph {
     * centered on component minima. Labels then read straight off the
     * final edges. Every step is a groupBy/join keyed on vertex — the same
     * shuffle topology at any scale; per-round localCheckpoint truncates
-    * the otherwise-doubling plan exactly as in [[iterativeMinLabel]].
+    * the otherwise-doubling plan.
     *
     * Non-convergence within `maxIter` FAILS loudly — partial stars would
     * silently split duplicate clusters. */
@@ -136,63 +133,5 @@ object Graph {
     edges.select(col("b").as("vertex"), col("a").as("component"))
       .union(edges.select(col("a").as("vertex"), col("a").as("component"))
         .distinct())
-  }
-
-  /** Distributed min-label propagation with pointer jumping until
-    * fixpoint. Each round (a) pulls the min label across edges (one hop)
-    * and (b) shortcuts label -> label-of-label, doubling the effective
-    * propagation distance — O(log n) rounds even for chain-shaped
-    * components, where plain propagation needs O(diameter). A graph that
-    * hasn't converged within maxIter still FAILS loudly — returning
-    * partial labels would silently split duplicate clusters. */
-  private[graft] def iterativeMinLabel(edges0: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    val src = edges0.columns(0)
-    val dst = edges0.columns(1)
-    val edges = edges0.select(col(src).as("s"), col(dst).as("t"))
-      .union(edges0.select(col(dst).as("s"), col(src).as("t")))
-      .cache()
-    var labels = edges.select(col("s").as("vertex")).distinct()
-      .withColumn("component", col("vertex")).cache()
-    var changed = 1L
-    var iter = 0
-    try {
-      while (changed > 0 && iter < maxIter) {
-        // (a) one-hop neighbor min
-        val prop = edges.join(labels, edges("s") === labels("vertex"))
-          .groupBy(col("t").as("vertex")).agg(min("component").as("nc"))
-        val hop = labels.join(prop, Seq("vertex"), "left")
-          .select(col("vertex"),
-            least(col("component"), coalesce(col("nc"), col("component")))
-              .as("component"))
-        // (b) pointer jump: component := component(component). The jump
-        // references `hop` twice, so the logical plan would DOUBLE every
-        // round; localCheckpoint (not cache — caching keeps the plan)
-        // truncates lineage so round cost stays constant.
-        val hopCk = hop.localCheckpoint(true)
-        val parents = hopCk.select(col("vertex").as("p_vertex"),
-          col("component").as("p_component"))
-        val next = hopCk.join(parents, hopCk("component") === col("p_vertex"), "left")
-          .select(hopCk("vertex"),
-            least(hopCk("component"), coalesce(col("p_component"), hopCk("component")))
-              .as("component"))
-          .localCheckpoint(true)
-        changed = next.join(
-          labels.withColumnRenamed("component", "old"), "vertex")
-          .filter(col("component") =!= col("old")).count()
-        labels.unpersist() // previous round's blocks are dead now
-        labels = next
-        iter += 1
-      }
-      if (changed > 0) throw new IllegalStateException(
-        s"connected components did not converge in $maxIter rounds — " +
-          "pathological input; raise maxIter")
-      // pin the result before dropping the edge cache it derives from
-      val result = labels.localCheckpoint(true)
-      result
-    } finally {
-      edges.unpersist()
-      labels.unpersist()
-    }
   }
 }

@@ -18,29 +18,29 @@ import org.apache.spark.sql.types.StructType
   * Layout per table:
   * {{{
   *   <base>/<table>/d-<uuid>/part-*.parquet     unique dir per append attempt
-  *   <base>/<table>/_commits/<n>.commit         commit marker — written LAST
-  *   <base>/<table>/_commits/<n>.checkpoint     manifest snapshot <= n
+  *   <base>/<table>/_commits/                   the commit log ([[TableLog]])
   * }}}
   *
   * Protocol (the same shape as Delta's log):
   *  1. write the data files into a UNIQUE directory — concurrent writers
   *     can never clobber each other's files;
-  *  2. claim the next version number by atomically renaming the fully
-  *     written marker into place; the marker names the data directory and
-  *     carries the commit's schema (base64 DDL) and optional idempotency
+  *  2. claim the next version number by publishing the fully written
+  *     marker ([[TableLog.claim]]); the marker ([[Commit]]) names the data
+  *     directory and carries the commit's schema and optional idempotency
   *     key. A loser of the race just re-claims the next number — its data
   *     files are already safely in place.
   *
   * A version is visible iff its marker exists, so readers never see a
   * half-written append, and a writer that dies before committing leaves
-  * only an invisible orphan directory.
+  * only an invisible orphan directory. Each operation reads the log once
+  * into a [[Snapshot]] and derives everything it checks from it.
   *
   * '''Checkpointing''' (the O(commits) fix): every `checkpointInterval`
-  * commits the writer snapshots the whole manifest into `<n>.checkpoint`
-  * (one marker body per line). State reads are then ONE directory listing
-  * + ONE checkpoint read + the markers newer than the checkpoint — the
-  * same recipe as Delta's `_checkpoint` parquet. Markers are never
-  * deleted, so `versions()`/time travel see full history.
+  * commits the writer snapshots the whole log into `<n>.checkpoint` (one
+  * marker body per line), so a log read is ONE directory listing + ONE
+  * checkpoint read + the markers newer than the checkpoint. Markers stay
+  * unless [[vacuumLog]] retires checkpointed ones, and the checkpoint
+  * keeps their bodies, so `versions()`/time travel see full history.
   *
   * '''Schema enforcement''': an append whose schema differs from the
   * table's current schema (names + types, nullability ignored — an
@@ -81,47 +81,13 @@ final class VersionedParquetSink(basePath: String,
   require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
 
   private def tableDir(table: String) = s"$basePath/$table"
-  private def commitDir(table: String) = s"$basePath/$table/_commits"
+  private def log(spark: SparkSession, table: String) =
+    new TableLog(spark, tableDir(table), table)
+  private def readLog(spark: SparkSession, table: String): Snapshot =
+    log(spark, table).snapshot()
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  import VersionedParquetSink.Commit
-
-  private def parseCommit(version: Long, body: String): Commit = {
-    // [^"]* not [^"]+: an empty-string value is a real value (an empty
-    // idempotency key must still dedup)
-    def str(field: String): Option[String] =
-      ("\"" + field + """"\s*:\s*"([^"]*)"""").r.findFirstMatchIn(body).map(_.group(1))
-    def num(field: String): Option[Long] =
-      ("\"" + field + """"\s*:\s*(\d+)""").r.findFirstMatchIn(body).map(_.group(1).toLong)
-    def b64(s: String) = new String(Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
-    val dir = str("dir").filter(_.nonEmpty).getOrElse(
-      throw new IllegalStateException(s"corrupt commit marker v$version: $body"))
-    // keyB64 first; fall back to the round-1 plain "key" field so tables
-    // written by the previous sink version keep their idempotency keys
-    // (without this a replayed pre-upgrade batch would double-append)
-    val key = str("keyB64").map(b64).orElse(str("key"))
-    Commit(version, dir, key, num("compacts"),
-      str("schemaB64").filter(_.nonEmpty).map(b64),
-      str("ts").flatMap(t =>
-        scala.util.Try(java.time.Instant.parse(t).toEpochMilli).toOption),
-      str("op"), str("statsB64").filter(_.nonEmpty).map(b64),
-      str("constraintsB64").filter(_.nonEmpty).map(b64),
-      str("mappingB64").filter(_.nonEmpty).map(b64),
-      str("gensB64").filter(_.nonEmpty).map(b64),
-      str("propsB64").filter(_.nonEmpty).map(b64),
-      // dir-granular selective rewrite (OPTIMIZE WHERE): the BASE NAMES
-      // of the dirs this commit's folded copy supersedes — base names,
-      // not full dirs, so a clone's re-pointed `../src/<dir>` spelling
-      // still matches (same prefix-independence as DV mask paths)
-      str("replacesB64").map(b64).toSeq
-        .flatMap(_.split(',')).filter(_.nonEmpty),
-      // newline-separated: source URIs may contain commas
-      str("copiedB64").map(b64).toSeq
-        .flatMap(_.split('\n')).filter(_.nonEmpty),
-      str("userMetaB64").filter(_.nonEmpty).map(b64), body)
-  }
 
   private def readSmallFile(spark: SparkSession, p: String): String = {
     val in = fs(spark, p).open(new Path(p))
@@ -129,60 +95,16 @@ final class VersionedParquetSink(basePath: String,
     finally in.close()
   }
 
-  /** Full manifest, ascending by version: ONE listing, ONE checkpoint
-    * read, plus only the markers newer than the newest checkpoint.
-    * Retries when a concurrent [[vacuumLog]] deletes a file between our
-    * listing and our read — retirement implies a NEWER checkpoint now
-    * covers it, so a fresh listing always converges. */
-  private def manifest(spark: SparkSession, table: String): Seq[Commit] = {
-    var attempt = 0
-    while (true) {
-      try return manifestOnce(spark, table)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          attempt += 1
-          if (attempt >= 8) throw e
-      }
-    }
-    Seq.empty // unreachable
-  }
-
-  private def manifestOnce(spark: SparkSession, table: String): Seq[Commit] = {
-    val dir = new Path(commitDir(table))
-    val f = fs(spark, commitDir(table))
-    if (!f.exists(dir)) return Seq.empty
-    val names = f.listStatus(dir).toSeq.map(_.getPath.getName)
-    val cpVersion = names.filter(_.endsWith(".checkpoint"))
-      .map(_.stripSuffix(".checkpoint").toLong).sorted.lastOption
-    val fromCp: Seq[Commit] = cpVersion match {
-      case None => Seq.empty
-      case Some(cp) =>
-        readSmallFile(spark, s"${commitDir(table)}/$cp.checkpoint")
-          .linesIterator.filter(_.nonEmpty).map { line =>
-            val v = """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(line)
-              .getOrElse(throw new IllegalStateException(
-                s"corrupt checkpoint line in $table cp$cp: $line"))
-              .group(1).toLong
-            parseCommit(v, line)
-          }.toSeq
-    }
-    val tail = names.filter(_.endsWith(".commit"))
-      .map(_.stripSuffix(".commit").toLong)
-      .filter(v => cpVersion.forall(v > _))
-      .map(v => parseCommit(v, readSmallFile(spark, s"${commitDir(table)}/$v.commit")))
-    (fromCp ++ tail).sortBy(_.version)
-  }
-
   /** Committed version numbers, ascending — full history through the
-    * manifest (checkpoint lines + newer markers), so it stays complete
-    * even after [[vacuumLog]] retires checkpointed marker files. */
+    * log (checkpoint lines + newer markers), so it stays complete even
+    * after [[vacuumLog]] retires checkpointed marker files. */
   def versions(spark: SparkSession, table: String): Seq[Long] =
-    manifest(spark, table).map(_.version)
+    readLog(spark, table).entries.map(_.version)
 
   /** Log retention (Delta's `delta.logRetentionDuration` shape):
     * deletes commit-marker files already SNAPSHOTTED by a checkpoint
     * (and superseded older checkpoints) once they age past
-    * `olderThanMs`. Safe by construction: [[manifest]] reads every
+    * `olderThanMs`. Safe by construction: a log read takes every
     * version at or below the newest checkpoint FROM the checkpoint
     * (never from its marker file), and checkpoint lines carry the FULL
     * marker bodies — so time travel, keyed replay dedup, history, and
@@ -191,10 +113,12 @@ final class VersionedParquetSink(basePath: String,
     * ever). Opt-in via the `graft.logRetentionDuration` TBLPROPERTIES
     * (honored by [[vacuum]]) or direct call. Returns files deleted. */
   def vacuumLog(spark: SparkSession, table: String,
+      olderThanMs: Long): Int =
+    retireLog(spark, readLog(spark, table), olderThanMs)
+
+  private def retireLog(spark: SparkSession, snap: Snapshot,
       olderThanMs: Long): Int = {
-    val dir = new Path(commitDir(table))
-    val f = fs(spark, commitDir(table))
-    if (!f.exists(dir)) return 0
+    if (snap.isEmpty) return 0
     // ENFORCED deployment rule (was prose in the claim loop until r13):
     // the phantom-claim guard distinguishes "my fresh marker is
     // lag-hidden" from "I re-minted a vacuumed version" by the
@@ -203,37 +127,21 @@ final class VersionedParquetSink(basePath: String,
     // younger than the lag re-opens the silent-commit-loss window the
     // object-store emulation caught in r12. Refuse, loudly, instead of
     // letting a mis-set retention disarm the guard.
-    val lagBound = storeMaxListLagMs(spark, table)
+    val lagBound = storeMaxListLagMs(spark, snap)
     if (olderThanMs < lagBound)
       throw new IllegalArgumentException(
-        s"vacuumLog(olderThanMs=${olderThanMs}ms) on '$table' is below " +
-          s"the declared store LIST lag (graft.store.maxListLag=" +
+        s"vacuumLog(olderThanMs=${olderThanMs}ms) on '${snap.table}' is " +
+          s"below the declared store LIST lag (graft.store.maxListLag=" +
           s"${lagBound}ms): markers must outlive the lag or a stale " +
           "writer can re-mint a vacuumed version as a commit that " +
-          "manifest() permanently filters out (silent loss). Raise " +
+          "log reads permanently filter out (silent loss). Raise " +
           "graft.logRetentionDuration / the olderThanMs argument, or " +
           "lower graft.store.maxListLag if the store is stronger.")
-    val sts = f.listStatus(dir).toSeq
-    val cp = sts.map(_.getPath.getName).filter(_.endsWith(".checkpoint"))
-      .map(_.stripSuffix(".checkpoint").toLong).sorted.lastOption
-    cp.fold(0) { c =>
-      val now = System.currentTimeMillis()
-      val dead = sts.filter { st =>
-        val n = st.getPath.getName
-        val covered =
-          (n.endsWith(".commit") &&
-            n.stripSuffix(".commit").toLong <= c) ||
-          (n.endsWith(".checkpoint") &&
-            n.stripSuffix(".checkpoint").toLong < c)
-        covered && now - st.getModificationTime >= olderThanMs
-      }
-      dead.foreach(st => f.delete(st.getPath, false))
-      dead.size
-    }
+    log(spark, snap.table).retire(olderThanMs)
   }
 
   def latestVersion(spark: SparkSession, table: String): Option[Long] =
-    versions(spark, table).lastOption
+    readLog(spark, table).latest.map(_.version)
 
   override def append(df: DataFrame, table: String): Unit =
     doAppend(df, table, commitKey = None)
@@ -264,25 +172,26 @@ final class VersionedParquetSink(basePath: String,
 
   private def doAppend(df: DataFrame, table: String,
       commitKey: Option[String], allowEvolution: Boolean = false,
-      initialProps: Option[Map[String, String]] = None): Boolean = {
+      initialProps: Option[Map[String, String]] = None,
+      first: Option[Snapshot] = None): Boolean = {
     val spark = df.sparkSession
     var attempt = 0
+    var reuse = first // the caller's read serves the first attempt
     while (true) {
-      val entries = manifest(spark, table)
-      if (commitKey.exists(k => entries.exists(_.key.contains(k))))
-        return false
+      val snap = reuse.getOrElse(readLog(spark, table))
+      reuse = None
+      if (commitKey.flatMap(snap.versionOf).isDefined) return false
       // TBLPROPERTIES from the caller's snapshot: autoCompact/bloom are
       // steady-state behaviors, one commit of enablement lag is fine and
-      // saves re-reading the manifest on every append
-      val props = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.props)
-          .orElse(initialProps.flatMap(p =>
-            VersionedParquetSink.Constraints.render(p.toSeq)))).toMap
-      val idents = identityDecls(props)
+      // saves re-reading the log on every append
+      val props =
+        if (snap.props.isDefined) snap.properties
+        else initialProps.getOrElse(Map.empty[String, String])
+      val idents = VersionedParquetSink.identityDecls(props)
       if (idents.isEmpty) {
-        val staged = stageAppend(df, table, entries, allowEvolution)
-        val committed = claimStaged(spark, staged, commitKey, allowEvolution,
-          snapshot = Some(entries), cleanupOnKeyLoss = true,
+        val staged = stageAppend(df, snap, allowEvolution)
+        val committed = claimStaged(spark, snap, staged, commitKey,
+          allowEvolution, cleanupOnKeyLoss = true,
           initialProps = initialProps).isDefined
         if (committed) {
           maybeAutoCompact(spark, table, props)
@@ -313,7 +222,7 @@ final class VersionedParquetSink(basePath: String,
       val stamped = idents.foldLeft(cleaned) { case (d, (c, (_, step, hw))) =>
         d.withColumn(c, (monotonically_increasing_id() + 1L) * step + hw)
       }
-      val staged = stageAppend(stamped, table, entries, allowEvolution)
+      val staged = stageAppend(stamped, snap, allowEvolution)
       // new high waters from the commit's OWN per-file stats (the
       // extreme in the increment's direction) — no extra pass; an
       // empty batch leaves them unchanged. Stats cover only the first
@@ -324,8 +233,7 @@ final class VersionedParquetSink(basePath: String,
       // high water it could not advance: a stale high water mints
       // duplicate identity values on the next append, violating the
       // GENERATED ALWAYS AS IDENTITY uniqueness contract.
-      val mapping = VersionedParquetSink.ColumnMapping.parse(
-        entries.lastOption.flatMap(_.mapping))
+      val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
       val perFile = FileStats.parse(staged.statsJson)
       val stagedRows = perFile.values.map(_.numRecords).sum
       val newDecls = idents.map { case (c, (s0, step, hw)) =>
@@ -355,15 +263,15 @@ final class VersionedParquetSink(basePath: String,
         s"graft.identity.$c" -> s"$s0:$step:$nhw"
       }
       try {
-        val committed = commitLoop(spark, table, staged.unique, commitKey,
+        val committed = commitLoop(spark, snap, staged.unique, commitKey,
           compacts = None, schemaDdl = staged.schemaDdl,
-          cleanupOnKeyLoss = true, snapshot = Some(entries),
-          enforceSchema = true, allowEvolution = allowEvolution,
+          cleanupOnKeyLoss = true, enforceSchema = true,
+          allowEvolution = allowEvolution,
           // conflict scope: the PROPS payload (which carries the high
           // waters) — another allocation or SET TBLPROPERTIES aborts
           // us; compactions and plain appends sail through, so identity
           // appends stay live under maintenance churn
-          enforcedProps = Some(entries.lastOption.flatMap(_.props)),
+          enforcedProps = Some(snap.props),
           statsJson = Some(staged.statsJson),
           enforcedConstraints = Some(staged.constraints),
           newMapping = staged.newMapping.map(m => Some(m)),
@@ -384,7 +292,7 @@ final class VersionedParquetSink(basePath: String,
             s"identity append to '$table' lost $attempt allocation " +
               "races; giving up")
           Thread.sleep(math.min(50L * attempt, 500L)) // contention backoff
-        // loop: re-read the manifest and re-allocate
+        // loop: re-read the log and re-allocate
       }
     }
     false // unreachable
@@ -401,17 +309,17 @@ final class VersionedParquetSink(basePath: String,
     * rows; run [[reorgPurge]] first), exactly Delta's rule. Driver-side
     * O(live files) listing; returns the file count. */
   def generateManifest(spark: SparkSession, table: String): Int = {
-    val entries = manifest(spark, table)
-    require(entries.nonEmpty, s"no committed versions for $table")
-    val live = liveEntries(entries)
-    val masked = live.filter(VersionedParquetSink.isMergeOnRead)
+    val snap = readLog(spark, table)
+    require(snap.nonEmpty, s"no committed versions for $table")
+    val live = snap.live
+    val masked = live.filter(_.isMergeOnRead)
     require(masked.isEmpty,
       s"cannot generate a symlink manifest for '$table': live deletion-" +
         s"vector commit(s) ${masked.map(e => s"v${e.version}").mkString(", ")}" +
         " — an external reader cannot apply row masks; run REORG APPLY " +
         "(PURGE) first")
     val f = fs(spark, tableDir(table))
-    val files = live.filterNot(VersionedParquetSink.isDv).flatMap { e =>
+    val files = live.filterNot(_.isDv).flatMap { e =>
       val p = new Path(
         VersionedParquetSink.resolveDir(tableDir(table), e.dir))
       if (!f.exists(p)) Nil
@@ -481,20 +389,19 @@ final class VersionedParquetSink(basePath: String,
     def id(st: org.apache.hadoop.fs.FileStatus): String =
       s"${st.getPath.toUri}@${st.getModificationTime}:${st.getLen}"
     var n = 0L
-    retryingRewrite(spark, table, "COPY INTO", commitKey = None) { entries =>
-      val loaded = entries.flatMap(_.copied).toSet
+    retryingRewrite(spark, table, "COPY INTO", commitKey = None) { snap =>
+      val loaded = snap.entries.flatMap(_.copied).toSet
       val fresh = files.filterNot(st => loaded.contains(id(st)))
         .sortBy(_.getPath.toString)
       n = fresh.size.toLong
-      if (fresh.isEmpty) entries.last.version
+      if (fresh.isEmpty) snap.version
       else {
         val df = spark.read.parquet(fresh.map(_.getPath.toString): _*)
-        val staged = stageAppend(df, table, entries, allowEvolution)
-        commitLoop(spark, table, staged.unique, commitKey = None,
+        val staged = stageAppend(df, snap, allowEvolution)
+        commitLoop(spark, snap, staged.unique, commitKey = None,
           compacts = None, schemaDdl = staged.schemaDdl,
-          cleanupOnKeyLoss = false, snapshot = Some(entries),
-          enforceSchema = true, allowEvolution = allowEvolution,
-          requireBase = Some(entries.last.version),
+          cleanupOnKeyLoss = false, enforceSchema = true,
+          allowEvolution = allowEvolution, pinned = true,
           op = Some("copy"), statsJson = Some(staged.statsJson),
           enforcedConstraints = Some(staged.constraints),
           newMapping = staged.newMapping.map(m => Some(m)),
@@ -514,12 +421,13 @@ final class VersionedParquetSink(basePath: String,
     * index is advisory; the next write retries). */
   private def maybeBloom(spark: SparkSession, table: String,
       props: Map[String, String]): Unit =
-    if (BloomIndex.configured(props).nonEmpty) {
-      try ensureBloomIndex(spark, table)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bloom] $table skipped: ${e.getMessage}")
-      }
+    if (BloomIndex.configured(props).nonEmpty) bloomBestEffort(spark, table)
+
+  private def bloomBestEffort(spark: SparkSession, table: String): Unit =
+    try ensureBloomIndex(spark, table)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bloom] $table skipped: ${e.getMessage}")
     }
 
   /** Builds missing Bloom-filter sidecars ([[BloomIndex]]) for every
@@ -531,15 +439,13 @@ final class VersionedParquetSink(basePath: String,
     * appends and stream epochs; call directly after OPTIMIZE/MERGE or
     * after first enabling the property on an existing table. */
   def ensureBloomIndex(spark: SparkSession, table: String): Unit = {
-    val entries = manifest(spark, table)
-    val props = VersionedParquetSink.Constraints.parse(
-      entries.lastOption.flatMap(_.props)).toMap
+    val snap = readLog(spark, table)
+    val props = snap.properties
     val logicalCols = BloomIndex.configured(props)
     if (logicalCols.isEmpty) return
     val fppValue = BloomIndex.fpp(props)
     val f = fs(spark, tableDir(table))
-    liveEntries(entries).filterNot(VersionedParquetSink.isDv)
-      .foreach { e =>
+    snap.live.filterNot(_.isDv).foreach { e =>
       val dir = VersionedParquetSink.resolveDir(tableDir(table), e.dir)
       // a SHALLOW CLONE's inherited dirs resolve `../source/<dir>` —
       // building there would write `_bloom` sidecars into the SOURCE
@@ -600,10 +506,10 @@ final class VersionedParquetSink(basePath: String,
     try props.get("graft.autoCompact.minDirs").map(_.toInt).foreach { minDirs =>
       val target = props.get("graft.autoCompact.targetBytes")
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      val entries = manifest(spark, table)
+      val snap = readLog(spark, table)
       val f = fs(spark, tableDir(table))
-      val small = liveEntries(entries).filter(e =>
-        e.compacts.isEmpty && !VersionedParquetSink.isMergeOnRead(e))
+      val small = snap.live
+        .filter(e => e.compacts.isEmpty && !e.isMergeOnRead)
         .filter { e =>
           val p = new Path(
             VersionedParquetSink.resolveDir(tableDir(table), e.dir))
@@ -612,9 +518,9 @@ final class VersionedParquetSink(basePath: String,
         }
       if (small.size >= minDirs) {
         // clustered tables re-cluster the fold on the declared columns
-        foldSelected(spark, table, entries, small, Nil,
+        foldSelected(spark, snap, small, Nil,
           targetFiles = Some(1), zorderBy = clusterColumns(props),
-          commitKey = Some(s"autocompact-${entries.last.version}"))
+          commitKey = Some(s"autocompact-${snap.version}"))
         ()
       }
     } catch {
@@ -656,8 +562,8 @@ final class VersionedParquetSink(basePath: String,
       replace: Boolean = false): Boolean = {
     val f = fs(spark, tableDir(table))
     val dirPath = new Path(s"${tableDir(table)}/$unique")
-    val entries = manifest(spark, table)
-    if (entries.exists(_.key.contains(commitKey))) {
+    val snap = readLog(spark, table)
+    if (snap.versionOf(commitKey).isDefined) {
       f.delete(dirPath, true)
       return false
     }
@@ -668,34 +574,32 @@ final class VersionedParquetSink(basePath: String,
       // through the governed overwrite path costs one small extra write
       // and buys uniform schema-replace/governance semantics.
       val df = scanStaged(spark, table, unique, querySchema)
-      overwrite(df, table, Some(commitKey))
+      overwriteFrom(df, table, Some(commitKey), snap)
       f.delete(dirPath, true)
       return true
     }
-    val last = entries.lastOption
     // identity tables re-stage like other governed tables: the epoch's
     // rows need engine-assigned values the executor writers can't mint
-    val governed = last.exists(e => e.mapping.isDefined ||
-      e.generated.isDefined || e.constraints.isDefined ||
-      identityDecls(VersionedParquetSink.Constraints.parse(e.props)
-        .toMap).nonEmpty)
+    val governed = snap.mapping.isDefined || snap.generated.isDefined ||
+      snap.constraints.isDefined ||
+      VersionedParquetSink.identityDecls(snap.properties).nonEmpty
     if (governed) {
       val df = scanStaged(spark, table, unique, querySchema)
-      val ok = appendOnce(df, table, commitKey)
+      val ok = doAppend(df, table, Some(commitKey), first = Some(snap))
       f.delete(dirPath, true)
       ok
     } else {
       // fail fast (and clean up) on drift before the stats pass; the
-      // claim re-checks under the lock against a fresh manifest
+      // claim re-checks under the lock
       try SchemaCheck.enforceAppend(table,
-        last.flatMap(_.schemaDdl).map(StructType.fromDDL), querySchema)
+        snap.schemaDdl.map(StructType.fromDDL), querySchema)
       catch { case e: Throwable => f.delete(dirPath, true); throw e }
       val stats = FileStats.collect(spark,
         s"${tableDir(table)}/$unique", querySchema)
-      val ok = commitLoop(spark, table, unique, Some(commitKey),
+      val ok = commitLoop(spark, snap, unique, Some(commitKey),
         compacts = None,
         schemaDdl = querySchema.toDDL, cleanupOnKeyLoss = true,
-        snapshot = Some(entries), enforceSchema = true,
+        enforceSchema = true,
         statsJson = Some(stats),
         enforcedConstraints = Some(None),
         enforcedMapping = Some(None),
@@ -703,8 +607,7 @@ final class VersionedParquetSink(basePath: String,
       // micro-batch streaming is auto-compaction's prime customer: a
       // dir per epoch is exactly the population it bounds
       if (ok) {
-        val props = VersionedParquetSink.Constraints.parse(
-          entries.lastOption.flatMap(_.props)).toMap
+        val props = snap.properties
         maybeAutoCompact(spark, table, props)
         maybeBloom(spark, table, props)
       }
@@ -781,33 +684,31 @@ final class VersionedParquetSink(basePath: String,
     * completion/guards, schema pre-check, the unique data-dir write,
     * per-file stats. The staged dir is invisible until a marker claims
     * it — which is what the multi-table transaction exploits. */
-  private def stageAppend(df: DataFrame, table: String,
-      entries: Seq[Commit], allowEvolution: Boolean):
-      VersionedParquetSink.Staged = {
-    val spark = df.sparkSession
-    val tableSchema =
-      entries.lastOption.flatMap(_.schemaDdl).map(StructType.fromDDL)
+  private def stageAppend(df: DataFrame, snap: Snapshot,
+      allowEvolution: Boolean): VersionedParquetSink.Staged = {
+    val table = snap.table
+    val tableSchema = snap.schemaDdl.map(StructType.fromDDL)
     // generated columns: a missing one is COMPUTED inside the write's
     // own pass; a caller-provided one is VALIDATED to equal its
     // expression per row (both Delta's rules). Runs before the schema
     // check so a frame omitting generated columns still schema-matches.
-    val gensJson = entries.lastOption.flatMap(_.generated)
+    val gensJson = snap.generated
     val completed = completeGenerated(df, gensJson, tableSchema, table)
     // early check: fail BEFORE the data write on the common path (the
-    // claim loop re-checks against a FRESH manifest under the lock —
-    // this snapshot can be stale by commit time)
+    // claim loop re-checks under the lock — this snapshot can be stale
+    // by commit time)
     SchemaCheck.enforceAppend(table, tableSchema,
       completed.schema, allowEvolution)
     // CHECK constraints ride the write's own pass as a per-row guard;
     // the claim loop aborts if the set changes before we commit
-    val cons = entries.lastOption.flatMap(_.constraints)
+    val cons = snap.constraints
     val guarded = constraintGuard(completed, cons, table)
     // column mapping: files carry PHYSICAL names; an evolution append on
     // a mapped table mints fresh physical names/ids for its new columns
     // (never reusing a dropped column's), and the claim aborts if the
     // mapping moved under us — our files' physical names bind us to the
     // mapping we extended
-    val mappingJson = entries.lastOption.flatMap(_.mapping)
+    val mappingJson = snap.mapping
     val mapping = VersionedParquetSink.ColumnMapping.parse(mappingJson)
     val newCols = if (mappingJson.isDefined)
       completed.schema.fields.toSeq
@@ -820,13 +721,9 @@ final class VersionedParquetSink(basePath: String,
           s"col-${UUID.randomUUID()}", maxId + 1 + i)
       }
     }
-    val unique = s"d-${UUID.randomUUID()}"
-    val shaped = optimizeWrite(guarded, VersionedParquetSink.Constraints
-      .parse(entries.lastOption.flatMap(_.props)).toMap)
-    val stats = StatsWrite.writeWithStats(toPhysical(shaped, extended),
-      s"${tableDir(table)}/$unique", // step 1: unique data dir
-      VersionedParquetSink.ColumnMapping
-        .physicalSchema(completed.schema, extended))
+    // step 1: unique data dir
+    val (unique, stats) = writeDir(table,
+      optimizeWrite(guarded, snap.properties), extended, completed.schema)
     VersionedParquetSink.Staged(table, unique, completed.schema.toDDL,
       stats, cons,
       // pin the mapping we translated against whenever the table IS
@@ -845,15 +742,14 @@ final class VersionedParquetSink(basePath: String,
     * `preserveOnAbort` keeps the staged dir on a governance/schema abort
     * (multi-table transactions: the dir is named by a `_txn` manifest and
     * recovery re-validates it — deleting it would poison recovery). */
-  private def claimStaged(spark: SparkSession,
+  private def claimStaged(spark: SparkSession, snap: Snapshot,
       s: VersionedParquetSink.Staged, commitKey: Option[String],
-      allowEvolution: Boolean, snapshot: Option[Seq[Commit]],
-      cleanupOnKeyLoss: Boolean,
+      allowEvolution: Boolean, cleanupOnKeyLoss: Boolean,
       preserveOnAbort: Boolean = false,
       initialProps: Option[Map[String, String]] = None): Option[Long] =
-    commitLoop(spark, s.table, s.unique, commitKey, compacts = None,
+    commitLoop(spark, snap, s.unique, commitKey, compacts = None,
       schemaDdl = s.schemaDdl, cleanupOnKeyLoss = cleanupOnKeyLoss,
-      snapshot = snapshot, enforceSchema = true,
+      enforceSchema = true,
       allowEvolution = allowEvolution, statsJson = Some(s.statsJson),
       enforcedConstraints = Some(s.constraints),
       newMapping = s.newMapping.map(m => Some(m)),
@@ -901,32 +797,34 @@ final class VersionedParquetSink(basePath: String,
     val spark = writes.head._1.sparkSession
     val f = fs(spark, basePath)
     recoverTransactions(spark) // finish anything a crashed writer left
-    val pending = writes.filterNot { case (_, t) =>
-      manifest(spark, t).exists(_.key.contains(txnKey)) }
+    // one log read per table serves the key check, the staging and the
+    // claim: a claim at snapshot-latest+1 fails if anything came in
+    // between, and the retry re-reads
+    val pending = writes.map { case (df, t) => (df, readLog(spark, t)) }
+      .filter { case (_, snap) => snap.versionOf(txnKey).isEmpty }
     if (pending.isEmpty) return false // full keyed replay: no-op
-    val staged = pending.map { case (df, t) =>
-      stageAppend(df, t, manifest(spark, t), allowEvolution = false) }
+    val staged = pending.map { case (df, snap) =>
+      snap -> stageAppend(df, snap, allowEvolution = false) }
     f.mkdirs(new Path(txnDir))
     if (!coordinator.publishIfAbsent(f,
         new Path(s"$txnDir/${txnFileName(txnKey)}"),
-        VersionedParquetSink.Staged.renderTxn(txnKey, staged)
+        VersionedParquetSink.Staged.renderTxn(txnKey, staged.map(_._2))
           .getBytes(StandardCharsets.UTF_8))) {
       // a concurrent writer of the SAME logical batch owns the commit
       // point (or a crashed one left it): discard OUR staging and
       // complete THEIRS
-      staged.foreach(s =>
-        f.delete(new Path(s"${tableDir(s.table)}/${s.unique}"), true))
+      staged.foreach { case (_, s) =>
+        f.delete(new Path(s"${tableDir(s.table)}/${s.unique}"), true) }
       recoverTransactions(spark)
       return false
     }
-    staged.foreach { s =>
+    staged.foreach { case (snap, s) =>
       txnClaimHook(s.table) // test seam: a throwing hook = writer death
       // preserveOnAbort: past the commit point the staged dir belongs to
       // the manifest — a governance abort here must leave the bytes for
       // recoverTransactions to re-validate and roll forward
-      claimStaged(spark, s, Some(txnKey),
-        allowEvolution = false, snapshot = None, cleanupOnKeyLoss = false,
-        preserveOnAbort = true)
+      claimStaged(spark, snap, s, Some(txnKey), allowEvolution = false,
+        cleanupOnKeyLoss = false, preserveOnAbort = true)
     }
     f.delete(new Path(s"$txnDir/${txnFileName(txnKey)}"), false)
     true
@@ -967,16 +865,16 @@ final class VersionedParquetSink(basePath: String,
       // quarantined manifest records them for manual repair)
       val failure: Option[String] =
         staged.foldLeft(Option.empty[String]) { (err, s) =>
+          lazy val snap = readLog(spark, s.table)
           if (err.isDefined) err
-          else if (manifest(spark, s.table).exists(_.key.contains(key))) None
+          else if (snap.versionOf(key).isDefined) None
           else if (!f.exists(new Path(s"${tableDir(s.table)}/${s.unique}")))
             Some(s"staged dir ${s.unique} for table '${s.table}' is gone " +
               "but never committed (deleted outside the sink?)")
           else {
             try {
-              claimStaged(spark, s, Some(key), allowEvolution = false,
-                snapshot = None, cleanupOnKeyLoss = false,
-                preserveOnAbort = true)
+              claimStaged(spark, snap, s, Some(key), allowEvolution = false,
+                cleanupOnKeyLoss = false, preserveOnAbort = true)
               healed += 1; None
             } catch {
               case _: IllegalStateException =>
@@ -995,8 +893,7 @@ final class VersionedParquetSink(basePath: String,
         case None => f.delete(st.getPath, false)
         case Some(why) =>
           val committed = staged.filter(s =>
-            manifest(spark, s.table).exists(_.key.contains(key)))
-            .map(_.table)
+            readLog(spark, s.table).versionOf(key).isDefined).map(_.table)
           f.rename(st.getPath, new Path(st.getPath.toString + ".failed"))
           quarantined += s"transaction '$key': $why; the batch is " +
             (if (committed.isEmpty) "applied to NO table"
@@ -1029,14 +926,13 @@ final class VersionedParquetSink(basePath: String,
     var attempt = 0
     while (attempt < 3) {
       attempt += 1
-      val entries = manifest(spark, s.table)
-      val curMapping = entries.lastOption.flatMap(_.mapping)
-      if (curMapping != s.mapping)
+      val snap = readLog(spark, s.table)
+      if (snap.mapping != s.mapping)
         return Some(s"column mapping on '${s.table}' changed while the " +
           "transaction was in flight; the staged files bake physical " +
           "names from the old mapping and cannot be rolled forward")
-      val curCons = entries.lastOption.flatMap(_.constraints)
-      val curGens = entries.lastOption.flatMap(_.generated)
+      val curCons = snap.constraints
+      val curGens = snap.generated
       try {
         val schema = StructType.fromDDL(s.schemaDdl)
         val mapping = VersionedParquetSink.ColumnMapping.parse(s.mapping)
@@ -1048,10 +944,10 @@ final class VersionedParquetSink(basePath: String,
           completeGenerated(logical, curGens, Some(schema), s.table),
           curCons, s.table)
           .foreach(_ => ())
-        claimStaged(spark,
+        claimStaged(spark, snap,
           s.copy(constraints = curCons, generated = curGens), Some(key),
-          allowEvolution = false, snapshot = None,
-          cleanupOnKeyLoss = false, preserveOnAbort = true)
+          allowEvolution = false, cleanupOnKeyLoss = false,
+          preserveOnAbort = true)
         return None
       } catch {
         case _: IllegalStateException => () // moved again mid-recovery; retry
@@ -1111,6 +1007,18 @@ final class VersionedParquetSink(basePath: String,
     spark.baseRelationToDataFrame(
       GraftRelation.ofDir(spark, tableDir(table), unique, schema, mapping))
 
+  /** Write `df` (`logical` schema, logical names) into a fresh unique
+    * data dir of `table` under the physical names of `mapping`, per-file
+    * stats collected inside the write. Returns the dir and the stats. */
+  private def writeDir(table: String, df: DataFrame,
+      mapping: Seq[(String, VersionedParquetSink.ColumnMapping.Entry)],
+      logical: StructType): (String, String) = {
+    val unique = s"d-${UUID.randomUUID()}"
+    (unique, StatsWrite.writeWithStats(toPhysical(df, mapping),
+      s"${tableDir(table)}/$unique",
+      VersionedParquetSink.ColumnMapping.physicalSchema(logical, mapping)))
+  }
+
   /** Rename a frame's columns logical -> physical for writing (identity
     * on unmapped tables — physical == logical until the first
     * rename/drop enables mapping). */
@@ -1125,32 +1033,34 @@ final class VersionedParquetSink(basePath: String,
     * key won the race (the orphaned data dir is then deleted).
     *
     * Concurrency protocol (Delta-style optimistic commit): each attempt
-    * claims EXACTLY latest+1 from a manifest snapshot that also supplied
-    * the idempotency-key check. The first attempt may reuse the caller's
-    * snapshot (saving a listing on the uncontended path — any commit that
-    * slipped in since occupies exactly the version we claim, failing the
-    * rename); retries always re-read fresh, so a same-key racer's commit
-    * is seen before we'd claim past it. HDFS-style rename is
+    * claims EXACTLY latest+1 from a log snapshot that also supplied the
+    * idempotency-key and governance checks. The first attempt uses the
+    * caller's snapshot — the one its staging was validated against; any
+    * commit that slipped in since occupies exactly the version we claim,
+    * failing the publish. Retries always re-read, so a same-key racer's
+    * commit is seen before we'd claim past it. HDFS-style rename is
     * atomic-no-overwrite across writers; the LOCAL filesystem's rename is
     * check-then-move (TOCTOU), so same-JVM racers — exactly the local[*]
     * deployment — additionally serialize the read-check-claim on a JVM
     * lock. Cross-JVM writers need an atomic-rename fs (HDFS/ABFS), the
     * same contract Delta's LogStore documents. A rename that fails with
     * NO competing marker is a filesystem fault and throws rather than
-    * spinning. */
-  private def commitLoop(spark: SparkSession, table: String, unique: String,
-      commitKey: Option[String], compacts: Option[Long], schemaDdl: String,
-      cleanupOnKeyLoss: Boolean,
-      snapshot: Option[Seq[Commit]] = None,
+    * spinning.
+    *
+    * `pinned` commits only on top of the caller's snapshot (Delta's
+    * ConcurrentWriteException on a stale read-modify-write). */
+  private def commitLoop(spark: SparkSession, snapshot: Snapshot,
+      unique: String, commitKey: Option[String], compacts: Option[Long],
+      schemaDdl: String, cleanupOnKeyLoss: Boolean,
       enforceSchema: Boolean = false,
       allowEvolution: Boolean = false,
-      requireBase: Option[Long] = None,
+      pinned: Boolean = false,
       rewriteOnlyConflict: Boolean = false,
       op: Option[String] = None,
       statsJson: Option[String] = None,
       // dir-granular selective rewrite (OPTIMIZE WHERE): base names of
       // the live dirs whose content this commit's dir now carries —
-      // liveEntries drops them once this commit lands
+      // Snapshot.live drops them once this commit lands
       replaces: Seq[String] = Nil,
       // COPY INTO's loaded-source-file identities for this commit
       copied: Seq[String] = Nil,
@@ -1185,48 +1095,32 @@ final class VersionedParquetSink(basePath: String,
       // and recovery needs the BYTES to re-validate and roll forward —
       // deleting them turns a retryable abort into an unrecoverable txn
       preserveOnAbort: Boolean = false): Option[Long] = {
-    val f = fs(spark, commitDir(table))
-    f.mkdirs(new Path(commitDir(table)))
-    // key travels base64'd: raw interpolation would corrupt the marker on
-    // a quote-bearing key, and the [^"]+ reader would drop an empty key —
-    // both silently breaking exactly-once dedup
-    val keyField = commitKey.map(k => s""","keyB64":"${
-      Base64.getEncoder.encodeToString(k.getBytes(StandardCharsets.UTF_8))}"""")
-      .getOrElse("")
-    val compField = compacts.map(c => s""","compacts":$c""").getOrElse("") +
-      op.map(o => s""","op":"$o"""").getOrElse("") +
-      // stats travel base64'd like schema/key — the nested JSON would
-      // otherwise defeat the marker's flat field regexes
-      statsJson.map(st => s""","statsB64":"${
-        Base64.getEncoder.encodeToString(st.getBytes(StandardCharsets.UTF_8))}"""")
-        .getOrElse("") +
-      (if (replaces.isEmpty) "" else s""","replacesB64":"${
-        Base64.getEncoder.encodeToString(
-          replaces.mkString(",").getBytes(StandardCharsets.UTF_8))}"""") +
-      (if (copied.isEmpty) "" else s""","copiedB64":"${
-        Base64.getEncoder.encodeToString(
-          copied.mkString("\n").getBytes(StandardCharsets.UTF_8))}"""") +
-      // commit annotation (Delta's userMetadata UX: a session conf so
-      // every write path — API, SQL, streaming — carries it uniformly)
-      spark.conf.getOption("spark.graft.commitInfo.userMetadata")
-        .filter(_.nonEmpty).map(m => s""","userMetaB64":"${
-          Base64.getEncoder.encodeToString(
-            m.getBytes(StandardCharsets.UTF_8))}"""").getOrElse("")
-    def b64enc(s: String): String =
-      Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
-    var reuse = snapshot // first attempt only; retries re-read under the lock
-    // the marker body of the most recent successful claim, carried out
-    // of the claim block for the post-claim validation/checkpoint path
-    var claimedBody: Array[Byte] = null
+    val table = snapshot.table
+    val tlog = log(spark, table)
+    val base = snapshot.version
+    val f = fs(spark, tableDir(table))
+    def dropStaged(): Unit =
+      f.delete(new Path(s"${tableDir(table)}/$unique"), true)
+    def abort(e: Throwable): Nothing = {
+      if (!preserveOnAbort) dropStaged()
+      throw e
+    }
+    // commit annotation (Delta's userMetadata UX: a session conf so every
+    // write path — API, SQL, streaming — carries it uniformly)
+    val userMeta = spark.conf.getOption("spark.graft.commitInfo.userMetadata")
+      .filter(_.nonEmpty)
+    var reuse: Option[Snapshot] = Some(snapshot) // first attempt only
+    // the most recent successful claim, carried out of the claim block
+    // for the post-claim validation/checkpoint path
+    var claimedCommit: Commit = null
     while (true) {
       val claimed: Option[Option[Long]] = // None=retry, Some(None)=key lost
         VersionedParquetSink.localClaimLock.synchronized {
-          val fromSnapshot = reuse.isDefined
-          val entries = reuse.getOrElse(manifest(spark, table))
+          val snap = reuse.getOrElse(tlog.snapshot())
           reuse = None
-          if (commitKey.exists(k => entries.exists(_.key.contains(k)))) {
+          if (commitKey.flatMap(snap.versionOf).isDefined) {
             Some(None)
-          } else if (requireBase.exists { b =>
+          } else if (pinned && {
               // Stale-snapshot aborts (Delta's ConcurrentWriteException;
               // callers retry from a fresh snapshot):
               //  - delete/merge conflict with ANY newer commit — a stale
@@ -1234,77 +1128,58 @@ final class VersionedParquetSink(basePath: String,
               //    intervening append's rows or resurrect deleted ones;
               //  - compact (rewriteOnlyConflict) conflicts only with a
               //    newer REWRITE — appends stay visible past a compaction
-              //    (liveEntries keeps version > compacts), but committing
-              //    a compaction derived from a pre-delete snapshot would
-              //    shadow the delete ("last compaction wins" in
-              //    liveEntries) and resurrect its rows. A newer DELETION
-              //    VECTOR conflicts the same way: the compaction's new
-              //    file paths would orphan the DV's (path, pos) refs and
-              //    silently resurrect the masked rows.
+              //    (Snapshot.live keeps version > compacts), but
+              //    committing a compaction derived from a pre-delete
+              //    snapshot would shadow the delete ("last compaction
+              //    wins" in Snapshot.live) and resurrect its rows. A newer
+              //    DELETION VECTOR conflicts the same way: the
+              //    compaction's new file paths would orphan the DV's
+              //    (path, pos) refs and silently resurrect the masked rows.
               // a selective rewrite (replaces.nonEmpty) conflicts like a
               // full one: committing a fold derived from a snapshot that
               // predates another fold of the SAME dirs would duplicate
               // every overlapping row (both folded copies stay live)
               if (rewriteOnlyConflict)
-                entries.exists(e => e.version > b &&
+                snap.entries.exists(e => e.version > base &&
                   (e.compacts.isDefined || e.replaces.nonEmpty ||
-                    VersionedParquetSink.isMergeOnRead(e)))
-              else entries.lastOption.map(_.version).getOrElse(-1L) != b
+                    e.isMergeOnRead))
+              else snap.version != base
             }) {
-            f.delete(new Path(s"${tableDir(table)}/$unique"), true)
+            dropStaged()
             throw new VersionedParquetSink.ConcurrentRewriteException(
-              table, requireBase.get,
-              entries.lastOption.map(_.version).getOrElse(-1L))
-          } else if (enforcedProps.exists(p =>
-              entries.lastOption.flatMap(_.props) != p)) {
-            // honor preserveOnAbort like the adjacent governance-abort
-            // branches: a multi-table-transaction caller relies on the
-            // staged dir surviving the abort for recovery
-            if (!preserveOnAbort)
-              f.delete(new Path(s"${tableDir(table)}/$unique"), true)
-            throw new VersionedParquetSink.ConcurrentRewriteException(
-              table, requireBase.getOrElse(-1L),
-              entries.lastOption.map(_.version).getOrElse(-1L))
-          } else if (enforcedConstraints.exists(c =>
-              entries.lastOption.flatMap(_.constraints) != c)) {
-            if (!preserveOnAbort)
-              f.delete(new Path(s"${tableDir(table)}/$unique"), true)
-            throw new IllegalStateException(
+              table, base, snap.version)
+          } else if (enforcedProps.exists(_ != snap.props)) {
+            // honor preserveOnAbort like the governance aborts below: a
+            // multi-table-transaction caller relies on the staged dir
+            // surviving the abort for recovery
+            abort(new VersionedParquetSink.ConcurrentRewriteException(
+              table, base, snap.version))
+          } else if (enforcedConstraints.exists(_ != snap.constraints)) {
+            abort(new IllegalStateException(
               s"CHECK constraints on '$table' changed while this append " +
-                "was validating against the old set; retry the append")
-          } else if (enforcedMapping.exists(m =>
-              entries.lastOption.flatMap(_.mapping) != m)) {
-            if (!preserveOnAbort)
-              f.delete(new Path(s"${tableDir(table)}/$unique"), true)
-            throw new IllegalStateException(
+                "was validating against the old set; retry the append"))
+          } else if (enforcedMapping.exists(_ != snap.mapping)) {
+            abort(new IllegalStateException(
               s"column mapping on '$table' changed while this write baked " +
-                "physical column names from the old mapping; retry")
-          } else if (enforcedGenerated.exists(g =>
-              entries.lastOption.flatMap(_.generated) != g)) {
-            if (!preserveOnAbort)
-              f.delete(new Path(s"${tableDir(table)}/$unique"), true)
-            throw new IllegalStateException(
+                "physical column names from the old mapping; retry"))
+          } else if (enforcedGenerated.exists(_ != snap.generated)) {
+            abort(new IllegalStateException(
               s"generated columns on '$table' changed while this write " +
-                "computed/validated against the old expressions; retry")
+                "computed/validated against the old expressions; retry"))
           } else {
-            // Re-check the schema whenever the manifest was re-read: a
-            // commit that slipped in since the caller's snapshot may have
-            // changed the table schema, and claiming past it would let
-            // two concurrent appends with different schemas both land
-            // (the mixed-schema table the check exists to prevent). The
-            // snapshot path needs no re-check — claiming snapshot-latest+1
-            // atomically fails if ANY commit intervened.
-            if (enforceSchema && !fromSnapshot) {
+            // The schema check runs against the snapshot this attempt
+            // claims on top of: a commit that slipped in since the
+            // caller's staging may have changed the table schema, and
+            // claiming past it would let two concurrent appends with
+            // different schemas both land (the mixed-schema table the
+            // check exists to prevent).
+            if (enforceSchema) {
               try SchemaCheck.enforceAppend(table,
-                entries.lastOption.flatMap(_.schemaDdl).map(StructType.fromDDL),
+                snap.schemaDdl.map(StructType.fromDDL),
                 StructType.fromDDL(schemaDdl), allowEvolution)
-              catch { case e: Throwable =>
-                if (!preserveOnAbort)
-                  f.delete(new Path(s"${tableDir(table)}/$unique"), true)
-                throw e
-              }
+              catch { case e: Throwable => abort(e) }
             }
-            val attempt = entries.lastOption.map(_.version + 1).getOrElse(0L)
+            val attempt = snap.version + 1
             // A compaction's DDL must be the LATEST committed DDL, not
             // its caller's snapshot: a schema-evolution append racing
             // past the compaction's base is non-conflicting (its data
@@ -1313,32 +1188,21 @@ final class VersionedParquetSink(basePath: String,
             // reader project the evolved column away — silent column
             // loss. The folded rows simply read the evolved column as
             // null, exactly like any pre-evolution file. delete/merge
-            // never get here stale (requireBase aborts on ANY newer
+            // never get here stale (a pinned claim aborts on ANY newer
             // commit), so using the latest DDL is correct for every
             // rewrite.
             val effectiveDdl =
-              if (rewriteOnlyConflict)
-                entries.lastOption.flatMap(_.schemaDdl).getOrElse(schemaDdl)
+              if (rewriteOnlyConflict) snap.schemaDdl.getOrElse(schemaDdl)
               else schemaDdl
-            // constraints travel commit-to-commit like schema: inherit
-            // the latest set unless this commit explicitly changes it
-            val effConstraints: Option[String] = newConstraints
-              .getOrElse(entries.lastOption.flatMap(_.constraints))
-            val consField = effConstraints.map(c =>
-              s""","constraintsB64":"${b64enc(c)}"""").getOrElse("")
-            // column mapping inherits commit-to-commit like constraints
-            val effMapping: Option[String] = newMapping
-              .getOrElse(entries.lastOption.flatMap(_.mapping))
-            val mapField = effMapping.map(m =>
-              s""","mappingB64":"${b64enc(m)}"""").getOrElse("")
-            val effGenerated: Option[String] = newGenerated
-              .getOrElse(entries.lastOption.flatMap(_.generated))
-            val genField = effGenerated.map(g =>
-              s""","gensB64":"${b64enc(g)}"""").getOrElse("")
-            val effProps: Option[String] = newProps
-              .getOrElse(entries.lastOption.flatMap(_.props))
-            val propsField = effProps.map(p =>
-              s""","propsB64":"${b64enc(p)}"""").getOrElse("")
+            // table metadata travels commit-to-commit: each payload
+            // inherits the latest one unless this commit changes it
+            val c = Commit(attempt, unique, commitKey, compacts,
+              Some(effectiveDdl), op = op, stats = statsJson,
+              constraints = newConstraints.getOrElse(snap.constraints),
+              mapping = newMapping.getOrElse(snap.mapping),
+              generated = newGenerated.getOrElse(snap.generated),
+              props = newProps.getOrElse(snap.props),
+              replaces = replaces, copied = copied, userMeta = userMeta)
             // The claim itself is the coordinator's publish-if-absent
             // (temp-write + atomic rename here; conditional PUT on
             // object stores): the FULL body lands atomically, so an
@@ -1346,12 +1210,9 @@ final class VersionedParquetSink(basePath: String,
             // one and a same-key committer would double-commit. The
             // coordinator throws (not "lost") when the store fails in
             // a way a competing marker cannot explain.
-            val marker = new Path(s"${commitDir(table)}/$attempt.commit")
-            val body =
-              s"""{"version":$attempt,"dir":"$unique"$keyField$compField$consField$mapField$genField$propsField,"schemaB64":"${b64enc(effectiveDdl)}","ts":"${java.time.Instant.now}"}"""
-                .getBytes(StandardCharsets.UTF_8)
-            if (coordinator.publishIfAbsent(f, marker, body)) {
-              claimedBody = body
+            val body = Commit.render(c, java.time.Instant.now)
+            if (tlog.claim(coordinator, body, attempt)) {
+              claimedCommit = Commit.parse(body, Some(attempt))
               Some(Some(attempt))
             } else None // lost the race; retry at the next version
           }
@@ -1361,15 +1222,16 @@ final class VersionedParquetSink(basePath: String,
           // Phantom-claim guard (found by the log-retention soak): a
           // writer holding a STALE snapshot computes attempt =
           // stale_latest + 1; normally that version's marker exists and
-          // the rename is blocked, but vacuumLog may have RETIRED it
-          // (it sits behind the checkpoint horizon) — the rename then
-          // succeeds and mints a marker manifest() filters out, i.e. a
+          // the claim is blocked, but vacuumLog may have RETIRED it
+          // (it sits behind the checkpoint horizon) — the claim then
+          // succeeds and mints a marker log reads filter out, i.e. a
           // commit that silently never happened. Validate the claim is
           // actually visible; if not, undo the marker and retry from a
-          // fresh manifest. The validation read is the same manifest()
-          // the mirror sync needs, so the healthy path pays nothing.
-          val after = manifest(spark, table)
-          val inListing = after.exists(e => e.version == v && e.dir == unique)
+          // fresh read. The validation read also feeds the checkpoint
+          // and the mirror sync, so the healthy path pays nothing more.
+          val after = tlog.snapshot()
+          val inListing = after.entries.exists(e =>
+            e.version == v && e.dir == unique)
           // LIST-lag fallback (object stores whose listing trails PUTs —
           // the pre-2020 S3 shape the conditional-PUT coordinator
           // emulation injects): the listing may simply not include the
@@ -1392,86 +1254,61 @@ final class VersionedParquetSink(basePath: String,
           // horizon, which the retention guard makes sound for any
           // correctly-declared store.
           val visible = inListing || {
-            markerOwned(spark, table, v, unique) && {
-              val lagBound = storeMaxListLagMs(spark, table, Some(after))
+            tlog.markerOwned(v, unique) && {
               val deadline = System.currentTimeMillis() +
-                math.max(lagBound, 2000L)
+                math.max(storeMaxListLagMs(spark, after), 2000L)
               var decided: Option[Boolean] = None
               while (decided.isEmpty) {
-                val names = commitDirNames(spark, table)
-                val horizon = names.filter(_.endsWith(".checkpoint"))
-                  .map(_.stripSuffix(".checkpoint").toLong)
-                  .sorted.lastOption
+                val names = tlog.names()
                 if (names.contains(s"$v.commit") ||
                     System.currentTimeMillis() >= deadline)
-                  decided = Some(horizon.forall(v > _))
+                  decided = Some(TableLog.horizon(names).forall(v > _))
                 else Thread.sleep(25L)
               }
               decided.get
             }
           }
-          if (!visible) {
-            f.delete(new Path(s"${commitDir(table)}/$v.commit"), false)
-          } else {
-            maybeCheckpoint(spark, table, v,
-              selfRaw = Some(new String(claimedBody, StandardCharsets.UTF_8)))
+          if (!visible) tlog.unclaim(v)
+          else {
+            maybeCheckpoint(tlog, after, claimedCommit)
             // external interop: mirror the commit (and any gap a crashed
             // writer left) into _delta_log; best-effort, never throws
             DeltaLogMirror.sync(spark, tableDir(table), after)
             return Some(v)
           }
         case Some(None) =>
-          if (cleanupOnKeyLoss)
-            f.delete(new Path(s"${tableDir(table)}/$unique"), true)
+          if (cleanupOnKeyLoss) dropStaged()
           return None
-        case None => () // re-read manifest and try the next version
+        case None => () // re-read the log and try the next version
       }
     }
     None // unreachable
   }
 
-  /** Snapshot the manifest into `<v>.checkpoint` on the deterministic
-    * grid (every `checkpointInterval`-th version) — a pure function of v,
-    * so the uncontended commit path pays NO extra listing to decide.
-    * Losing the checkpoint rename race is harmless — someone else
-    * snapshotted; a writer crashing before its checkpoint just defers to
-    * the next grid point. */
-  private def maybeCheckpoint(spark: SparkSession, table: String, v: Long,
-      selfRaw: Option[String] = None): Unit = {
+  /** Snapshot the log into `<v>.checkpoint` on the deterministic grid
+    * (every `checkpointInterval`-th version) — a pure function of v, so
+    * the uncontended commit path pays NO extra listing to decide. A
+    * writer crashing before its checkpoint just defers to the next grid
+    * point.
+    *
+    * `after` is the post-claim read: it may be mid-race-sparse (a writer
+    * between marker and rename), so only what is durably visible goes in
+    * — EXCEPT the claimant's OWN entry, which a lagged LIST may not
+    * return yet (conditional-PUT stores): a checkpoint at v WITHOUT v's
+    * own line would make log reads filter v's marker out of the tail
+    * (the tail keeps only versions > checkpoint), silently losing the
+    * commit — so it is spliced in. Under mtime-monotone list lag this
+    * keeps the snapshot gap-free: claims are listing-gated (you can only
+    * claim v after LISTING v-1), so a listing that includes v-1 includes
+    * every older version too; v itself is the only possibly-hidden
+    * entry. */
+  private def maybeCheckpoint(tlog: TableLog, after: Snapshot,
+      self: Commit): Unit = {
+    val v = self.version
     if (v % checkpointInterval != checkpointInterval - 1) return
-    val f = fs(spark, commitDir(table))
-    // entries may still be mid-race-sparse (a writer between marker and
-    // rename); checkpoint only what is durably visible NOW — EXCEPT the
-    // checkpointer's OWN just-committed entry, which a lagged LIST may
-    // not return yet (conditional-PUT stores): writing a checkpoint at
-    // v WITHOUT v's own line would make manifest() filter v's marker
-    // out of the tail (tail keeps only versions > checkpoint), silently
-    // losing the commit — so the claimant passes its own body and we
-    // splice it in. Under mtime-monotone list lag this keeps the
-    // snapshot gap-free: claims are listing-gated (you can only claim v
-    // after LISTING v-1), so a listing that includes v-1 includes every
-    // older version too; v itself is the only possibly-hidden entry.
-    var entries = manifest(spark, table).filter(_.version <= v)
-    if (!entries.exists(_.version == v)) selfRaw match {
-      case Some(raw) => entries = entries :+ parseCommit(v, raw)
-      case None => return // never snapshot a horizon that hides v itself
-    }
-    val body = entries.map(_.raw).mkString("", "\n", "\n")
-    val tmp = new Path(s"${commitDir(table)}/.cptmp-${UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!f.rename(tmp, new Path(s"${commitDir(table)}/$v.checkpoint")))
-      f.delete(tmp, false)
-  }
-
-  /** Raw file names in the commit dir — the claim-validation loop's
-    * repeated cheap listing (no marker-body reads). */
-  private def commitDirNames(spark: SparkSession,
-      table: String): Seq[String] = {
-    val dir = new Path(commitDir(table))
-    val f = fs(spark, commitDir(table))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+    val upTo = after.upTo(v).entries
+    tlog.checkpoint(v,
+      if (upTo.exists(_.version == v)) upTo else upTo :+ self)
   }
 
   /** The declared worst-case LIST lag of the underlying store, in ms:
@@ -1481,26 +1318,11 @@ final class VersionedParquetSink(basePath: String,
     * time-string shape (`0s`, `5m`, `1h`). This is the bound
     * [[vacuumLog]] enforces retention against and the claim-validation
     * loop waits out before trusting a listing's checkpoint horizon. */
-  private def storeMaxListLagMs(spark: SparkSession, table: String,
-      entries: Option[Seq[Commit]] = None): Long = {
-    val props = VersionedParquetSink.Constraints.parse(
-      entries.getOrElse(manifest(spark, table))
-        .lastOption.flatMap(_.props)).toMap
-    props.get("graft.store.maxListLag")
+  private def storeMaxListLagMs(spark: SparkSession, snap: Snapshot): Long =
+    snap.properties.get("graft.store.maxListLag")
       .orElse(spark.conf.getOption("spark.graft.store.maxListLag"))
       .map(org.apache.spark.network.util.JavaUtils.timeStringAsMs)
       .getOrElse(0L)
-  }
-
-  /** Point read of version `v`'s marker: does it exist and carry OUR
-    * data dir? Read-after-write consistent on local filesystems and on
-    * every object store in the [[CommitCoordinator]] mapping — the
-    * LIST-lag-proof form of "is my claim visible". */
-  private def markerOwned(spark: SparkSession, table: String, v: Long,
-      unique: String): Boolean =
-    try readSmallFile(spark, s"${commitDir(table)}/$v.commit")
-      .contains(s""""dir":"$unique"""")
-    catch { case _: java.io.FileNotFoundException => false }
 
   /** OPTIMIZE: rewrite every live data directory into ONE compacted
     * directory and commit it as the next version. Readers at or past the
@@ -1525,16 +1347,15 @@ final class VersionedParquetSink(basePath: String,
     // concurrent delete/merge/compaction re-derives from the fresh
     // snapshot (concurrent APPENDS never abort it — they stay visible
     // past the compaction's high-water mark)
-    retryingRewrite(spark, table, "compact", commitKey) { entries =>
+    retryingRewrite(spark, table, "compact", commitKey) { snap =>
       // OPTIMIZE on a clustered table re-clusters (Delta's behavior for
       // clustered tables: no ZORDER BY clause needed)
-      val cluster = clusterColumns(VersionedParquetSink.Constraints
-        .parse(entries.lastOption.flatMap(_.props)).toMap)
-      doCompact(spark, table, entries, commitKey,
-        snap =>
+      val cluster = clusterColumns(snap.properties)
+      doCompact(spark, snap, commitKey,
+        cur =>
           if (cluster.nonEmpty)
-            ZOrder.zOrderedN(snap, cluster, targetFiles.getOrElse(8))
-          else targetFiles.fold(snap)(n => snap.coalesce(n)))
+            ZOrder.zOrderedN(cur, cluster, targetFiles.getOrElse(8))
+          else targetFiles.fold(cur)(n => cur.coalesce(n)))
     }
   }
 
@@ -1550,9 +1371,9 @@ final class VersionedParquetSink(basePath: String,
       cols: Seq[String], numFiles: Int = 8,
       commitKey: Option[String] = None): Long = {
     require(cols.nonEmpty, "optimizeZOrder requires at least one column")
-    retryingRewrite(spark, table, "compact", commitKey)(entries =>
-      doCompact(spark, table, entries, commitKey,
-        snap => ZOrder.zOrderedN(snap, cols, numFiles)))
+    retryingRewrite(spark, table, "compact", commitKey)(snap =>
+      doCompact(spark, snap, commitKey,
+        cur => ZOrder.zOrderedN(cur, cols, numFiles)))
   }
 
   /** OPTIMIZE ... WHERE (Delta's selective OPTIMIZE): fold ONLY the live
@@ -1566,8 +1387,8 @@ final class VersionedParquetSink(basePath: String,
     *
     * Mechanics: the commit carries a `replaces` list (the folded dirs'
     * base names) instead of a `compacts` watermark, so NON-matching
-    * dirs stay live untouched — [[VersionedParquetSink.liveEntries]]
-    * drops exactly the replaced dirs. Live DV masks over the folded
+    * dirs stay live untouched — [[Snapshot.live]] drops exactly the
+    * replaced dirs. Live DV masks over the folded
     * dirs are materialized into the fold (masks over untouched dirs
     * stay live and keep applying); merge-on-read commits are never
     * folded (their `_dv/` masks must keep applying to OTHER dirs).
@@ -1583,18 +1404,15 @@ final class VersionedParquetSink(basePath: String,
       targetFiles: Option[Int] = None,
       zorderBy: Seq[String] = Nil,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "compact", commitKey) { entries =>
-      val baseV = entries.last.version
-      val live = liveEntries(entries)
+    retryingRewrite(spark, table, "compact", commitKey) { snap =>
       // foldable = plain data commits (appends and earlier selective
       // folds). The newest FULL compaction keeps its watermark role;
       // merge-on-read dirs carry masks that must keep applying.
-      val foldable = live.filter(e =>
-        e.compacts.isEmpty && !VersionedParquetSink.isMergeOnRead(e))
-      val logical = entries.lastOption.flatMap(_.schemaDdl).map(ddl =>
+      val foldable = snap.live
+        .filter(e => e.compacts.isEmpty && !e.isMergeOnRead)
+      val logical = snap.schemaDdl.map(ddl =>
         StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-      val mapping = VersionedParquetSink.ColumnMapping.parse(
-        entries.lastOption.flatMap(_.mapping))
+      val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
       val physSchema = logical.map(
         VersionedParquetSink.ColumnMapping.physicalSchema(_, mapping))
       val pred = logical.flatMap(
@@ -1613,9 +1431,9 @@ final class VersionedParquetSink(basePath: String,
           case _ => true // no stats / unresolvable predicate: may match
         }
       }
-      if (selected.size < 2) baseV // nothing to fold; no commit
-      else foldSelected(spark, table, entries, selected, Nil,
-        targetFiles, zorderBy, commitKey)
+      if (selected.size < 2) snap.version // nothing to fold; no commit
+      else foldSelected(spark, snap, selected, Nil, targetFiles, zorderBy,
+        commitKey)
     }
 
   /** REORG TABLE ... APPLY (PURGE) (Delta parity): materialize every
@@ -1631,11 +1449,10 @@ final class VersionedParquetSink(basePath: String,
   def reorgPurge(spark: SparkSession, table: String,
       targetFiles: Option[Int] = None,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "compact", commitKey) { entries =>
-      val baseV = entries.last.version
-      val live = liveEntries(entries)
-      val dvs = live.filter(VersionedParquetSink.isMergeOnRead)
-      if (dvs.isEmpty) baseV
+    retryingRewrite(spark, table, "compact", commitKey) { snap =>
+      val live = snap.live
+      val dvs = live.filter(_.isMergeOnRead)
+      if (dvs.isEmpty) snap.version
       else {
         // dirs targeted by any live mask: the commit-dir part of the
         // masked-file set (one string per masked file)
@@ -1645,16 +1462,13 @@ final class VersionedParquetSink(basePath: String,
         // fold: data-bearing live dirs the masks target (the newest
         // full compaction included — its watermark role survives the
         // dir replacement) + every update commit's own data dir
-        val folded = live.filter(e =>
-          !VersionedParquetSink.isDv(e) &&
-            (targeted.contains(e.dir.split('/').last) ||
-              e.op.contains("update")))
-        val pureDvDirs = dvs.filter(VersionedParquetSink.isDv)
-          .map(_.dir.split('/').last)
+        val folded = live.filter(e => !e.isDv &&
+          (targeted.contains(e.dir.split('/').last) || e.op.contains("update")))
+        val pureDvDirs = dvs.filter(_.isDv).map(_.dir.split('/').last)
         if (folded.nonEmpty)
           // retire ALL mask commits: every mask's targets are in the fold
-          foldSelected(spark, table, entries, folded, pureDvDirs,
-            targetFiles, Nil, commitKey)
+          foldSelected(spark, snap, folded, pureDvDirs, targetFiles, Nil,
+            commitKey)
         else {
           // every live mask targets only already-replaced dirs (stale
           // no-op masks): nothing to rewrite — commit an EMPTY data dir
@@ -1663,18 +1477,12 @@ final class VersionedParquetSink(basePath: String,
           val unique = s"d-${UUID.randomUUID()}"
           fs(spark, tableDir(table))
             .mkdirs(new Path(s"${tableDir(table)}/$unique"))
-          commitLoop(spark, table, unique, commitKey, compacts = None,
-            schemaDdl = entries.lastOption.flatMap(_.schemaDdl)
-              .getOrElse(readAt(spark, table, baseV).schema.toDDL),
-            cleanupOnKeyLoss = true,
-            requireBase = Some(baseV), rewriteOnlyConflict = true,
-            op = Some("compact"), statsJson = None,
-            replaces = pureDvDirs)
-            .orElse(commitKey.flatMap(k =>
-              manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-            .getOrElse(throw new IllegalStateException(
-              s"reorg purge of $table lost the commit race with no " +
-                "keyed winner"))
+          claimedOrKeyed(spark, table, commitKey, "reorg purge")(
+            commitLoop(spark, snap, unique, commitKey, compacts = None,
+              schemaDdl = schemaOf(spark, snap).toDDL,
+              cleanupOnKeyLoss = true, pinned = true,
+              rewriteOnlyConflict = true, op = Some("compact"),
+              replaces = pureDvDirs))
         }
       }
     }
@@ -1682,68 +1490,48 @@ final class VersionedParquetSink(basePath: String,
   /** Shared selective-fold body: scan `folded`'s dirs with every live
     * mask applied, lay out, and commit with
     * `replaces = folded ++ alsoReplaces`. */
-  private def foldSelected(spark: SparkSession, table: String,
-      entries: Seq[Commit], folded: Seq[Commit],
-      alsoReplaces: Seq[String], targetFiles: Option[Int],
-      zorderBy: Seq[String], commitKey: Option[String]): Long = {
-    val baseV = entries.last.version
-    val mapping = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
+  private def foldSelected(spark: SparkSession, snap: Snapshot,
+      folded: Seq[Commit], alsoReplaces: Seq[String],
+      targetFiles: Option[Int], zorderBy: Seq[String],
+      commitKey: Option[String]): Long = {
+    val table = snap.table
+    val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
     // pre-evolution files read the later columns as null
     val content = spark.baseRelationToDataFrame(GraftRelation.forDirs(
-      spark, tableDir(table), entries, folded, table,
-      GraftRelation.masks(spark, tableDir(table), liveEntries(entries))))
+      spark, tableDir(table), snap, folded,
+      GraftRelation.masks(spark, tableDir(table), snap.live)))
     val out =
       if (zorderBy.nonEmpty)
         ZOrder.zOrderedN(content, zorderBy, targetFiles.getOrElse(8))
       else targetFiles.fold(content)(n => content.coalesce(n))
-    val unique = s"d-${UUID.randomUUID()}"
-    val stats = StatsWrite.writeWithStats(toPhysical(out, mapping),
-      s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
-        .physicalSchema(content.schema, mapping))
-    commitLoop(spark, table, unique, commitKey, compacts = None,
-      schemaDdl = entries.lastOption.flatMap(_.schemaDdl)
-        .getOrElse(content.schema.toDDL),
-      cleanupOnKeyLoss = true,
-      requireBase = Some(baseV), rewriteOnlyConflict = true,
-      op = Some("compact"),
-      statsJson = Some(stats),
-      replaces = folded.map(_.dir.split('/').last) ++ alsoReplaces)
-      .orElse(commitKey.flatMap(k =>
-        manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-      .getOrElse(throw new IllegalStateException(
-        s"selective compaction of $table lost the commit race with " +
-          "no keyed winner"))
+    val (unique, stats) = writeDir(table, out, mapping, content.schema)
+    claimedOrKeyed(spark, table, commitKey, "selective compaction")(
+      commitLoop(spark, snap, unique, commitKey, compacts = None,
+        schemaDdl = snap.schemaDdl.getOrElse(content.schema.toDDL),
+        cleanupOnKeyLoss = true, pinned = true, rewriteOnlyConflict = true,
+        op = Some("compact"), statsJson = Some(stats),
+        replaces = folded.map(_.dir.split('/').last) ++ alsoReplaces))
   }
 
-  private def doCompact(spark: SparkSession, table: String,
-      entries: Seq[Commit], commitKey: Option[String],
-      layout: DataFrame => DataFrame): Long = {
-    val maxV = entries.last.version
-    val mapping = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
-    val snap = readAt(spark, table, maxV)
-    val out = layout(snap)
-    val unique = s"d-${UUID.randomUUID()}"
-    val stats = StatsWrite.writeWithStats(toPhysical(out, mapping),
-      s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
-        .physicalSchema(snap.schema, mapping))
-    // `compacts = maxV` records exactly which versions were folded in —
-    // an append that commits while the rewrite runs gets a version > maxV
-    // and stays visible alongside the compacted dir.
-    commitLoop(spark, table, unique, commitKey, compacts = Some(maxV),
-      schemaDdl = entries.lastOption.flatMap(_.schemaDdl)
-        .getOrElse(snap.schema.toDDL),
-      cleanupOnKeyLoss = true, // same-key racer won: drop our rewrite
-      requireBase = Some(maxV), rewriteOnlyConflict = true,
-      op = Some("compact"),
-      statsJson = Some(stats))
-      .orElse(commitKey.flatMap(k =>
-        manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-      .getOrElse(throw new IllegalStateException(
-        s"compaction of $table lost the commit race with no keyed winner"))
-    // NOT latestVersion(): an append racing past the compaction would
-    // otherwise be reported as "the compaction's version"
+  private def doCompact(spark: SparkSession, snap: Snapshot,
+      commitKey: Option[String], layout: DataFrame => DataFrame): Long = {
+    val table = snap.table
+    val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
+    val cur = content(spark, snap)
+    val out = layout(cur)
+    val (unique, stats) = writeDir(table, out, mapping, cur.schema)
+    // `compacts = snap.version` records exactly which versions were
+    // folded in — an append that commits while the rewrite runs gets a
+    // later version and stays visible alongside the compacted dir. The
+    // result is the compaction's own version, NOT the latest: an append
+    // racing past the compaction must not be reported as it.
+    claimedOrKeyed(spark, table, commitKey, "compaction")(
+      commitLoop(spark, snap, unique, commitKey,
+        compacts = Some(snap.version),
+        schemaDdl = snap.schemaDdl.getOrElse(cur.schema.toDDL),
+        cleanupOnKeyLoss = true, // same-key racer won: drop our rewrite
+        pinned = true, rewriteOnlyConflict = true, op = Some("compact"),
+        statsJson = Some(stats)))
   }
 
   /** DELETE (Delta `DELETE FROM t WHERE cond` parity): copy-on-write —
@@ -1766,8 +1554,8 @@ final class VersionedParquetSink(basePath: String,
   def delete(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       commitKey: Option[String] = None): Long =
-    rewriteWith(spark, table, "delete", commitKey,
-      snap => snap.filter(!coalesce(condition, lit(false))))
+    rewriteWith(spark, table, "delete", commitKey)((_, cur) =>
+      cur.filter(!coalesce(condition, lit(false))))
 
   /** DELETE via a deletion vector (Delta's merge-on-read DVs): instead of
     * rewriting the live set, commits a parquet of `(path, pos)` row
@@ -1794,7 +1582,7 @@ final class VersionedParquetSink(basePath: String,
       condition: org.apache.spark.sql.Column,
       commitKey: Option[String] = None): Long =
     maskCommit(spark, table, commitKey,
-      snap => snap.filter(coalesce(condition, lit(false))))
+      cur => cur.filter(coalesce(condition, lit(false))))
 
   /** [[deleteMatching]] (the GDPR/right-to-erasure shape) as a deletion
     * vector: masks every row whose `keyCols` match a `keys` row via a
@@ -1805,8 +1593,8 @@ final class VersionedParquetSink(basePath: String,
       commitKey: Option[String] = None): Long = {
     require(keyCols.nonEmpty,
       "deleteMatchingVectored requires at least one key column")
-    maskCommit(spark, table, commitKey, snap =>
-      snap.join(keys.select(keyCols.map(col): _*).distinct(),
+    maskCommit(spark, table, commitKey, cur =>
+      cur.join(keys.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_semi"))
   }
 
@@ -1816,9 +1604,9 @@ final class VersionedParquetSink(basePath: String,
   private def maskCommit(spark: SparkSession, table: String,
       commitKey: Option[String],
       matching: DataFrame => DataFrame): Long =
-    retryingRewrite(spark, table, "dv", commitKey) { entries =>
-      val baseV = entries.last.version
-      val dv = matching(withPosCols(readAt(spark, table, baseV)))
+    retryingRewrite(spark, table, "dv", commitKey) { snap =>
+      val cur = content(spark, snap)
+      val dv = matching(withPosCols(cur))
         .select(col("__dv_path").as("path"), col("__dv_pos").as("pos"))
       val unique = s"d-${UUID.randomUUID()}"
       // globally sorted by (path, pos): executor-side mask resolution
@@ -1826,16 +1614,10 @@ final class VersionedParquetSink(basePath: String,
       // that into parquet row-group skipping
       dv.sort("path", "pos").write.mode(SaveMode.ErrorIfExists)
         .parquet(s"${tableDir(table)}/$unique")
-      commitLoop(spark, table, unique, commitKey,
-        compacts = None,
-        schemaDdl = entries.last.schemaDdl.getOrElse(
-          readAt(spark, table, baseV).schema.toDDL),
-        cleanupOnKeyLoss = true, requireBase = Some(baseV),
-        op = Some("dv"), statsJson = None)
-        .orElse(commitKey.flatMap(k =>
-          manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-        .getOrElse(throw new IllegalStateException(
-          s"dv-delete of $table lost the commit race with no keyed winner"))
+      claimedOrKeyed(spark, table, commitKey, "dv-delete")(
+        commitLoop(spark, snap, unique, commitKey, compacts = None,
+          schemaDdl = snap.schemaDdl.getOrElse(cur.schema.toDDL),
+          cleanupOnKeyLoss = true, pinned = true, op = Some("dv")))
     }
 
   /** UPDATE via merge-on-read (Delta's DV-backed `UPDATE ... SET`):
@@ -1859,44 +1641,40 @@ final class VersionedParquetSink(basePath: String,
       set: Map[String, org.apache.spark.sql.Column],
       commitKey: Option[String] = None): Long = {
     require(set.nonEmpty, "updateVectored requires at least one SET column")
-    retryingRewrite(spark, table, "update", commitKey) { entries =>
-      val baseV = entries.last.version
-      val snap = withPosCols(readAt(spark, table, baseV))
-      val dataCols = snap.columns
+    retryingRewrite(spark, table, "update", commitKey) { snap =>
+      val plain = content(spark, snap)
+      val cur = withPosCols(plain)
+      val dataCols = cur.columns
         .filterNot(c => c == "__dv_path" || c == "__dv_pos")
       set.keys.foreach(k => require(dataCols.contains(k),
         s"updateVectored: SET column '$k' does not exist in $table " +
           s"(${dataCols.mkString(", ")}); UPDATE never changes schema"))
       // matched drives both payloads — cache for the two writes
-      val matched = snap.filter(coalesce(condition, lit(false))).cache()
+      val matched = cur.filter(coalesce(condition, lit(false))).cache()
       try {
         val unique = s"d-${UUID.randomUUID()}"
-        val mapping = VersionedParquetSink.ColumnMapping.parse(
-          entries.lastOption.flatMap(_.mapping))
+        val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
         // generated columns: SET may not target one directly; their
         // values are RECOMPUTED after the update (Delta's rule — the
         // update may change their source columns)
-        val gens = VersionedParquetSink.Constraints.parse(
-          entries.lastOption.flatMap(_.generated))
+        val gens = VersionedParquetSink.Constraints.parse(snap.generated)
         gens.foreach { case (g, _) => require(!set.contains(g),
           s"updateVectored: '$g' is a generated column of '$table'; " +
             "update its source columns instead") }
         val updated0 = set
           .foldLeft(matched) { case (df, (c, e)) => df.withColumn(c, e) }
-        val schemaTypes = StructType.fromDDL(entries.last.schemaDdl
-          .getOrElse(readAt(spark, table, baseV).schema.toDDL))
+        val ddl = snap.schemaDdl.getOrElse(plain.schema.toDDL)
+        val schemaTypes = StructType.fromDDL(ddl)
         val updated = gens.foldLeft(updated0) { case (df, (g, sql)) =>
           df.withColumn(g,
             org.apache.spark.sql.functions.expr(sql).cast(
               schemaTypes.fields.find(_.name == g).get.dataType))
         }
           .select(dataCols.map(col): _*)
-        val ddl = entries.last.schemaDdl.getOrElse(
-          readAt(spark, table, baseV).schema.toDDL)
         // updated images must still satisfy the CHECK constraints
         val stats = StatsWrite.writeWithStats(
           toPhysical(constraintGuard(updated,
-            entries.lastOption.flatMap(_.constraints), table), mapping),
+            snap.constraints, table), mapping),
           s"${tableDir(table)}/$unique",
           VersionedParquetSink.ColumnMapping.physicalSchema(
             StructType(StructType.fromDDL(ddl)
@@ -1906,15 +1684,10 @@ final class VersionedParquetSink(basePath: String,
           .sort("path", "pos") // row-group-skippable executor mask reads
           .write.mode(SaveMode.ErrorIfExists)
           .parquet(s"${tableDir(table)}/$unique/_dv")
-        commitLoop(spark, table, unique, commitKey,
-          compacts = None, schemaDdl = ddl,
-          cleanupOnKeyLoss = true, requireBase = Some(baseV),
-          op = Some("update"),
-          statsJson = Some(stats))
-          .orElse(commitKey.flatMap(k =>
-            manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-          .getOrElse(throw new IllegalStateException(
-            s"update of $table lost the commit race with no keyed winner"))
+        claimedOrKeyed(spark, table, commitKey, "update")(
+          commitLoop(spark, snap, unique, commitKey, compacts = None,
+            schemaDdl = ddl, cleanupOnKeyLoss = true, pinned = true,
+            op = Some("update"), statsJson = Some(stats)))
       } finally { matched.unpersist(); () }
     }
   }
@@ -1927,8 +1700,8 @@ final class VersionedParquetSink(basePath: String,
   def deleteMatching(spark: SparkSession, table: String, keys: DataFrame,
       keyCols: Seq[String], commitKey: Option[String] = None): Long = {
     require(keyCols.nonEmpty, "deleteMatching requires at least one key column")
-    rewriteWith(spark, table, "delete", commitKey, snap =>
-      snap.join(keys.select(keyCols.map(col): _*).distinct(),
+    rewriteWith(spark, table, "delete", commitKey)((_, cur) =>
+      cur.join(keys.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_anti"))
   }
 
@@ -1971,23 +1744,22 @@ final class VersionedParquetSink(basePath: String,
       require(dupKeys == 0,
         s"merge into '$table': updates carry duplicate rows for some " +
           s"(${keyCols.mkString(", ")}) key — ambiguous merge")
-      val latest = manifest(spark, table).lastOption
-      val cons = latest.flatMap(_.constraints)
-      rewriteWith(spark, table, "merge", commitKey, { snap =>
+      rewriteWith(spark, table, "merge", commitKey) { (snap, cur) =>
         // generated columns: upserts may omit them (computed) or carry
         // them (validated per row) — same rules as append
-        val completed = completeGenerated(upserts,
-          latest.flatMap(_.generated), Some(snap.schema), table)
-        SchemaCheck.enforceAppend(table, Some(snap.schema), completed.schema)
+        val completed = completeGenerated(upserts, snap.generated,
+          Some(cur.schema), table)
+        SchemaCheck.enforceAppend(table, Some(cur.schema), completed.schema)
         val touched = upserts.select(keyCols.map(col): _*)
           .unionByName(deleteKeys.select(keyCols.map(col): _*))
           .distinct()
         // existing rows already satisfy the constraints; only the
         // incoming upserts need the guard
-        snap.join(touched, keyCols, "left_anti")
+        cur.join(touched, keyCols, "left_anti")
           .unionByName(constraintGuard(
-            completed.select(snap.columns.map(col): _*), cons, table))
-      })
+            completed.select(cur.columns.map(col): _*), snap.constraints,
+            table))
+      }
     } finally if (!preCached) { upserts.unpersist(); () }
   }
 
@@ -1995,7 +1767,7 @@ final class VersionedParquetSink(basePath: String,
     * none were ever added. */
   def constraintsOf(spark: SparkSession, table: String): Map[String, String] =
     VersionedParquetSink.Constraints.parse(
-      manifest(spark, table).lastOption.flatMap(_.constraints)).toMap
+      readLog(spark, table).constraints).toMap
 
   /** ALTER TABLE ADD CONSTRAINT (Delta CHECK-constraint parity): adds a
     * named SQL predicate that every FUTURE write must satisfy, after
@@ -2011,18 +1783,16 @@ final class VersionedParquetSink(basePath: String,
   def addConstraint(spark: SparkSession, table: String, name: String,
       sqlExpr: String, commitKey: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.expr
-    retryingRewrite(spark, table, "constraint", commitKey) { entries =>
-      val baseV = entries.last.version
-      val existing = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.constraints))
+    retryingRewrite(spark, table, "constraint", commitKey) { snap =>
+      val existing = VersionedParquetSink.Constraints.parse(snap.constraints)
       require(!existing.exists(_._1 == name),
         s"constraint '$name' already exists on '$table'")
-      val snap = readAt(spark, table, baseV)
-      val bad = snap.filter(!coalesce(expr(sqlExpr), lit(true))).limit(1).count()
+      val cur = content(spark, snap)
+      val bad = cur.filter(!coalesce(expr(sqlExpr), lit(true))).limit(1).count()
       require(bad == 0,
         s"cannot add CHECK constraint '$name' to '$table': existing rows " +
           s"violate ($sqlExpr)")
-      commitMetadata(spark, table, commitKey, baseV, snap.schema,
+      commitMetadata(spark, snap, commitKey, cur.schema,
         Some(VersionedParquetSink.Constraints.render(
           existing :+ (name -> sqlExpr))))
     }
@@ -2032,15 +1802,12 @@ final class VersionedParquetSink(basePath: String,
     * metadata commit. Throws if the name is unknown. */
   def dropConstraint(spark: SparkSession, table: String, name: String,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "constraint", commitKey) { entries =>
-      val baseV = entries.last.version
-      val existing = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.constraints))
+    retryingRewrite(spark, table, "constraint", commitKey) { snap =>
+      val existing = VersionedParquetSink.Constraints.parse(snap.constraints)
       require(existing.exists(_._1 == name),
         s"no constraint '$name' on '$table' " +
           s"(have: ${existing.map(_._1).mkString(", ")})")
-      commitMetadata(spark, table, commitKey, baseV,
-        readAt(spark, table, baseV).schema,
+      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
         Some(VersionedParquetSink.Constraints.render(
           existing.filterNot(_._1 == name))))
     }
@@ -2051,7 +1818,7 @@ final class VersionedParquetSink(basePath: String,
     * the set as of the pinned version. */
   def propertiesOf(spark: SparkSession, table: String): Map[String, String] =
     VersionedParquetSink.Constraints.parse(
-      manifest(spark, table).lastOption.flatMap(_.props)).toMap
+      readLog(spark, table).props).toMap
 
   /** ALTER TABLE SET TBLPROPERTIES: merges `props` into the current
     * set via a metadata-only commit (last writer wins per key).
@@ -2059,12 +1826,10 @@ final class VersionedParquetSink(basePath: String,
   def setProperties(spark: SparkSession, table: String,
       props: Map[String, String],
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "properties", commitKey) { entries =>
-      val baseV = entries.last.version
-      val merged = (VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.props)).toMap ++ props).toSeq
-      commitMetadata(spark, table, commitKey, baseV,
-        readAt(spark, table, baseV).schema, constraints = None,
+    retryingRewrite(spark, table, "properties", commitKey) { snap =>
+      val merged = (snap.properties ++ props).toSeq
+      commitMetadata(spark, snap, commitKey,
+        schemaOf(spark, snap), constraints = None,
         props = Some(VersionedParquetSink.Constraints.render(merged)),
         opName = "properties")
     }
@@ -2074,13 +1839,11 @@ final class VersionedParquetSink(basePath: String,
     * Returns the commit's version. */
   def unsetProperties(spark: SparkSession, table: String,
       keys: Seq[String], commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "properties", commitKey) { entries =>
-      val baseV = entries.last.version
-      val remaining = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.props))
+    retryingRewrite(spark, table, "properties", commitKey) { snap =>
+      val remaining = VersionedParquetSink.Constraints.parse(snap.props)
         .filterNot(kv => keys.contains(kv._1))
-      commitMetadata(spark, table, commitKey, baseV,
-        readAt(spark, table, baseV).schema, constraints = None,
+      commitMetadata(spark, snap, commitKey,
+        schemaOf(spark, snap), constraints = None,
         props = Some(VersionedParquetSink.Constraints.render(remaining)),
         opName = "properties")
     }
@@ -2090,7 +1853,7 @@ final class VersionedParquetSink(basePath: String,
   def generatedColumnsOf(spark: SparkSession,
       table: String): Map[String, String] =
     VersionedParquetSink.Constraints.parse(
-      manifest(spark, table).lastOption.flatMap(_.generated)).toMap
+      readLog(spark, table).generated).toMap
 
   /** Declare an EXISTING column as generated (Delta generated-column
     * parity, writer feature v4): every future write either omits the
@@ -2106,22 +1869,20 @@ final class VersionedParquetSink(basePath: String,
   def setGeneratedColumn(spark: SparkSession, table: String, name: String,
       sqlExpr: String, commitKey: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.expr
-    retryingRewrite(spark, table, "generated", commitKey) { entries =>
-      val baseV = entries.last.version
-      val existing = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.generated))
+    retryingRewrite(spark, table, "generated", commitKey) { snap =>
+      val existing = VersionedParquetSink.Constraints.parse(snap.generated)
       require(!existing.exists(_._1 == name),
         s"column '$name' of '$table' is already generated")
-      val snap = readAt(spark, table, baseV)
-      require(snap.columns.contains(name),
-        s"no column '$name' in '$table' (${snap.columns.mkString(", ")})")
-      val target = snap.schema.fields.find(_.name == name).get.dataType
-      val bad = snap
+      val cur = content(spark, snap)
+      require(cur.columns.contains(name),
+        s"no column '$name' in '$table' (${cur.columns.mkString(", ")})")
+      val target = cur.schema.fields.find(_.name == name).get.dataType
+      val bad = cur
         .filter(!(col(name) <=> expr(sqlExpr).cast(target))).limit(1).count()
       require(bad == 0,
         s"cannot declare '$name' generated on '$table': existing rows " +
           s"differ from ($sqlExpr)")
-      commitMetadata(spark, table, commitKey, baseV, snap.schema,
+      commitMetadata(spark, snap, commitKey, cur.schema,
         constraints = None,
         generated = Some(VersionedParquetSink.Constraints.render(
           existing :+ (name -> sqlExpr))),
@@ -2133,15 +1894,13 @@ final class VersionedParquetSink(basePath: String,
     * data stay; writes just stop computing/validating it). */
   def dropGeneratedColumn(spark: SparkSession, table: String, name: String,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "generated", commitKey) { entries =>
-      val baseV = entries.last.version
-      val existing = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.generated))
+    retryingRewrite(spark, table, "generated", commitKey) { snap =>
+      val existing = VersionedParquetSink.Constraints.parse(snap.generated)
       require(existing.exists(_._1 == name),
         s"column '$name' of '$table' is not generated " +
           s"(generated: ${existing.map(_._1).mkString(", ")})")
-      commitMetadata(spark, table, commitKey, baseV,
-        readAt(spark, table, baseV).schema,
+      commitMetadata(spark, snap, commitKey,
+        schemaOf(spark, snap),
         constraints = None,
         generated = Some(VersionedParquetSink.Constraints.render(
           existing.filterNot(_._1 == name))),
@@ -2153,7 +1912,7 @@ final class VersionedParquetSink(basePath: String,
   def columnMappingOf(spark: SparkSession,
       table: String): Map[String, String] =
     VersionedParquetSink.ColumnMapping.parse(
-      manifest(spark, table).lastOption.flatMap(_.mapping))
+      readLog(spark, table).mapping)
       .map { case (l, e) => l -> e.physical }.toMap
 
   /** ALTER TABLE RENAME COLUMN (Delta column-mapping parity): a
@@ -2168,10 +1927,8 @@ final class VersionedParquetSink(basePath: String,
     * name already exists. Serializable; returns the commit's version. */
   def renameColumn(spark: SparkSession, table: String, oldName: String,
       newName: String, commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "rename_column", commitKey) { entries =>
-      val baseV = entries.last.version
-      val schema = StructType.fromDDL(entries.last.schemaDdl.getOrElse(
-        readAt(spark, table, baseV).schema.toDDL))
+    retryingRewrite(spark, table, "rename_column", commitKey) { snap =>
+      val schema = tableSchema(spark, snap)
       require(schema.fieldNames.contains(oldName),
         s"no column '$oldName' in '$table' (${schema.fieldNames.mkString(", ")})")
       require(!schema.fieldNames.contains(newName),
@@ -2180,29 +1937,27 @@ final class VersionedParquetSink(basePath: String,
         if (f.name == oldName) f.copy(name = newName) else f))
       // a generated column renames WITH its declaration; an expression
       // referencing the old name fails the resolution check below
-      val gens = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.generated))
+      val gens = VersionedParquetSink.Constraints.parse(snap.generated)
       val newGens = gens.map { case (n, sql) =>
         (if (n == oldName) newName else n) -> sql
       }
-      requireConstraintsResolve(spark, table, entries, newSchema, newGens,
+      requireConstraintsResolve(spark, table, snap, newSchema, newGens,
         s"rename column '$oldName' to '$newName'")
-      val mapping = currentOrIdentityMapping(entries, schema)
+      val mapping = currentOrIdentityMapping(snap, schema)
       val renamed = mapping.map { case (l, e) =>
         (if (l == oldName) newName else l) -> e
       }
       // column-name-bearing TBLPROPERTIES follow the rename in the SAME
       // commit (the bloom index keys sidecars on stable PHYSICAL names,
       // so existing sidecars keep pruning under the new logical name)
-      val props = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.props))
+      val props = VersionedParquetSink.Constraints.parse(snap.props)
       val newProps = props.map {
         case (k @ BloomIndex.ColsProp, v) =>
           k -> v.split(',').map(_.trim)
             .map(c => if (c == oldName) newName else c).mkString(",")
         case other => other
       }
-      commitMetadata(spark, table, commitKey, baseV, newSchema,
+      commitMetadata(spark, snap, commitKey, newSchema,
         constraints = None,
         mapping = Some(VersionedParquetSink.ColumnMapping.render(renamed)),
         generated = if (newGens == gens) None
@@ -2221,10 +1976,8 @@ final class VersionedParquetSink(basePath: String,
     * the column or it is the table's last column. */
   def dropColumn(spark: SparkSession, table: String, name: String,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "drop_column", commitKey) { entries =>
-      val baseV = entries.last.version
-      val schema = StructType.fromDDL(entries.last.schemaDdl.getOrElse(
-        readAt(spark, table, baseV).schema.toDDL))
+    retryingRewrite(spark, table, "drop_column", commitKey) { snap =>
+      val schema = tableSchema(spark, snap)
       require(schema.fieldNames.contains(name),
         s"no column '$name' in '$table' (${schema.fieldNames.mkString(", ")})")
       require(schema.fields.length > 1,
@@ -2232,13 +1985,12 @@ final class VersionedParquetSink(basePath: String,
       val newSchema = StructType(schema.fields.filterNot(_.name == name))
       // dropping a generated column drops its declaration; dropping a
       // column another declaration REFERENCES fails resolution below
-      val gens = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.generated))
+      val gens = VersionedParquetSink.Constraints.parse(snap.generated)
       val newGens = gens.filterNot(_._1 == name)
-      requireConstraintsResolve(spark, table, entries, newSchema, newGens,
+      requireConstraintsResolve(spark, table, snap, newSchema, newGens,
         s"drop column '$name'")
-      val mapping = currentOrIdentityMapping(entries, schema)
-      commitMetadata(spark, table, commitKey, baseV, newSchema,
+      val mapping = currentOrIdentityMapping(snap, schema)
+      commitMetadata(spark, snap, commitKey, newSchema,
         constraints = None,
         mapping = Some(VersionedParquetSink.ColumnMapping.render(
           mapping.filterNot(_._1 == name))),
@@ -2257,24 +2009,21 @@ final class VersionedParquetSink(basePath: String,
   def addColumn(spark: SparkSession, table: String, name: String,
       dataType: org.apache.spark.sql.types.DataType,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "add_column", commitKey) { entries =>
-      val baseV = entries.last.version
-      val schema = StructType.fromDDL(entries.last.schemaDdl.getOrElse(
-        readAt(spark, table, baseV).schema.toDDL))
+    retryingRewrite(spark, table, "add_column", commitKey) { snap =>
+      val schema = tableSchema(spark, snap)
       require(!schema.fieldNames.contains(name),
         s"column '$name' already exists in '$table'")
       val newSchema = StructType(schema.fields :+
         org.apache.spark.sql.types.StructField(name, dataType,
           nullable = true))
-      val mapping = VersionedParquetSink.ColumnMapping.parse(
-        entries.lastOption.flatMap(_.mapping))
+      val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
       val newMapping =
         if (mapping.isEmpty) None // mapping stays off until rename/drop
         else Some(VersionedParquetSink.ColumnMapping.render(mapping :+
           (name -> VersionedParquetSink.ColumnMapping.Entry(
             s"col-${UUID.randomUUID()}",
             mapping.map(_._2.id).max + 1))))
-      commitMetadata(spark, table, commitKey, baseV, newSchema,
+      commitMetadata(spark, snap, commitKey, newSchema,
         constraints = None, mapping = newMapping,
         opName = "add_column")
     }
@@ -2303,28 +2052,24 @@ final class VersionedParquetSink(basePath: String,
       startWith: Long = 1L, incrementBy: Long = 1L,
       commitKey: Option[String] = None): Long = {
     require(incrementBy != 0L, "identity INCREMENT BY must be non-zero")
-    retryingRewrite(spark, table, "identity_column", commitKey) { entries =>
-      val baseV = entries.last.version
-      val schema = StructType.fromDDL(entries.last.schemaDdl.getOrElse(
-        readAt(spark, table, baseV).schema.toDDL))
+    retryingRewrite(spark, table, "identity_column", commitKey) { snap =>
+      val schema = tableSchema(spark, snap)
       require(!schema.fieldNames.contains(name),
         s"column '$name' already exists in '$table' — identity columns " +
           "are declared fresh (their values are engine-owned)")
       val newSchema = StructType(schema.fields :+
         org.apache.spark.sql.types.StructField(name,
           org.apache.spark.sql.types.LongType, nullable = true))
-      val mapping = VersionedParquetSink.ColumnMapping.parse(
-        entries.lastOption.flatMap(_.mapping))
+      val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
       val newMapping =
         if (mapping.isEmpty) None
         else Some(VersionedParquetSink.ColumnMapping.render(mapping :+
           (name -> VersionedParquetSink.ColumnMapping.Entry(
             s"col-${UUID.randomUUID()}", mapping.map(_._2.id).max + 1))))
-      val props = VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.props)).toMap
+      val props = snap.properties
       val merged = props + (s"graft.identity.$name" ->
         s"$startWith:$incrementBy:${startWith - incrementBy}")
-      commitMetadata(spark, table, commitKey, baseV, newSchema,
+      commitMetadata(spark, snap, commitKey, newSchema,
         constraints = None, mapping = newMapping,
         props = Some(VersionedParquetSink.Constraints.render(
           merged.toSeq)),
@@ -2332,19 +2077,13 @@ final class VersionedParquetSink(basePath: String,
     }
   }
 
-  /** Parsed identity declarations: column -> (start, step, highWater). */
-  private def identityDecls(
-      props: Map[String, String]): Map[String, (Long, Long, Long)] =
-    VersionedParquetSink.identityDecls(props)
-
   /** The current mapping, or — at first rename/drop — the identity
     * mapping that freezes every column's physical name at its current
     * one (consistent with every file already written). */
-  private def currentOrIdentityMapping(entries: Seq[Commit],
+  private def currentOrIdentityMapping(snap: Snapshot,
       schema: StructType):
       Seq[(String, VersionedParquetSink.ColumnMapping.Entry)] = {
-    val existing = VersionedParquetSink.ColumnMapping.parse(
-      entries.lastOption.flatMap(_.mapping))
+    val existing = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
     if (existing.nonEmpty) existing
     else VersionedParquetSink.ColumnMapping.identity(schema)
   }
@@ -2355,7 +2094,7 @@ final class VersionedParquetSink(basePath: String,
     * ALTER for the same reason). Resolution is the real analyzer's, on
     * an empty frame. */
   private def requireConstraintsResolve(spark: SparkSession, table: String,
-      entries: Seq[Commit], newSchema: StructType,
+      snap: Snapshot, newSchema: StructType,
       newGens: Seq[(String, String)], what: String): Unit = {
     import org.apache.spark.sql.functions.expr
     val dummy = spark.createDataFrame(
@@ -2367,8 +2106,7 @@ final class VersionedParquetSink(basePath: String,
           s"cannot $what on '$table': $kind '$n' references it — " +
             "drop it first")
       }
-    VersionedParquetSink.Constraints.parse(
-        entries.lastOption.flatMap(_.constraints))
+    VersionedParquetSink.Constraints.parse(snap.constraints)
       .foreach { case (n, sql) => check("CHECK constraint", n,
         dummy.filter(expr(sql)).queryExecution.analyzed) }
     // a generation expression is a value, not a predicate: resolve via
@@ -2382,28 +2120,25 @@ final class VersionedParquetSink(basePath: String,
     * and/or column mapping + schema): the dir is an empty parquet write
     * (so every reader/vacuum invariant holds unchanged), the marker
     * carries the new metadata. */
-  private def commitMetadata(spark: SparkSession, table: String,
-      commitKey: Option[String], baseV: Long, schema: StructType,
+  private def commitMetadata(spark: SparkSession, snap: Snapshot,
+      commitKey: Option[String], schema: StructType,
       constraints: Option[Option[String]],
       mapping: Option[Option[String]] = None,
       generated: Option[Option[String]] = None,
       props: Option[Option[String]] = None,
       opName: String = "constraint"): Long = {
+    val table = snap.table
     val unique = s"d-${UUID.randomUUID()}"
     // the commit's data dir exists (every reader/vacuum invariant over
     // live dirs holds unchanged) but holds NO files — truly metadata-
     // only: explicit-schema parquet scans skip file-less dirs
     fs(spark, tableDir(table)).mkdirs(new Path(s"${tableDir(table)}/$unique"))
-    commitLoop(spark, table, unique, commitKey,
-      compacts = None, schemaDdl = schema.toDDL,
-      cleanupOnKeyLoss = true, requireBase = Some(baseV),
-      op = Some(opName), statsJson = None,
-      newConstraints = constraints, newMapping = mapping,
-      newGenerated = generated, newProps = props)
-      .orElse(commitKey.flatMap(k =>
-        manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-      .getOrElse(throw new IllegalStateException(
-        s"$opName change on $table lost the commit race with no keyed winner"))
+    claimedOrKeyed(spark, table, commitKey, s"$opName change")(
+      commitLoop(spark, snap, unique, commitKey,
+        compacts = None, schemaDdl = schema.toDDL,
+        cleanupOnKeyLoss = true, pinned = true, op = Some(opName),
+        newConstraints = constraints, newMapping = mapping,
+        newGenerated = generated, newProps = props))
   }
 
   /** Fuse the table's CHECK constraints into a write as a per-row guard:
@@ -2433,60 +2168,71 @@ final class VersionedParquetSink(basePath: String,
     * delete/merge; returns the committed version. */
   def restore(spark: SparkSession, table: String, toVersion: Long,
       commitKey: Option[String] = None): Long =
-    retryingRewrite(spark, table, "restore", commitKey) { entries =>
-      require(entries.exists(_.version <= toVersion),
-        s"no committed versions <= $toVersion for $table")
-      val baseV = entries.last.version
-      val atTo = entries.filter(_.version <= toVersion)
-      val restoredDdl = atTo.lastOption.flatMap(_.schemaDdl)
+    retryingRewrite(spark, table, "restore", commitKey) { snap =>
+      val atTo = snap.upTo(toVersion)
+      require(atTo.nonEmpty, s"no committed versions <= $toVersion for $table")
       // RESTORE also restores the column MAPPING and generated-column
       // declarations as of toVersion: both bind to the restored schema's
       // columns (CURRENT CHECK constraints are kept — they are guards on
       // future writes, not schema metadata; Delta draws the same line)
-      val restoredMapJson = atTo.lastOption.flatMap(_.mapping)
-      val restoredMap =
-        VersionedParquetSink.ColumnMapping.parse(restoredMapJson)
-      val out = readAt(spark, table, toVersion)
-      val unique = s"d-${UUID.randomUUID()}"
-      val stats = StatsWrite.writeWithStats(toPhysical(out, restoredMap),
-        s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
-          .physicalSchema(out.schema, restoredMap))
-      commitLoop(spark, table, unique, commitKey,
-        compacts = Some(baseV),
-        schemaDdl = restoredDdl.getOrElse(out.schema.toDDL),
-        cleanupOnKeyLoss = true, requireBase = Some(baseV),
-        op = Some("restore"),
-        statsJson = Some(stats),
-        newMapping = Some(restoredMapJson),
-        newGenerated = Some(atTo.lastOption.flatMap(_.generated)))
-        .orElse(commitKey.flatMap(k =>
-          manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-        .getOrElse(throw new IllegalStateException(
-          s"restore of $table lost the commit race with no keyed winner"))
+      val restoredMap = VersionedParquetSink.ColumnMapping.parse(atTo.mapping)
+      val out = content(spark, atTo)
+      val (unique, stats) = writeDir(table, out, restoredMap, out.schema)
+      claimedOrKeyed(spark, table, commitKey, "restore")(
+        commitLoop(spark, snap, unique, commitKey,
+          compacts = Some(snap.version),
+          schemaDdl = atTo.schemaDdl.getOrElse(out.schema.toDDL),
+          cleanupOnKeyLoss = true, pinned = true, op = Some("restore"),
+          statsJson = Some(stats), newMapping = Some(atTo.mapping),
+          newGenerated = Some(atTo.generated)))
     }
 
-  /** Optimistic-retry scaffold shared by compact/delete/merge: re-reads
-    * the manifest each attempt, short-circuits keyed replays to the
-    * original version, and retries `body` from the fresh manifest when a
-    * rewrite-conflict abort escapes — with a bounded livelock guard. */
+  /** The table's content as of `snap`: its live dirs, live masks
+    * applied (what [[readAt]] serves for the snapshot's version). */
+  private def content(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.baseRelationToDataFrame(
+      GraftRelation(spark, tableDir(snap.table), snap))
+
+  /** The schema [[content]] reads with, without planning a scan. */
+  private def schemaOf(spark: SparkSession, snap: Snapshot): StructType =
+    GraftRelation.logicalSchema(spark, tableDir(snap.table), snap)
+
+  /** The committed schema as written (nullability kept), or — for
+    * markers older than commit schemas — the data files' schema. */
+  private def tableSchema(spark: SparkSession, snap: Snapshot): StructType =
+    snap.schemaDdl.map(StructType.fromDDL).getOrElse(schemaOf(spark, snap))
+
+  /** The version a rewrite committed — or, when it lost its claim to a
+    * same-key racer, the racer's (a replay, not a failure). */
+  private def claimedOrKeyed(spark: SparkSession, table: String,
+      commitKey: Option[String], what: String)(claimed: Option[Long]): Long =
+    claimed.orElse(commitKey.flatMap(readLog(spark, table).versionOf))
+      .getOrElse(throw new IllegalStateException(
+        s"$what of $table lost the commit race with no keyed winner"))
+
+  /** Optimistic-retry scaffold shared by compact/delete/merge: reads the
+    * log each attempt (the first may reuse the caller's read), short-
+    * circuits keyed replays to the original version, and retries `body`
+    * from a fresh read when a rewrite-conflict abort escapes — with a
+    * bounded livelock guard. */
   private def retryingRewrite(spark: SparkSession, table: String,
-      opName: String, commitKey: Option[String])(
-      body: Seq[Commit] => Long): Long = {
+      opName: String, commitKey: Option[String],
+      first: Option[Snapshot] = None)(body: Snapshot => Long): Long = {
     val maxAttempts = 5
     var attempt = 0
+    var reuse = first
     while (true) {
-      val entries = manifest(spark, table)
-      require(entries.nonEmpty, s"no committed versions for $table: cannot $opName")
-      val replayed = commitKey.flatMap(k =>
-        entries.find(_.key.contains(k)).map(_.version))
-      replayed.foreach(v => return v)
+      val snap = reuse.getOrElse(readLog(spark, table))
+      reuse = None
+      require(snap.nonEmpty, s"no committed versions for $table: cannot $opName")
+      commitKey.flatMap(snap.versionOf).foreach(v => return v)
       try {
-        val v = body(entries)
+        val v = body(snap)
         // every rewrite/metadata path funnels here: OPTIMIZE/REORG
         // outputs get their bloom sidecars without waiting for the next
         // append, and SET TBLPROPERTIES enabling the index backfills
-        // immediately (no-op probe for un-indexed tables)
-        maybeBloom(spark, table, propertiesOf(spark, table))
+        // immediately (one log read; no-op for un-indexed tables)
+        bloomBestEffort(spark, table)
         return v
       } catch {
         case e: VersionedParquetSink.ConcurrentRewriteException =>
@@ -2497,10 +2243,6 @@ final class VersionedParquetSink(basePath: String,
     -1L // unreachable
   }
 
-  /** The shared copy-on-write loop: derive the new table content from the
-    * current snapshot, write it to a unique dir, commit with
-    * `compacts = baseVersion` (supersedes what it was derived from), and
-    * retry from a FRESH snapshot when the serializability check aborts. */
   /** Serializable read-modify-write for engine-internal maintenance
     * (SampleIndex.compact): derives the new content from the CURRENT
     * snapshot via `transform` and, when a concurrent commit wins the
@@ -2510,31 +2252,26 @@ final class VersionedParquetSink(basePath: String,
   private[engine] def rewriteSnapshot(spark: SparkSession, table: String,
       opName: String, commitKey: Option[String] = None)(
       transform: DataFrame => DataFrame): Long =
-    rewriteWith(spark, table, opName, commitKey, transform)
+    rewriteWith(spark, table, opName, commitKey)((_, cur) => transform(cur))
 
+  /** The shared copy-on-write loop: derive the new table content from the
+    * current snapshot, write it to a unique dir, commit with
+    * `compacts = <snapshot version>` (supersedes what it was derived
+    * from), and retry from a FRESH snapshot when the serializability
+    * check aborts. */
   private def rewriteWith(spark: SparkSession, table: String, opName: String,
-      commitKey: Option[String],
-      transform: DataFrame => DataFrame): Long =
-    retryingRewrite(spark, table, opName, commitKey) { entries =>
-      val baseV = entries.last.version
-      val mapping = VersionedParquetSink.ColumnMapping.parse(
-        entries.lastOption.flatMap(_.mapping))
-      val out = transform(readAt(spark, table, baseV))
-      val unique = s"d-${UUID.randomUUID()}"
-      val stats = StatsWrite.writeWithStats(toPhysical(out, mapping),
-        s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
-          .physicalSchema(out.schema, mapping))
-      commitLoop(spark, table, unique, commitKey,
-        compacts = Some(baseV),
-        schemaDdl = entries.last.schemaDdl.getOrElse(out.schema.toDDL),
-        cleanupOnKeyLoss = true, requireBase = Some(baseV),
-        op = Some(opName),
-        statsJson = Some(stats))
-        // None = a same-key racer committed first; report its version
-        .orElse(commitKey.flatMap(k =>
-          manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-        .getOrElse(throw new IllegalStateException(
-          s"$opName of $table lost the commit race with no keyed winner"))
+      commitKey: Option[String])(
+      transform: (Snapshot, DataFrame) => DataFrame): Long =
+    retryingRewrite(spark, table, opName, commitKey) { snap =>
+      val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
+      val out = transform(snap, content(spark, snap))
+      val (unique, stats) = writeDir(table, out, mapping, out.schema)
+      claimedOrKeyed(spark, table, commitKey, opName)(
+        commitLoop(spark, snap, unique, commitKey,
+          compacts = Some(snap.version),
+          schemaDdl = snap.schemaDdl.getOrElse(out.schema.toDDL),
+          cleanupOnKeyLoss = true, pinned = true, op = Some(opName),
+          statsJson = Some(stats)))
     }
 
   /** Change-data-feed between two versions (Delta CDF parity): the rows
@@ -2557,10 +2294,10 @@ final class VersionedParquetSink(basePath: String,
   def changesBetween(spark: SparkSession, table: String, fromV: Long,
       toV: Long): DataFrame = {
     require(fromV <= toV, s"changesBetween: fromV $fromV > toV $toV")
-    val entries = manifest(spark, table)
-    val upToTo = entries.filter(_.version <= toV)
+    val snap = readLog(spark, table)
+    val upToTo = snap.upTo(toV)
     require(upToTo.nonEmpty, s"no committed versions <= $toV for $table")
-    val range = entries.filter(e => e.version > fromV && e.version <= toV)
+    val range = upToTo.entries.filter(_.version > fromV)
     def withType(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t))
     // a mask-carrying commit (DV delete / merge-on-read update) CHANGES
@@ -2571,18 +2308,18 @@ final class VersionedParquetSink(basePath: String,
     // full compaction: excluded from the insert dirs (its rows are the
     // replaced dirs' rows, already delivered), allowed in the fast path
     val fastRange = range.filter(e =>
-      e.compacts.isEmpty && e.replaces.isEmpty &&
-        !VersionedParquetSink.isMergeOnRead(e))
+      e.compacts.isEmpty && e.replaces.isEmpty && !e.isMergeOnRead)
     if (range.forall(e =>
-        (e.compacts.isEmpty && !VersionedParquetSink.isMergeOnRead(e)) ||
+        (e.compacts.isEmpty && !e.isMergeOnRead) ||
           e.op.contains("compact"))) {
       // schema and mapping as of toV; an empty range reads no files
       withType(spark.baseRelationToDataFrame(GraftRelation.forDirs(spark,
-        tableDir(table), upToTo, fastRange, table)), "insert")
+        tableDir(table), upToTo, fastRange)), "insert")
     } else {
-      val b = readAt(spark, table, toV)
+      val b = content(spark, upToTo)
+      val atFrom = snap.upTo(fromV)
       val a0 =
-        if (entries.exists(_.version <= fromV)) readAt(spark, table, fromV)
+        if (atFrom.nonEmpty) content(spark, atFrom)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
       // align the pre-evolution snapshot to toV's columns (missing = null)
@@ -2621,21 +2358,17 @@ final class VersionedParquetSink(basePath: String,
   def cloneShallow(spark: SparkSession, source: String,
       target: String, versionAsOf: Option[Long] = None): Long = {
     require(source != target, s"cannot clone '$source' onto itself")
-    val entries = versionAsOf match {
-      // CLONE ... VERSION AS OF: the clone is the source AS OF v — its
-      // manifest stops there, so later source commits are invisible to
-      // it (and time travel below v still works on the clone)
-      case Some(v) => manifest(spark, source).filter(_.version <= v)
-      case None => manifest(spark, source)
-    }
-    require(entries.nonEmpty, versionAsOf match {
+    // CLONE ... VERSION AS OF: the clone is the source AS OF v — its log
+    // stops there, so later source commits are invisible to it (and time
+    // travel below v still works on the clone)
+    val snap = versionAsOf.foldLeft(readLog(spark, source))(_.upTo(_))
+    require(snap.nonEmpty, versionAsOf match {
       case Some(v) => s"no committed versions <= $v for $source"
       case None => s"no committed versions for $source"
     })
-    require(manifest(spark, target).isEmpty,
+    val targetLog = log(spark, target)
+    require(targetLog.snapshot().isEmpty,
       s"clone target '$target' already exists")
-    val f = fs(spark, commitDir(target))
-    f.mkdirs(new Path(commitDir(target)))
     // Register the clone FIRST with every table whose data it will
     // reference (the flattened owner — normally `source`, the original
     // for re-clones): a `_clones/<target>` breadcrumb that [[vacuum]]
@@ -2646,7 +2379,7 @@ final class VersionedParquetSink(basePath: String,
     // tolerates a not-yet-committed clone within its grace period); the
     // breadcrumb is dropped once the clone's commit log disappears
     // (DROP TABLE) or never materializes.
-    entries.map(e => VersionedParquetSink
+    snap.entries.map(e => VersionedParquetSink
         .resolveDir(tableDir(source), e.dir).stripPrefix(s"$basePath/")
         .takeWhile(_ != '/'))
       .distinct.foreach { owner =>
@@ -2657,25 +2390,22 @@ final class VersionedParquetSink(basePath: String,
       try out.write(target.getBytes(StandardCharsets.UTF_8))
       finally out.close()
     }
-    entries.foreach { e =>
+    val cloned = snap.entries.map { e =>
       // flatten chained clones: an ALREADY-escaping dir re-pointed at
       // this source would stack ../ hops — resolve to the owning table
       // first so every clone references the original data directly
       val abs = VersionedParquetSink.resolveDir(tableDir(source), e.dir)
-      val newDir = "../" + abs.stripPrefix(s"$basePath/")
-      val body = e.raw.replace(s""""dir":"${e.dir}"""",
-        s""""dir":"$newDir"""")
-      val marker = new Path(s"${commitDir(target)}/${e.version}.commit")
-      if (!coordinator.publishIfAbsent(f, marker,
-          body.getBytes(StandardCharsets.UTF_8)))
+      val body = e.withDir("../" + abs.stripPrefix(s"$basePath/"))
+      if (!targetLog.claim(coordinator, body, e.version))
         throw new java.io.IOException(s"clone target '$target' gained " +
           s"commits concurrently (marker v${e.version})")
+      Commit.parse(body, Some(e.version))
     }
-    // external interop: mirror the cloned manifest into the clone's own
+    // external interop: mirror the cloned log into the clone's own
     // _delta_log (add actions carry absolute URIs for the cross-table
     // files, the Delta-spec form its own shallow clones use)
-    DeltaLogMirror.sync(spark, tableDir(target), manifest(spark, target))
-    entries.last.version
+    DeltaLogMirror.sync(spark, tableDir(target), Snapshot(target, cloned))
+    snap.version
   }
 
   /** VACUUM: delete data directories no reader can see — orphans left by
@@ -2698,12 +2428,11 @@ final class VersionedParquetSink(basePath: String,
     val f = fs(spark, tableDir(table))
     val td = new Path(tableDir(table))
     if (!f.exists(td)) return 0
-    val entries = manifest(spark, table)
+    val snap = readLog(spark, table)
     // graceMs < 0 = "table default": the retention TBLPROPERTIES
     // (Delta's deletedFileRetentionDuration, time strings like "7d"),
     // else one hour — an explicit caller argument always wins
-    val vacProps = VersionedParquetSink.Constraints.parse(
-      entries.lastOption.flatMap(_.props)).toMap
+    val vacProps = snap.properties
     val grace: Long =
       if (graceMs >= 0L) graceMs
       else vacProps.get("graft.deletedFileRetentionDuration")
@@ -2712,7 +2441,7 @@ final class VersionedParquetSink(basePath: String,
     // opt-in log retention rides the same maintenance pass
     if (!dryRun) vacProps.get("graft.logRetentionDuration")
       .map(org.apache.spark.network.util.JavaUtils.timeStringAsMs)
-      .foreach(ms => vacuumLog(spark, table, ms))
+      .foreach(ms => retireLog(spark, snap, ms))
     // Staged dirs named by a pending `_txn` manifest are NOT orphans:
     // the transaction passed its commit point, so the batch is durable
     // for every table and recovery WILL claim these dirs — deleting one
@@ -2754,20 +2483,22 @@ final class VersionedParquetSink(basePath: String,
       if (!f.exists(cd)) Set.empty
       else f.listStatus(cd).toSeq.filter(_.isFile).flatMap { st =>
         val cloneName = st.getPath.getName
-        val cloneEntries = manifest(spark, cloneName)
-        if (cloneEntries.isEmpty) {
+        val clone = readLog(spark, cloneName)
+        if (clone.isEmpty) {
           if (now - st.getModificationTime >= grace) {
             if (!dryRun) f.delete(st.getPath, false)
           } else pendingClone = true
           Seq.empty
-        } else cloneEntries.map(_.dir)
+        } else clone.entries.map(_.dir)
           .filter(_.startsWith(s"../$table/"))
           .map(_.stripPrefix(s"../$table/").takeWhile(_ != '/'))
       }.toSet
     }
-    val keep: Set[String] = txnStagedDirs ++ cloneHeld ++
-      (if (!includeSuperseded || pendingClone) entries.map(_.dir).toSet
-       else liveEntries(entries).map(_.dir).toSet) // = readAt(MaxValue) scan set
+    // every commit's dir, or only the live ones (= the latest read's
+    // scan set) when superseded history may go
+    val held = if (!includeSuperseded || pendingClone) snap.entries
+      else snap.live
+    val keep: Set[String] = txnStagedDirs ++ cloneHeld ++ held.map(_.dir)
     // `_txn/.tmp-*` files are writers that died BEFORE the manifest
     // rename (= before the commit point): true orphans after the grace
     // period, same rule as uncommitted data dirs
@@ -2780,10 +2511,7 @@ final class VersionedParquetSink(basePath: String,
     // clone-local bloom sidecars (`_bloom_ext/<digest>`) GC with the
     // inherited entries that reference them — same retention window
     // and superseded semantics as the data dirs they serve
-    val extKeep: Set[String] =
-      (if (!includeSuperseded || pendingClone) entries
-       else liveEntries(entries))
-        .filter(_.dir.startsWith("../"))
+    val extKeep: Set[String] = held.filter(_.dir.startsWith("../"))
         .map(e => new Path(
           BloomIndex.extRoot(tableDir(table), e.dir)).getName).toSet
     val extD = new Path(s"${tableDir(table)}/_bloom_ext")
@@ -2824,16 +2552,23 @@ final class VersionedParquetSink(basePath: String,
     * rewrite a no-op (retryingRewrite's keyed short-circuit), so a
     * crash-replayed epoch truncates/rewrites exactly once. */
   def overwrite(df: DataFrame, table: String,
-      commitKey: Option[String]): Unit = {
+      commitKey: Option[String]): Unit =
+    overwriteFrom(df, table, commitKey, readLog(df.sparkSession, table))
+
+  /** [[overwrite]] whose first attempt uses the caller's log read. */
+  private def overwriteFrom(df: DataFrame, table: String,
+      commitKey: Option[String], first: Snapshot): Unit = {
     val spark = df.sparkSession
-    if (!exists(spark, table)) { doAppend(df, table, commitKey); return }
-    retryingRewrite(spark, table, "overwrite", commitKey) { entries =>
-      val baseV = entries.last.version
-      val gensJson = entries.lastOption.flatMap(_.generated)
+    if (first.isEmpty) {
+      doAppend(df, table, commitKey, first = Some(first))
+      return
+    }
+    retryingRewrite(spark, table, "overwrite", commitKey, Some(first)) { snap =>
+      val gensJson = snap.generated
       val completed = completeGenerated(df, gensJson, None, table)
-      val cons = entries.lastOption.flatMap(_.constraints)
+      val cons = snap.constraints
       val guarded = constraintGuard(completed, cons, table)
-      val mappingJson = entries.lastOption.flatMap(_.mapping)
+      val mappingJson = snap.mapping
       val mapping = VersionedParquetSink.ColumnMapping.parse(mappingJson)
       val kept = mapping.filter { case (n, _) =>
         completed.columns.contains(n) }
@@ -2846,26 +2581,18 @@ final class VersionedParquetSink(basePath: String,
         f.name -> VersionedParquetSink.ColumnMapping.Entry(
           s"col-${UUID.randomUUID()}", maxId + 1 + i)
       }
-      val unique = s"d-${UUID.randomUUID()}"
-      val stats = StatsWrite.writeWithStats(toPhysical(guarded, extended),
-        s"${tableDir(table)}/$unique", VersionedParquetSink.ColumnMapping
-          .physicalSchema(completed.schema, extended))
-      commitLoop(spark, table, unique, commitKey = commitKey,
-        compacts = Some(baseV),
-        schemaDdl = completed.schema.toDDL, cleanupOnKeyLoss = true,
-        requireBase = Some(baseV), op = Some("overwrite"),
-        statsJson = Some(stats),
-        enforcedConstraints = Some(cons),
-        newMapping = if (mappingJson.isDefined)
-          Some(VersionedParquetSink.ColumnMapping.render(extended))
-        else None,
-        enforcedGenerated = Some(gensJson))
-        // a mid-claim key race (same-key writer won between snapshot and
-        // claim) is a successful replay, not a failure — restore's recipe
-        .orElse(commitKey.flatMap(k =>
-          manifest(spark, table).find(_.key.contains(k)).map(_.version)))
-        .getOrElse(throw new IllegalStateException(
-          s"overwrite of $table lost the commit race with no keyed winner"))
+      val (unique, stats) =
+        writeDir(table, guarded, extended, completed.schema)
+      claimedOrKeyed(spark, table, commitKey, "overwrite")(
+        commitLoop(spark, snap, unique, commitKey = commitKey,
+          compacts = Some(snap.version),
+          schemaDdl = completed.schema.toDDL, cleanupOnKeyLoss = true,
+          pinned = true, op = Some("overwrite"), statsJson = Some(stats),
+          enforcedConstraints = Some(cons),
+          newMapping = if (mappingJson.isDefined)
+            Some(VersionedParquetSink.ColumnMapping.render(extended))
+          else None,
+          enforcedGenerated = Some(gensJson)))
     }
     ()
   }
@@ -2873,9 +2600,6 @@ final class VersionedParquetSink(basePath: String,
   /** Snapshot = union of committed versions (orphan dirs are invisible). */
   override def read(spark: SparkSession, table: String): DataFrame =
     readAt(spark, table, Long.MaxValue)
-
-  private def liveEntries(entries: Seq[Commit]): Seq[Commit] =
-    VersionedParquetSink.liveEntries(entries)
 
   /** Time travel: the table as of version `v` (inclusive). A compaction
     * commit <= v replaces everything it folded in (its `compacts`
@@ -2960,12 +2684,12 @@ final class VersionedParquetSink(basePath: String,
   def versionAsOfTimestamp(spark: SparkSession, table: String,
       ts: java.time.Instant): Long = {
     val upTo = ts.toEpochMilli
-    val entries = manifest(spark, table)
-    require(entries.nonEmpty, s"no committed versions for $table")
-    val noTs = entries.count(_.ts.isEmpty)
-    entries.filter(_.ts.exists(_ <= upTo)).lastOption.getOrElse(
+    val snap = readLog(spark, table)
+    require(snap.nonEmpty, s"no committed versions for $table")
+    val noTs = snap.entries.count(_.ts.isEmpty)
+    snap.entries.filter(_.ts.exists(_ <= upTo)).lastOption.getOrElse(
       throw new IllegalArgumentException {
-        val earliest = entries.flatMap(_.ts).headOption
+        val earliest = snap.entries.flatMap(_.ts).headOption
           .map(java.time.Instant.ofEpochMilli(_).toString)
           .getOrElse("<no timestamped commits>")
         s"no version of $table committed at or before $ts " +
@@ -2989,17 +2713,17 @@ final class VersionedParquetSink(basePath: String,
       org.apache.spark.sql.sources.BaseRelation = {
     require(version.isEmpty || timestamp.isEmpty,
       "specify at most one of versionAsOf / timestampAsOf")
-    val all = manifest(spark, table)
+    val all = readLog(spark, table)
     require(all.nonEmpty, s"no committed versions for $table")
     val v = version.orElse(timestamp.map { ts =>
       val upTo = ts.toEpochMilli
-      all.filter(_.ts.exists(_ <= upTo)).lastOption.getOrElse(
+      all.entries.filter(_.ts.exists(_ <= upTo)).lastOption.getOrElse(
         throw new IllegalArgumentException(
           s"no version of $table committed at or before $ts")).version
     }).getOrElse(Long.MaxValue)
-    val entries = all.filter(_.version <= v)
-    require(entries.nonEmpty, s"no committed versions <= $v for $table")
-    GraftRelation(spark, tableDir(table), entries, table)
+    val snap = all.upTo(v)
+    require(snap.nonEmpty, s"no committed versions <= $v for $table")
+    GraftRelation(spark, tableDir(table), snap)
   }
 
   /** Per-commit admission sizes for streaming rate limits
@@ -3017,13 +2741,10 @@ final class VersionedParquetSink(basePath: String,
   private[graft] def admissionSizes(spark: SparkSession, table: String,
       fromV: Long, cdf: Boolean = false): Iterator[(Long, Int, Long)] = {
     val f = fs(spark, tableDir(table))
-    manifest(spark, table).filter(_.version > fromV).sortBy(_.version)
+    readLog(spark, table).entries.filter(_.version > fromV)
       .iterator.map { e =>
-        val serves =
-          if (cdf) true
-          else e.compacts.isEmpty && e.replaces.isEmpty &&
-            !VersionedParquetSink.isMergeOnRead(e) &&
-            !VersionedParquetSink.isDv(e)
+        val serves = cdf ||
+          (e.compacts.isEmpty && e.replaces.isEmpty && !e.isMergeOnRead)
         if (!serves) (e.version, 0, 0L)
         else {
           val p = new Path(
@@ -3045,22 +2766,22 @@ final class VersionedParquetSink(basePath: String,
   private[graft] def streamBatchRelation(spark: SparkSession, table: String,
       fromVersion: Long, untilVersion: Long, skipChangeCommits: Boolean):
       org.apache.spark.sql.sources.BaseRelation = {
-    val entries = manifest(spark, table).filter(_.version <= untilVersion)
-    require(entries.nonEmpty,
+    val snap = readLog(spark, table).upTo(untilVersion)
+    require(snap.nonEmpty,
       s"no committed versions for $table at or before v$untilVersion")
-    appendsSince(spark, table, entries, fromVersion, skipChangeCommits)
+    appendsSince(spark, table, snap, fromVersion, skipChangeCommits)
   }
 
-  /** The appends in `(fromVersion, entries.last]` as a relation projected
-    * to the snapshot's schema; an append-free range reads no files.
-    * Throws on a data-changing commit in range unless skipped. */
+  /** The appends in `(fromVersion, snap.version]` as a relation
+    * projected to the snapshot's schema; an append-free range reads no
+    * files. Throws on a data-changing commit in range unless skipped. */
   private def appendsSince(spark: SparkSession, table: String,
-      entries: Seq[Commit], fromVersion: Long, skipChangeCommits: Boolean):
+      snap: Snapshot, fromVersion: Long, skipChangeCommits: Boolean):
       org.apache.spark.sql.sources.BaseRelation = {
-    val range = entries.filter(_.version > fromVersion)
+    val range = snap.entries.filter(_.version > fromVersion)
     val changing = range.filter(e =>
       (e.compacts.isDefined && !e.op.contains("compact")) ||
-        VersionedParquetSink.isMergeOnRead(e))
+        e.isMergeOnRead)
     if (changing.nonEmpty && !skipChangeCommits)
       throw new IllegalStateException(
         s"stream over '$table' from v$fromVersion: data-changing commit(s) " +
@@ -3068,22 +2789,18 @@ final class VersionedParquetSink(basePath: String,
             .mkString(", ")} in range — streaming a table that rewrites " +
           "history needs skipChangeCommits=true (appends-only delivery) " +
           "or a CDF consumer (changesBetween)")
-    GraftRelation.forDirs(spark, tableDir(table), entries,
-      range.filter(e =>
-        e.compacts.isEmpty && e.replaces.isEmpty &&
-          !VersionedParquetSink.isMergeOnRead(e)),
-      table)
+    GraftRelation.forDirs(spark, tableDir(table), snap, range.filter(e =>
+      e.compacts.isEmpty && e.replaces.isEmpty && !e.isMergeOnRead))
   }
 
   /** DESCRIBE HISTORY parity: one row per commit, newest first —
     * version, commit timestamp, operation (WRITE for plain appends),
     * whether it superseded earlier versions (rewrite high-water mark),
     * and the idempotency key if the writer supplied one. Driver-side
-    * over the manifest (already one listing + one checkpoint read) —
-    * never scans data. */
+    * over one log read — never scans data. */
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    manifest(spark, table).sortBy(-_.version).map { e =>
+    readLog(spark, table).entries.reverse.map { e =>
       // operation metrics (Delta's operationMetrics): file/row counts
       // from the commit's OWN stats payload — no data scan
       val perFile = e.stats.map(FileStats.parse).getOrElse(Map.empty)
@@ -3111,11 +2828,11 @@ final class VersionedParquetSink(basePath: String,
     * whole commits and cluster via Z-ORDER instead. */
   def describeDetail(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val entries = manifest(spark, table)
-    require(entries.nonEmpty, s"no committed versions for $table")
-    val live = liveEntries(entries)
+    val snap = readLog(spark, table)
+    require(snap.nonEmpty, s"no committed versions for $table")
+    val live = snap.live
     val f = fs(spark, tableDir(table))
-    val dataFiles = live.filterNot(VersionedParquetSink.isDv).flatMap { e =>
+    val dataFiles = live.filterNot(_.isDv).flatMap { e =>
       val p = new Path(
         VersionedParquetSink.resolveDir(tableDir(table), e.dir))
       if (!f.exists(p)) Nil
@@ -3124,16 +2841,14 @@ final class VersionedParquetSink(basePath: String,
     }
     Seq((
       "graft", table, tableDir(table),
-      entries.headOption.flatMap(_.ts)
-        .map(new java.sql.Timestamp(_)).orNull,
-      entries.lastOption.flatMap(_.ts)
-        .map(new java.sql.Timestamp(_)).orNull,
+      snap.entries.head.ts.map(new java.sql.Timestamp(_)).orNull,
+      snap.latest.flatMap(_.ts).map(new java.sql.Timestamp(_)).orNull,
       Seq.empty[String],
       dataFiles.size.toLong,
       dataFiles.map(_.getLen).sum,
-      propertiesOf(spark, table),
-      entries.last.version,
-      live.count(VersionedParquetSink.isDv).toLong))
+      snap.properties,
+      snap.version,
+      live.count(_.isDv).toLong))
       .toDF("format", "name", "location", "createdAt", "lastModified",
         "partitionColumns", "numFiles", "sizeInBytes", "properties",
         "version", "numDeletionVectors")
@@ -3159,12 +2874,11 @@ final class VersionedParquetSink(basePath: String,
   def streamSince(spark: SparkSession, table: String, fromVersion: Long,
       skipChangeCommits: Boolean = false,
       untilVersion: Option[Long] = None): (Long, DataFrame) = {
-    val entries = manifest(spark, table)
-      .filter(e => untilVersion.forall(e.version <= _))
-    require(entries.nonEmpty, s"no committed versions for $table" +
+    val snap = untilVersion.foldLeft(readLog(spark, table))(_.upTo(_))
+    require(snap.nonEmpty, s"no committed versions for $table" +
       untilVersion.fold("")(u => s" at or before v$u"))
-    (entries.last.version, spark.baseRelationToDataFrame(
-      appendsSince(spark, table, entries, fromVersion, skipChangeCommits)))
+    (snap.version, spark.baseRelationToDataFrame(
+      appendsSince(spark, table, snap, fromVersion, skipChangeCommits)))
   }
 }
 
@@ -3196,28 +2910,6 @@ object VersionedParquetSink {
         case (acc, "..") if acc.nonEmpty && acc.last != ".." => acc.dropRight(1)
         case (acc, s) => acc :+ s
       }.mkString("/")
-
-  /** One committed version: the raw marker body plus its parsed fields.
-    * `compacts` marks a compaction commit that supersedes every version
-    * <= its value; `schemaDdl` is the commit's schema; `ts` the commit
-    * wall-clock (epoch millis) for timestamp time travel; `stats` the
-    * per-file min/max JSON (Delta add-action shape) for data skipping. */
-  private[engine] final case class Commit(version: Long, dir: String,
-      key: Option[String], compacts: Option[Long], schemaDdl: Option[String],
-      ts: Option[Long], op: Option[String], stats: Option[String],
-      constraints: Option[String], mapping: Option[String],
-      generated: Option[String], props: Option[String],
-      replaces: Seq[String],
-      // COPY INTO's file ledger: source-file identities (uri@mtime:len)
-      // this commit loaded — the union across the manifest is the
-      // already-loaded set a re-run skips
-      copied: Seq[String],
-      // free-form commit annotation (Delta's commitInfo.userMetadata)
-      userMeta: Option[String], raw: String)
-
-  /** A deletion-vector commit: its dir holds `(path, pos)` row positions
-    * to MASK from the scan, not table data. */
-  private[engine] def isDv(e: Commit): Boolean = e.op.contains("dv")
 
   /** A staged-but-unclaimed append: the written data dir plus everything
     * the commit claim needs (schema, stats, the governance state the
@@ -3327,41 +3019,6 @@ object VersionedParquetSink {
         m: Seq[(String, Entry)]): org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.StructType(
         logical.fields.map(f => f.copy(name = physicalName(m, f.name))))
-  }
-
-  /** Any commit carrying a positional mask: a pure DV delete (whole dir
-    * is the mask) or a merge-on-read UPDATE (data dir with the mask in
-    * its `_dv/` subdir — hidden from parquet listings by the underscore
-    * convention, so the same dir serves both payloads atomically). */
-  private[engine] def isMergeOnRead(e: Commit): Boolean =
-    isDv(e) || e.op.contains("update")
-
-  /** Where commit `e`'s mask parquet lives, relative to the table dir. */
-  private[engine] def maskDir(e: Commit): String =
-    if (isDv(e)) e.dir else s"${e.dir}/_dv"
-
-  /** The entries a reader actually scans: the NEWEST compaction commit
-    * plus every non-compaction append past its high-water mark. Older
-    * compaction commits are NEVER read — each holds only a redundant
-    * full copy of data the chosen compaction + later appends already
-    * cover, and including one duplicates every folded row (found by the
-    * concurrent-compaction stress test). */
-  private[engine] def liveEntries(entries: Seq[Commit]): Seq[Commit] = {
-    val comp = entries.filter(_.compacts.isDefined)
-      .sortBy(_.version).lastOption
-    val base = comp match {
-      case None => entries
-      case Some(c) =>
-        c +: entries.filter(e =>
-          e.version > c.compacts.get && e.compacts.isEmpty)
-    }
-    // dir-granular selective rewrites (OPTIMIZE WHERE): a dir whose base
-    // name appears in a commit's `replaces` list is superseded by that
-    // commit's folded copy. Base-name matching so a clone's re-pointed
-    // `../src/<dir>` spelling of the same UUID-unique dir still matches.
-    val replaced = base.iterator.flatMap(_.replaces).toSet
-    if (replaced.isEmpty) base
-    else base.filter(e => !replaced.contains(e.dir.split('/').last))
   }
 
   /** A delete/merge found a commit newer than the snapshot it rewrote —

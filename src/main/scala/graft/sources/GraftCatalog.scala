@@ -90,7 +90,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     if (!fs.exists(dir)) Array.empty
     else fs.listStatus(dir).toSeq
       .filter(st => st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_commits")))
+        fs.exists(new org.apache.hadoop.fs.Path(
+          graft.engine.TableLog.dirOf(st.getPath.toString))))
       .map(st => Identifier.of(Array.empty, st.getPath.getName))
       .toArray
   }

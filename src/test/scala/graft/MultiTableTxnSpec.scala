@@ -256,4 +256,23 @@ class MultiTableTxnSpec extends AnyFunSuite {
     // one write job per table, and nothing else
     assert(jobs.size == 4, s"jobs of one 4-table commit: $jobs")
   }
+
+  test("a transaction reads each table's log once before its claim") {
+    LagListFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val local = TestSpark.tmpDir("txnlist")
+    val sink = new VersionedParquetSink("lag:" + local)
+    val tables = Seq("a", "b", "c")
+    assert(sink.multiAppendOnce(tables.map(batch(2) -> _), "seed"))
+    LagListFileSystem.listings.clear()
+    // v1 is off the checkpoint grid: no checkpoint read or write
+    assert(sink.multiAppendOnce(tables.map(batch(3) -> _), "k"))
+    tables.foreach { t =>
+      val n = Option(LagListFileSystem.listings.get(s"$local/$t/_commits"))
+        .map(_.get).getOrElse(0)
+      // one read serves the key check, the staging and the claim; the
+      // second is the post-claim visibility check
+      assert(n == 2, s"table $t: _commits listed $n times by one commit")
+      assert(sink.read(spark, t).count() == 5L)
+    }
+  }
 }
