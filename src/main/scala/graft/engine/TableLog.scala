@@ -293,6 +293,15 @@ private[graft] final case class Snapshot(table: String, entries: Seq[Commit]) {
   def mapping: Option[String] = latest.flatMap(_.mapping)
   def generated: Option[String] = latest.flatMap(_.generated)
 
+  /** The marker draft of the next commit on this snapshot: data dir
+    * `dir`, key, schema `ddl`, and every other metadata payload carried
+    * forward from the latest commit. A commit that changes one `copy`s
+    * it. */
+  def draft(dir: String, key: Option[String], ddl: String): Commit =
+    Commit(version + 1, dir, key, schemaDdl = Some(ddl),
+      constraints = constraints, mapping = mapping, generated = generated,
+      props = props)
+
   /** TBLPROPERTIES as a map. */
   def properties: Map[String, String] =
     VersionedParquetSink.Constraints.parse(props).toMap

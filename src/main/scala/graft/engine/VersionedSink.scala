@@ -3,6 +3,8 @@ package graft.engine
 import java.nio.charset.StandardCharsets
 import java.util.{Base64, UUID}
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
@@ -27,8 +29,10 @@ import org.apache.spark.sql.types.StructType
   *  2. claim the next version number by publishing the fully written
   *     marker ([[TableLog.claim]]); the marker ([[Commit]]) names the data
   *     directory and carries the commit's schema and optional idempotency
-  *     key. A loser of the race just re-claims the next number — its data
-  *     files are already safely in place.
+  *     key. A loser of the race re-reads the log and re-claims the next
+  *     number — its data files are already safely in place — unless the
+  *     claim's conflict rule (Append, Rewrite or Fold: the table in
+  *     [[commitLoop]]) says a commit that landed in between aborts it.
   *
   * A version is visible iff its marker exists, so readers never see a
   * half-written append, and a writer that dies before committing leaves
@@ -78,6 +82,7 @@ final class VersionedParquetSink(basePath: String,
     // rename is not atomic-no-replace
     coordinator: CommitCoordinator = RenameCommitCoordinator)
     extends TableSink {
+  import VersionedParquetSink.{Append, Conflict, Fold, Pin, Rewrite}
   require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
 
   private def tableDir(table: String) = s"$basePath/$table"
@@ -188,98 +193,25 @@ final class VersionedParquetSink(basePath: String,
         if (snap.props.isDefined) snap.properties
         else initialProps.getOrElse(Map.empty[String, String])
       val idents = VersionedParquetSink.identityDecls(props)
-      if (idents.isEmpty) {
-        val staged = stageAppend(df, snap, allowEvolution)
-        val committed = claimStaged(spark, snap, staged, commitKey,
-          allowEvolution, cleanupOnKeyLoss = true,
-          initialProps = initialProps).isDefined
-        if (committed) {
-          maybeAutoCompact(spark, table, props)
-          maybeBloom(spark, table, props)
-        }
-        return committed
-      }
-      // identity allocation: stamp values from the declared high waters,
-      // stage, and commit PINNED to this base version — any concurrent
-      // commit aborts the claim and the whole allocation retries from
-      // the fresh high waters (Delta serializes identity transactions
-      // the same way)
-      // ALWAYS semantics: a writer may not supply values. SQL INSERT
-      // with an explicit column list arrives with the identity column
-      // auto-filled NULL — indistinguishable from "not supplied", so an
-      // all-null column is dropped and allocated; any non-null value is
-      // rejected (Delta's rule).
-      val cleaned = idents.keys.foldLeft(df) { (d, c) =>
-        if (!d.columns.contains(c)) d
+      val (staged, pins, newProps) =
+        if (idents.isEmpty)
+          (stageAppend(df, snap, allowEvolution), Map.empty[Pin, Option[String]],
+            initialProps.flatMap(p =>
+              VersionedParquetSink.Constraints.render(p.toSeq)))
         else {
-          require(d.filter(col(c).isNotNull).isEmpty,
-            s"column '$c' of '$table' is GENERATED ALWAYS AS IDENTITY — " +
-              "writers may not supply it")
-          d.drop(c)
-        }
-      }
-      import org.apache.spark.sql.functions.monotonically_increasing_id
-      val stamped = idents.foldLeft(cleaned) { case (d, (c, (_, step, hw))) =>
-        d.withColumn(c, (monotonically_increasing_id() + 1L) * step + hw)
-      }
-      val staged = stageAppend(stamped, snap, allowEvolution)
-      // new high waters from the commit's OWN per-file stats (the
-      // extreme in the increment's direction) — no extra pass; an
-      // empty batch leaves them unchanged. Stats cover only the first
-      // FileStats.MaxStatsColumns eligible columns, so on a wide table
-      // the identity column can be OUTSIDE the stats set — in that case
-      // the extreme is derived directly from the staged files (one
-      // single-column agg), and the append FAILS rather than commit a
-      // high water it could not advance: a stale high water mints
-      // duplicate identity values on the next append, violating the
-      // GENERATED ALWAYS AS IDENTITY uniqueness contract.
-      val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
-      val perFile = FileStats.parse(staged.statsJson)
-      val stagedRows = perFile.values.map(_.numRecords).sum
-      val newDecls = idents.map { case (c, (s0, step, hw)) =>
-        val phys =
-          VersionedParquetSink.ColumnMapping.physicalName(mapping, c)
-        val extremes = perFile.values.flatMap(pf =>
-          (if (step > 0) pf.maxV else pf.minV).get(phys)).map(_.asLong)
-        val ext: Seq[Long] =
-          if (extremes.nonEmpty || stagedRows == 0L) extremes.toSeq
-          else {
-            val r = scanStaged(spark, table, staged.unique, StructType(Seq(
-                StructType.fromDDL(staged.schemaDdl)(c).copy(name = phys))))
-              .agg((if (step > 0)
-                org.apache.spark.sql.functions.max(col(phys))
-              else org.apache.spark.sql.functions.min(col(phys)))
-                .cast("long")).head()
-            if (r.isNullAt(0)) throw new IllegalStateException(
-              s"cannot derive the identity high water for column '$c' " +
-                s"of '$table': the staged commit has $stagedRows rows " +
-                "but no stamped extreme — refusing to commit a stale " +
-                "high water (it would mint duplicate identity values)")
-            Seq(r.getLong(0))
-          }
-        val nhw = if (ext.isEmpty) hw
-          else if (step > 0) math.max(hw, ext.max)
-          else math.min(hw, ext.min)
-        s"graft.identity.$c" -> s"$s0:$step:$nhw"
-      }
-      try {
-        val committed = commitLoop(spark, snap, staged.unique, commitKey,
-          compacts = None, schemaDdl = staged.schemaDdl,
-          cleanupOnKeyLoss = true, enforceSchema = true,
-          allowEvolution = allowEvolution,
-          // conflict scope: the PROPS payload (which carries the high
-          // waters) — another allocation or SET TBLPROPERTIES aborts
-          // us; compactions and plain appends sail through, so identity
+          val (staged, decls) = stageIdentity(df, snap, idents, allowEvolution)
+          // identity allocation pins the PROPS payload (which carries the
+          // high waters): another allocation or SET TBLPROPERTIES aborts
+          // the claim and the whole allocation retries from the fresh
+          // high waters (Delta serializes identity transactions the same
+          // way); compactions and plain appends sail through, so identity
           // appends stay live under maintenance churn
-          enforcedProps = Some(snap.props),
-          statsJson = Some(staged.statsJson),
-          enforcedConstraints = Some(staged.constraints),
-          newMapping = staged.newMapping.map(m => Some(m)),
-          enforcedMapping =
-            if (staged.mapping.isDefined) Some(staged.mapping) else None,
-          enforcedGenerated = Some(staged.generated),
-          newProps = Some(VersionedParquetSink.Constraints.render(
-            (props ++ newDecls).toSeq))).isDefined
+          (staged, Map[Pin, Option[String]](Pin.Props -> snap.props),
+            VersionedParquetSink.Constraints.render((props ++ decls).toSeq))
+        }
+      try {
+        val committed = claimStaged(spark, snap, staged, commitKey,
+          allowEvolution, pins = pins, props = newProps).isDefined
         if (committed) {
           maybeAutoCompact(spark, table, props)
           maybeBloom(spark, table, props)
@@ -296,6 +228,75 @@ final class VersionedParquetSink(basePath: String,
       }
     }
     false // unreachable
+  }
+
+  /** Stage an append to an identity table: stamp each identity column
+    * from its declared high water, stage, and derive the new high waters
+    * (the `graft.identity.*` props the claim commits). */
+  private def stageIdentity(df: DataFrame, snap: Snapshot,
+      idents: Map[String, (Long, Long, Long)], allowEvolution: Boolean):
+      (VersionedParquetSink.Staged, Map[String, String]) = {
+    val spark = df.sparkSession
+    val table = snap.table
+    // ALWAYS semantics: a writer may not supply values. SQL INSERT
+    // with an explicit column list arrives with the identity column
+    // auto-filled NULL — indistinguishable from "not supplied", so an
+    // all-null column is dropped and allocated; any non-null value is
+    // rejected (Delta's rule).
+    val cleaned = idents.keys.foldLeft(df) { (d, c) =>
+      if (!d.columns.contains(c)) d
+      else {
+        require(d.filter(col(c).isNotNull).isEmpty,
+          s"column '$c' of '$table' is GENERATED ALWAYS AS IDENTITY — " +
+            "writers may not supply it")
+        d.drop(c)
+      }
+    }
+    import org.apache.spark.sql.functions.monotonically_increasing_id
+    val stamped = idents.foldLeft(cleaned) { case (d, (c, (_, step, hw))) =>
+      d.withColumn(c, (monotonically_increasing_id() + 1L) * step + hw)
+    }
+    val staged = stageAppend(stamped, snap, allowEvolution)
+    // new high waters from the commit's OWN per-file stats (the
+    // extreme in the increment's direction) — no extra pass; an
+    // empty batch leaves them unchanged. Stats cover only the first
+    // FileStats.MaxStatsColumns eligible columns, so on a wide table
+    // the identity column can be OUTSIDE the stats set — in that case
+    // the extreme is derived directly from the staged files (one
+    // single-column agg), and the append FAILS rather than commit a
+    // high water it could not advance: a stale high water mints
+    // duplicate identity values on the next append, violating the
+    // GENERATED ALWAYS AS IDENTITY uniqueness contract.
+    val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
+    val perFile = FileStats.parse(staged.statsJson)
+    val stagedRows = perFile.values.map(_.numRecords).sum
+    val newDecls = idents.map { case (c, (s0, step, hw)) =>
+      val phys =
+        VersionedParquetSink.ColumnMapping.physicalName(mapping, c)
+      val extremes = perFile.values.flatMap(pf =>
+        (if (step > 0) pf.maxV else pf.minV).get(phys)).map(_.asLong)
+      val ext: Seq[Long] =
+        if (extremes.nonEmpty || stagedRows == 0L) extremes.toSeq
+        else {
+          val r = scanStaged(spark, table, staged.unique, StructType(Seq(
+              StructType.fromDDL(staged.schemaDdl)(c).copy(name = phys))))
+            .agg((if (step > 0)
+              org.apache.spark.sql.functions.max(col(phys))
+            else org.apache.spark.sql.functions.min(col(phys)))
+              .cast("long")).head()
+          if (r.isNullAt(0)) throw new IllegalStateException(
+            s"cannot derive the identity high water for column '$c' " +
+              s"of '$table': the staged commit has $stagedRows rows " +
+              "but no stamped extreme — refusing to commit a stale " +
+              "high water (it would mint duplicate identity values)")
+          Seq(r.getLong(0))
+        }
+      val nhw = if (ext.isEmpty) hw
+        else if (step > 0) math.max(hw, ext.max)
+        else math.min(hw, ext.min)
+      s"graft.identity.$c" -> s"$s0:$step:$nhw"
+    }
+    (staged, newDecls)
   }
 
   /** GENERATE symlink_format_manifest (Delta parity): writes
@@ -398,17 +399,8 @@ final class VersionedParquetSink(basePath: String,
       else {
         val df = spark.read.parquet(fresh.map(_.getPath.toString): _*)
         val staged = stageAppend(df, snap, allowEvolution)
-        commitLoop(spark, snap, staged.unique, commitKey = None,
-          compacts = None, schemaDdl = staged.schemaDdl,
-          cleanupOnKeyLoss = false, enforceSchema = true,
-          allowEvolution = allowEvolution, pinned = true,
-          op = Some("copy"), statsJson = Some(staged.statsJson),
-          enforcedConstraints = Some(staged.constraints),
-          newMapping = staged.newMapping.map(m => Some(m)),
-          enforcedMapping =
-            if (staged.mapping.isDefined) Some(staged.mapping) else None,
-          enforcedGenerated = Some(staged.generated),
-          copied = fresh.map(id)).getOrElse(
+        commitLoop(spark, snap, Rewrite)(staged.draft(_, None)
+          .copy(op = Some("copy"), copied = fresh.map(id))).getOrElse(
             throw new IllegalStateException(
               "keyless COPY commit cannot lose a key race"))
       }
@@ -596,14 +588,11 @@ final class VersionedParquetSink(basePath: String,
       catch { case e: Throwable => f.delete(dirPath, true); throw e }
       val stats = FileStats.collect(spark,
         s"${tableDir(table)}/$unique", querySchema)
-      val ok = commitLoop(spark, snap, unique, Some(commitKey),
-        compacts = None,
-        schemaDdl = querySchema.toDDL, cleanupOnKeyLoss = true,
-        enforceSchema = true,
-        statsJson = Some(stats),
-        enforcedConstraints = Some(None),
-        enforcedMapping = Some(None),
-        enforcedGenerated = Some(None)).isDefined
+      // staged without constraints and generated columns, and pinned to
+      // no mapping: the claim aborts if any of the three appeared
+      val ok = claimStaged(spark, snap, VersionedParquetSink.Staged(table,
+          unique, querySchema.toDDL, stats, None, None, None, None),
+        Some(commitKey), pins = Map(Pin.Mapping -> None)).isDefined
       // micro-batch streaming is auto-compaction's prime customer: a
       // dir per epoch is exactly the population it bounds
       if (ok) {
@@ -725,39 +714,25 @@ final class VersionedParquetSink(basePath: String,
     val (unique, stats) = writeDir(table,
       optimizeWrite(guarded, snap.properties), extended, completed.schema)
     VersionedParquetSink.Staged(table, unique, completed.schema.toDDL,
-      stats, cons,
-      // pin the mapping we translated against whenever the table IS
-      // mapped (not only when extending): our files carry its physical
-      // names, so a concurrent rename/drop must abort this append at
-      // the claim — otherwise a drop racing a non-extending
-      // allowEvolution append could re-add the column under the
-      // dropped column's frozen physical name and resurrect old data
-      mappingJson,
+      stats, cons, mappingJson,
       if (newCols.isEmpty) None
       else VersionedParquetSink.ColumnMapping.render(extended),
       gensJson)
   }
 
-  /** The commit claim for a [[stageAppend]]-staged dir.
-    * `preserveOnAbort` keeps the staged dir on a governance/schema abort
-    * (multi-table transactions: the dir is named by a `_txn` manifest and
-    * recovery re-validates it — deleting it would poison recovery). */
+  /** The [[Append]] claim of a [[stageAppend]]-staged dir: pinned to the
+    * governance its rows were validated against ([[Staged.pins]]) plus
+    * `pins`; `props`, when set, replaces the inherited TBLPROPERTIES. */
   private def claimStaged(spark: SparkSession, snap: Snapshot,
       s: VersionedParquetSink.Staged, commitKey: Option[String],
-      allowEvolution: Boolean, cleanupOnKeyLoss: Boolean,
-      preserveOnAbort: Boolean = false,
-      initialProps: Option[Map[String, String]] = None): Option[Long] =
-    commitLoop(spark, snap, s.unique, commitKey, compacts = None,
-      schemaDdl = s.schemaDdl, cleanupOnKeyLoss = cleanupOnKeyLoss,
-      enforceSchema = true,
-      allowEvolution = allowEvolution, statsJson = Some(s.statsJson),
-      enforcedConstraints = Some(s.constraints),
-      newMapping = s.newMapping.map(m => Some(m)),
-      enforcedMapping = if (s.mapping.isDefined) Some(s.mapping) else None,
-      enforcedGenerated = Some(s.generated),
-      newProps = initialProps.map(p =>
-        VersionedParquetSink.Constraints.render(p.toSeq)),
-      preserveOnAbort = preserveOnAbort)
+      allowEvolution: Boolean = false, txnOwned: Boolean = false,
+      pins: Map[Pin, Option[String]] = Map.empty,
+      props: Option[String] = None): Option[Long] =
+    commitLoop(spark, snap, Append(allowEvolution, s.pins ++ pins),
+        txnOwned) { on =>
+      val d = s.draft(on, commitKey)
+      d.copy(props = props.orElse(d.props))
+    }
 
   private def txnDir: String = s"$basePath/_txn"
   private def txnFileName(key: String): String =
@@ -820,11 +795,10 @@ final class VersionedParquetSink(basePath: String,
     }
     staged.foreach { case (snap, s) =>
       txnClaimHook(s.table) // test seam: a throwing hook = writer death
-      // preserveOnAbort: past the commit point the staged dir belongs to
-      // the manifest — a governance abort here must leave the bytes for
+      // past the commit point the staged dir belongs to the manifest —
+      // a governance abort here must leave the bytes for
       // recoverTransactions to re-validate and roll forward
-      claimStaged(spark, snap, s, Some(txnKey), allowEvolution = false,
-        cleanupOnKeyLoss = false, preserveOnAbort = true)
+      claimStaged(spark, snap, s, Some(txnKey), txnOwned = true)
     }
     f.delete(new Path(s"$txnDir/${txnFileName(txnKey)}"), false)
     true
@@ -857,10 +831,16 @@ final class VersionedParquetSink(basePath: String,
     if (!f.exists(dir)) return 0
     var healed = 0
     val quarantined = scala.collection.mutable.ListBuffer.empty[String]
-    f.listStatus(dir).toSeq.filter(st => st.isFile &&
-        st.getPath.getName.endsWith(".json")).foreach { st =>
-      val (key, staged) = VersionedParquetSink.Staged.parseTxn(
-        readSmallFile(spark, st.getPath.toString))
+    def quarantine(st: org.apache.hadoop.fs.FileStatus, why: String): Unit = {
+      f.rename(st.getPath, new Path(st.getPath.toString + ".failed"))
+      quarantined += s"$why — manifest quarantined as " +
+        s"${st.getPath.getName}.failed"
+    }
+    val manifests = f.listStatus(dir).toSeq.filter(st => st.isFile &&
+        st.getPath.getName.endsWith(".json"))
+      .map(st => st -> readTxn(spark, st.getPath))
+    manifests.collect { case (st, Success(txn)) => st -> txn }
+        .foreach { case (st, (key, staged)) =>
       // first failure wins; remaining tables stay unclaimed (the
       // quarantined manifest records them for manual repair)
       val failure: Option[String] =
@@ -873,8 +853,7 @@ final class VersionedParquetSink(basePath: String,
               "but never committed (deleted outside the sink?)")
           else {
             try {
-              claimStaged(spark, snap, s, Some(key), allowEvolution = false,
-                cleanupOnKeyLoss = false, preserveOnAbort = true)
+              claimStaged(spark, snap, s, Some(key), txnOwned = true)
               healed += 1; None
             } catch {
               case _: IllegalStateException =>
@@ -894,20 +873,35 @@ final class VersionedParquetSink(basePath: String,
         case Some(why) =>
           val committed = staged.filter(s =>
             readLog(spark, s.table).versionOf(key).isDefined).map(_.table)
-          f.rename(st.getPath, new Path(st.getPath.toString + ".failed"))
-          quarantined += s"transaction '$key': $why; the batch is " +
+          quarantine(st, s"transaction '$key': $why; the batch is " +
             (if (committed.isEmpty) "applied to NO table"
              else s"PARTIALLY applied (committed to " +
                s"${committed.mkString(", ")}; missing from " +
-               s"${staged.map(_.table).diff(committed).mkString(", ")})") +
-            s" — manifest quarantined as ${st.getPath.getName}.failed"
+               s"${staged.map(_.table).diff(committed).mkString(", ")})"))
       }
+    }
+    // a manifest that does not parse names no claim to heal; quarantined
+    // after the others healed
+    manifests.foreach {
+      case (st, Failure(e)) => quarantine(st, e.getMessage)
+      case _ => ()
     }
     if (quarantined.nonEmpty) throw new IllegalStateException(
       "unrecoverable multi-table transaction(s) quarantined — later " +
         "writes are NOT blocked, but these batches need manual repair:\n  " +
         quarantined.mkString("\n  "))
     healed
+  }
+
+  /** A `_txn` manifest's key and staged dirs; a manifest that does not
+    * parse fails naming the file (read errors pass through). */
+  private def readTxn(spark: SparkSession, p: Path):
+      Try[(String, Seq[VersionedParquetSink.Staged])] = {
+    val json = readSmallFile(spark, p.toString)
+    Try(VersionedParquetSink.Staged.parseTxn(json)).recoverWith {
+      case e => Failure(new IllegalStateException(
+        s"transaction manifest ${p.getName} does not parse: ${e.getMessage}", e))
+    }
   }
 
   private def rollForwardFailure(s: VersionedParquetSink.Staged,
@@ -946,8 +940,7 @@ final class VersionedParquetSink(basePath: String,
           .foreach(_ => ())
         claimStaged(spark, snap,
           s.copy(constraints = curCons, generated = curGens), Some(key),
-          allowEvolution = false, cleanupOnKeyLoss = false,
-          preserveOnAbort = true)
+          txnOwned = true)
         return None
       } catch {
         case _: IllegalStateException => () // moved again mid-recovery; retry
@@ -1028,261 +1021,213 @@ final class VersionedParquetSink(basePath: String,
     else df.select(df.columns.map(c => col(c).as(
       VersionedParquetSink.ColumnMapping.physicalName(m, c))): _*)
 
-  /** Claim the next version for data dir `unique`. Returns the claimed
-    * version, or None iff a competing commit with the same idempotency
-    * key won the race (the orphaned data dir is then deleted).
+  /** Claim the next version for the marker `draft` builds, under the
+    * conflict rule `rule`. Returns the claimed version, or None iff a
+    * commit carrying the draft's idempotency key won (a replay, not a
+    * failure).
     *
     * Concurrency protocol (Delta-style optimistic commit): each attempt
-    * claims EXACTLY latest+1 from a log snapshot that also supplied the
-    * idempotency-key and governance checks. The first attempt uses the
-    * caller's snapshot — the one its staging was validated against; any
-    * commit that slipped in since occupies exactly the version we claim,
-    * failing the publish. Retries always re-read, so a same-key racer's
-    * commit is seen before we'd claim past it. HDFS-style rename is
-    * atomic-no-overwrite across writers; the LOCAL filesystem's rename is
-    * check-then-move (TOCTOU), so same-JVM racers — exactly the local[*]
-    * deployment — additionally serialize the read-check-claim on a JVM
-    * lock. Cross-JVM writers need an atomic-rename fs (HDFS/ABFS), the
-    * same contract Delta's LogStore documents. A rename that fails with
-    * NO competing marker is a filesystem fault and throws rather than
-    * spinning.
+    * claims EXACTLY latest+1 from one log read. The first attempt uses
+    * `snapshot`, the read the caller staged against; a lost publish
+    * re-reads, so a same-key racer's commit is seen before we'd claim
+    * past it. `draft` rebuilds the marker on the snapshot each attempt
+    * claims on: every payload it does not set (constraints, mapping,
+    * generated columns, props) is the latest commit's. Against what
+    * landed after `snapshot`, the rule decides (every rule re-reads and
+    * claims the next version after a lost publish):
+    * {{{
+    *   rule    aborts when a newer commit ...   retry after abort     lands over
+    *   Append  changed a pinned payload         identity append:      any other
+    *           (Pin.Props: ConcurrentRewrite-   re-allocates from a   commit; the
+    *           Exception; others: IllegalState- fresh snapshot on     schema is
+    *           Exception), or its schema        ConcurrentRewrite-    re-checked on
+    *           refuses the draft's (Illegal-    Exception; none       every attempt
+    *           ArgumentException)               otherwise
+    *   Rewrite exists (ConcurrentRewrite-       retryingRewrite       nothing
+    *           Exception)                       re-derives from a
+    *                                            fresh snapshot
+    *   Fold    is a compaction, a `replaces`    retryingRewrite       appends and
+    *           fold or a merge-on-read commit   re-derives            metadata; the
+    *           (ConcurrentRewriteException)                           schema is the
+    *                                                                  latest's
+    * }}}
+    * An abort drops the staged dir unless `txnOwned`: the dir belongs to
+    * a `_txn` manifest, so neither an abort nor a key loss deletes it —
+    * recovery needs the bytes to re-validate and roll forward.
     *
-    * `pinned` commits only on top of the caller's snapshot (Delta's
-    * ConcurrentWriteException on a stale read-modify-write). */
+    * HDFS-style rename is atomic-no-overwrite across writers; the LOCAL
+    * filesystem's rename is check-then-move (TOCTOU), so same-JVM racers
+    * — exactly the local[*] deployment — additionally serialize the
+    * read-check-claim on a JVM lock. Cross-JVM writers need an
+    * atomic-rename fs (HDFS/ABFS), the same contract Delta's LogStore
+    * documents. A rename that fails with NO competing marker is a
+    * filesystem fault and throws rather than spinning. */
   private def commitLoop(spark: SparkSession, snapshot: Snapshot,
-      unique: String, commitKey: Option[String], compacts: Option[Long],
-      schemaDdl: String, cleanupOnKeyLoss: Boolean,
-      enforceSchema: Boolean = false,
-      allowEvolution: Boolean = false,
-      pinned: Boolean = false,
-      rewriteOnlyConflict: Boolean = false,
-      op: Option[String] = None,
-      statsJson: Option[String] = None,
-      // dir-granular selective rewrite (OPTIMIZE WHERE): base names of
-      // the live dirs whose content this commit's dir now carries —
-      // Snapshot.live drops them once this commit lands
-      replaces: Seq[String] = Nil,
-      // COPY INTO's loaded-source-file identities for this commit
-      copied: Seq[String] = Nil,
-      // None = inherit the latest commit's constraint set (every normal
-      // commit); Some(x) = set it to x (add/dropConstraint)
-      newConstraints: Option[Option[String]] = None,
-      // when set, abort (cleaning up) if the latest constraint set is not
-      // the one the caller validated its rows against — closes the race
-      // where an append straddles a concurrent ADD CONSTRAINT
-      enforcedConstraints: Option[Option[String]] = None,
-      // None = inherit the latest commit's column mapping; Some(x) = set
-      // it (rename/drop column, mapping-extending evolution append)
-      newMapping: Option[Option[String]] = None,
-      // when set, abort if the latest mapping differs from the one the
-      // caller baked into its data files' physical column names
-      enforcedMapping: Option[Option[String]] = None,
-      // generated-column expressions: inherit / set / abort-on-change,
-      // same protocol as constraints
-      newGenerated: Option[Option[String]] = None,
-      enforcedGenerated: Option[Option[String]] = None,
-      // table properties (TBLPROPERTIES): inherit commit-to-commit like
-      // constraints; set by SET/UNSET TBLPROPERTIES metadata commits
-      newProps: Option[Option[String]] = None,
-      // when set, abort (retryably) if the latest props payload is not
-      // the one the caller derived its newProps from — the identity
-      // allocator's conflict scope: ONLY a concurrent props change
-      // (another allocation, SET TBLPROPERTIES) invalidates it, so
-      // compactions and plain appends never starve identity appends
-      enforcedProps: Option[Option[String]] = None,
-      // keep the staged dir when a governance/schema abort throws: a
-      // multi-table transaction's dir is named by its `_txn` manifest,
-      // and recovery needs the BYTES to re-validate and roll forward —
-      // deleting them turns a retryable abort into an unrecoverable txn
-      preserveOnAbort: Boolean = false): Option[Long] = {
+      rule: Conflict, txnOwned: Boolean = false)(
+      draft: Snapshot => Commit): Option[Long] = {
     val table = snapshot.table
     val tlog = log(spark, table)
     val base = snapshot.version
-    val f = fs(spark, tableDir(table))
-    def dropStaged(): Unit =
-      f.delete(new Path(s"${tableDir(table)}/$unique"), true)
-    def abort(e: Throwable): Nothing = {
-      if (!preserveOnAbort) dropStaged()
-      throw e
-    }
+    // every attempt's draft names the same dir and key
+    val first = draft(snapshot)
+    val (unique, commitKey) = (first.dir, first.key)
+    def dropStaged(): Unit = if (!txnOwned)
+      fs(spark, tableDir(table))
+        .delete(new Path(s"${tableDir(table)}/$unique"), true)
     // commit annotation (Delta's userMetadata UX: a session conf so every
     // write path — API, SQL, streaming — carries it uniformly)
     val userMeta = spark.conf.getOption("spark.graft.commitInfo.userMetadata")
       .filter(_.nonEmpty)
     var reuse: Option[Snapshot] = Some(snapshot) // first attempt only
-    // the most recent successful claim, carried out of the claim block
-    // for the post-claim validation/checkpoint path
-    var claimedCommit: Commit = null
+    var claimed: Commit = null
     while (true) {
-      val claimed: Option[Option[Long]] = // None=retry, Some(None)=key lost
-        VersionedParquetSink.localClaimLock.synchronized {
-          val snap = reuse.getOrElse(tlog.snapshot())
-          reuse = None
-          if (commitKey.flatMap(snap.versionOf).isDefined) {
-            Some(None)
-          } else if (pinned && {
-              // Stale-snapshot aborts (Delta's ConcurrentWriteException;
-              // callers retry from a fresh snapshot):
-              //  - delete/merge conflict with ANY newer commit — a stale
-              //    data-dependent rewrite would silently drop an
-              //    intervening append's rows or resurrect deleted ones;
-              //  - compact (rewriteOnlyConflict) conflicts only with a
-              //    newer REWRITE — appends stay visible past a compaction
-              //    (Snapshot.live keeps version > compacts), but
-              //    committing a compaction derived from a pre-delete
-              //    snapshot would shadow the delete ("last compaction
-              //    wins" in Snapshot.live) and resurrect its rows. A newer
-              //    DELETION VECTOR conflicts the same way: the
-              //    compaction's new file paths would orphan the DV's
-              //    (path, pos) refs and silently resurrect the masked rows.
-              // a selective rewrite (replaces.nonEmpty) conflicts like a
-              // full one: committing a fold derived from a snapshot that
-              // predates another fold of the SAME dirs would duplicate
-              // every overlapping row (both folded copies stay live)
-              if (rewriteOnlyConflict)
-                snap.entries.exists(e => e.version > base &&
-                  (e.compacts.isDefined || e.replaces.nonEmpty ||
-                    e.isMergeOnRead))
-              else snap.version != base
-            }) {
-            dropStaged()
-            throw new VersionedParquetSink.ConcurrentRewriteException(
-              table, base, snap.version)
-          } else if (enforcedProps.exists(_ != snap.props)) {
-            // honor preserveOnAbort like the governance aborts below: a
-            // multi-table-transaction caller relies on the staged dir
-            // surviving the abort for recovery
-            abort(new VersionedParquetSink.ConcurrentRewriteException(
-              table, base, snap.version))
-          } else if (enforcedConstraints.exists(_ != snap.constraints)) {
-            abort(new IllegalStateException(
-              s"CHECK constraints on '$table' changed while this append " +
-                "was validating against the old set; retry the append"))
-          } else if (enforcedMapping.exists(_ != snap.mapping)) {
-            abort(new IllegalStateException(
-              s"column mapping on '$table' changed while this write baked " +
-                "physical column names from the old mapping; retry"))
-          } else if (enforcedGenerated.exists(_ != snap.generated)) {
-            abort(new IllegalStateException(
-              s"generated columns on '$table' changed while this write " +
-                "computed/validated against the old expressions; retry"))
-          } else {
-            // The schema check runs against the snapshot this attempt
-            // claims on top of: a commit that slipped in since the
-            // caller's staging may have changed the table schema, and
-            // claiming past it would let two concurrent appends with
-            // different schemas both land (the mixed-schema table the
-            // check exists to prevent).
-            if (enforceSchema) {
-              try SchemaCheck.enforceAppend(table,
-                snap.schemaDdl.map(StructType.fromDDL),
-                StructType.fromDDL(schemaDdl), allowEvolution)
-              catch { case e: Throwable => abort(e) }
+      val won = VersionedParquetSink.localClaimLock.synchronized {
+        val snap = reuse.getOrElse(tlog.snapshot())
+        reuse = None
+        if (commitKey.flatMap(snap.versionOf).isDefined) {
+          dropStaged()
+          return None
+        }
+        val d = draft(snap)
+        refusal(rule, snap, base, d).foreach { e => dropStaged(); throw e }
+        // A fold's DDL must be the LATEST committed DDL, not its caller's
+        // snapshot's: a schema-evolution append racing past the fold's
+        // base is non-conflicting (its dir stays in the scan set), and
+        // committing the pre-evolution DDL on top of it would make every
+        // later reader project the evolved column away. The folded rows
+        // read the evolved column as null, like any pre-evolution file.
+        val c = d.copy(version = snap.version + 1, userMeta = userMeta,
+          schemaDdl =
+            if (rule == Fold) snap.schemaDdl.orElse(d.schemaDdl)
+            else d.schemaDdl)
+        // The claim itself is the coordinator's publish-if-absent
+        // (temp-write + atomic rename here; conditional PUT on object
+        // stores): the FULL body lands atomically, so an EMPTY marker is
+        // never visible — readers would throw on one and a same-key
+        // committer would double-commit. The coordinator throws (not
+        // "lost") when the store fails in a way a competing marker cannot
+        // explain.
+        val body = Commit.render(c, java.time.Instant.now)
+        tlog.claim(coordinator, body, c.version) && {
+          claimed = Commit.parse(body, Some(c.version))
+          true
+        }
+      }
+      if (won) {
+        val v = claimed.version
+        // Phantom-claim guard (found by the log-retention soak): a
+        // writer holding a STALE snapshot computes attempt =
+        // stale_latest + 1; normally that version's marker exists and
+        // the claim is blocked, but vacuumLog may have RETIRED it
+        // (it sits behind the checkpoint horizon) — the claim then
+        // succeeds and mints a marker log reads filter out, i.e. a
+        // commit that silently never happened. Validate the claim is
+        // actually visible; if not, undo the marker and retry from a
+        // fresh read. The validation read also feeds the checkpoint
+        // and the mirror sync, so the healthy path pays nothing more.
+        val after = tlog.snapshot()
+        val inListing = after.entries.exists(e =>
+          e.version == v && e.dir == unique)
+        // LIST-lag fallback (object stores whose listing trails PUTs —
+        // the pre-2020 S3 shape the conditional-PUT coordinator
+        // emulation injects): the listing may simply not include the
+        // marker we JUST published. A point read of the exact marker
+        // path is read-after-write consistent on every store in the
+        // CommitCoordinator mapping; the true phantom case (we
+        // re-minted a version vacuumLog retired) is distinguished by
+        // the checkpoint HORIZON — but NOT the horizon of the same
+        // lagged listing (ADVICE r12): a covering checkpoint written
+        // just before the stale claim is itself lag-hidden, and
+        // retention bounds MARKER age, not checkpoint age. So the
+        // horizon is read from a listing proven MONOTONE past our own
+        // PUT: lag is mtime-monotone (once listed, always listed;
+        // LagListFileSystem documents the model), so a listing that
+        // contains the marker we just wrote contains every file put
+        // before it — a fresh covering checkpoint cannot hide. The
+        // wait is bounded by the declared store lag
+        // (graft.store.maxListLag, enforced against retention by
+        // vacuumLog); past the bound we fall back to the freshest
+        // horizon, which the retention guard makes sound for any
+        // correctly-declared store.
+        val visible = inListing || {
+          tlog.markerOwned(v, unique) && {
+            val deadline = System.currentTimeMillis() +
+              math.max(storeMaxListLagMs(spark, after), 2000L)
+            var decided: Option[Boolean] = None
+            while (decided.isEmpty) {
+              val names = tlog.names()
+              if (names.contains(s"$v.commit") ||
+                  System.currentTimeMillis() >= deadline)
+                decided = Some(TableLog.horizon(names).forall(v > _))
+              else Thread.sleep(25L)
             }
-            val attempt = snap.version + 1
-            // A compaction's DDL must be the LATEST committed DDL, not
-            // its caller's snapshot: a schema-evolution append racing
-            // past the compaction's base is non-conflicting (its data
-            // dir stays in the scan set), but committing the snapshot's
-            // pre-evolution DDL on top of it would make every later
-            // reader project the evolved column away — silent column
-            // loss. The folded rows simply read the evolved column as
-            // null, exactly like any pre-evolution file. delete/merge
-            // never get here stale (a pinned claim aborts on ANY newer
-            // commit), so using the latest DDL is correct for every
-            // rewrite.
-            val effectiveDdl =
-              if (rewriteOnlyConflict) snap.schemaDdl.getOrElse(schemaDdl)
-              else schemaDdl
-            // table metadata travels commit-to-commit: each payload
-            // inherits the latest one unless this commit changes it
-            val c = Commit(attempt, unique, commitKey, compacts,
-              Some(effectiveDdl), op = op, stats = statsJson,
-              constraints = newConstraints.getOrElse(snap.constraints),
-              mapping = newMapping.getOrElse(snap.mapping),
-              generated = newGenerated.getOrElse(snap.generated),
-              props = newProps.getOrElse(snap.props),
-              replaces = replaces, copied = copied, userMeta = userMeta)
-            // The claim itself is the coordinator's publish-if-absent
-            // (temp-write + atomic rename here; conditional PUT on
-            // object stores): the FULL body lands atomically, so an
-            // EMPTY marker is never visible — readers would throw on
-            // one and a same-key committer would double-commit. The
-            // coordinator throws (not "lost") when the store fails in
-            // a way a competing marker cannot explain.
-            val body = Commit.render(c, java.time.Instant.now)
-            if (tlog.claim(coordinator, body, attempt)) {
-              claimedCommit = Commit.parse(body, Some(attempt))
-              Some(Some(attempt))
-            } else None // lost the race; retry at the next version
+            decided.get
           }
         }
-      claimed match {
-        case Some(Some(v)) =>
-          // Phantom-claim guard (found by the log-retention soak): a
-          // writer holding a STALE snapshot computes attempt =
-          // stale_latest + 1; normally that version's marker exists and
-          // the claim is blocked, but vacuumLog may have RETIRED it
-          // (it sits behind the checkpoint horizon) — the claim then
-          // succeeds and mints a marker log reads filter out, i.e. a
-          // commit that silently never happened. Validate the claim is
-          // actually visible; if not, undo the marker and retry from a
-          // fresh read. The validation read also feeds the checkpoint
-          // and the mirror sync, so the healthy path pays nothing more.
-          val after = tlog.snapshot()
-          val inListing = after.entries.exists(e =>
-            e.version == v && e.dir == unique)
-          // LIST-lag fallback (object stores whose listing trails PUTs —
-          // the pre-2020 S3 shape the conditional-PUT coordinator
-          // emulation injects): the listing may simply not include the
-          // marker we JUST published. A point read of the exact marker
-          // path is read-after-write consistent on every store in the
-          // CommitCoordinator mapping; the true phantom case (we
-          // re-minted a version vacuumLog retired) is distinguished by
-          // the checkpoint HORIZON — but NOT the horizon of the same
-          // lagged listing (ADVICE r12): a covering checkpoint written
-          // just before the stale claim is itself lag-hidden, and
-          // retention bounds MARKER age, not checkpoint age. So the
-          // horizon is read from a listing proven MONOTONE past our own
-          // PUT: lag is mtime-monotone (once listed, always listed;
-          // LagListFileSystem documents the model), so a listing that
-          // contains the marker we just wrote contains every file put
-          // before it — a fresh covering checkpoint cannot hide. The
-          // wait is bounded by the declared store lag
-          // (graft.store.maxListLag, enforced against retention by
-          // vacuumLog); past the bound we fall back to the freshest
-          // horizon, which the retention guard makes sound for any
-          // correctly-declared store.
-          val visible = inListing || {
-            tlog.markerOwned(v, unique) && {
-              val deadline = System.currentTimeMillis() +
-                math.max(storeMaxListLagMs(spark, after), 2000L)
-              var decided: Option[Boolean] = None
-              while (decided.isEmpty) {
-                val names = tlog.names()
-                if (names.contains(s"$v.commit") ||
-                    System.currentTimeMillis() >= deadline)
-                  decided = Some(TableLog.horizon(names).forall(v > _))
-                else Thread.sleep(25L)
-              }
-              decided.get
-            }
-          }
-          if (!visible) tlog.unclaim(v)
-          else {
-            maybeCheckpoint(tlog, after, claimedCommit)
-            // external interop: mirror the commit (and any gap a crashed
-            // writer left) into _delta_log; best-effort, never throws
-            DeltaLogMirror.sync(spark, tableDir(table), after)
-            return Some(v)
-          }
-        case Some(None) =>
-          if (cleanupOnKeyLoss) dropStaged()
-          return None
-        case None => () // re-read the log and try the next version
+        if (!visible) tlog.unclaim(v)
+        else {
+          maybeCheckpoint(tlog, after, claimed)
+          // external interop: mirror the commit (and any gap a crashed
+          // writer left) into _delta_log; best-effort, never throws
+          DeltaLogMirror.sync(spark, tableDir(table), after)
+          return Some(v)
+        }
       }
+      // lost the race, or the claim was invisible: re-read the log and
+      // try the next version
     }
     None // unreachable
+  }
+
+  /** Why `rule` refuses to claim draft `c` on `snap` for a claim staged
+    * on version `base`; None when the claim may land. */
+  private def refusal(rule: Conflict, snap: Snapshot,
+      base: Long, c: Commit): Option[Throwable] = {
+    def stale = new VersionedParquetSink.ConcurrentRewriteException(
+      snap.table, base, snap.version)
+    rule match {
+      // Delta's ConcurrentWriteException: a stale data-dependent rewrite
+      // would silently drop an intervening append's rows or resurrect
+      // deleted ones
+      case Rewrite => Option.when(snap.version != base)(stale)
+      // appends stay visible past a fold (Snapshot.live keeps version >
+      // compacts), but a compaction derived from a pre-delete snapshot
+      // would shadow the delete ("last compaction wins") and resurrect
+      // its rows; its new file paths would orphan a newer deletion
+      // vector's (path, pos) refs; and a fold derived from a snapshot
+      // that predates another fold of the SAME dirs would duplicate every
+      // overlapping row (both folded copies stay live)
+      case Fold => Option.when(snap.entries.exists(e =>
+        e.version > base &&
+          (e.compacts.isDefined || e.replaces.nonEmpty || e.isMergeOnRead)))(stale)
+      case Append(allowEvolution, pins) =>
+        Pin.values.find(p => pins.get(p).exists(_ != p.of(snap))).map {
+          // the identity allocator's conflict scope (its high waters ride
+          // the props): retryable
+          case Pin.Props => stale
+          case Pin.Constraints => new IllegalStateException(
+            s"CHECK constraints on '${snap.table}' changed while this " +
+              "append was validating against the old set; retry the append")
+          case Pin.Mapping => new IllegalStateException(
+            s"column mapping on '${snap.table}' changed while this write " +
+              "baked physical column names from the old mapping; retry")
+          case Pin.Generated => new IllegalStateException(
+            s"generated columns on '${snap.table}' changed while this " +
+              "write computed/validated against the old expressions; retry")
+        }.orElse {
+          // the schema check runs against the snapshot this attempt
+          // claims on: a commit that slipped in since the caller's
+          // staging may have changed the table schema, and claiming past
+          // it would let two concurrent appends with different schemas
+          // both land (the mixed-schema table the check exists to prevent)
+          try {
+            SchemaCheck.enforceAppend(snap.table,
+              snap.schemaDdl.map(StructType.fromDDL),
+              StructType.fromDDL(c.schemaDdl.get), allowEvolution)
+            None
+          } catch { case e: Throwable => Some(e) }
+        }
+    }
   }
 
   /** Snapshot the log into `<v>.checkpoint` on the deterministic grid
@@ -1477,12 +1422,10 @@ final class VersionedParquetSink(basePath: String,
           val unique = s"d-${UUID.randomUUID()}"
           fs(spark, tableDir(table))
             .mkdirs(new Path(s"${tableDir(table)}/$unique"))
+          val ddl = schemaOf(spark, snap).toDDL
           claimedOrKeyed(spark, table, commitKey, "reorg purge")(
-            commitLoop(spark, snap, unique, commitKey, compacts = None,
-              schemaDdl = schemaOf(spark, snap).toDDL,
-              cleanupOnKeyLoss = true, pinned = true,
-              rewriteOnlyConflict = true, op = Some("compact"),
-              replaces = pureDvDirs))
+            commitLoop(spark, snap, Fold)(_.draft(unique, commitKey, ddl)
+              .copy(op = Some("compact"), replaces = pureDvDirs)))
         }
       }
     }
@@ -1506,11 +1449,10 @@ final class VersionedParquetSink(basePath: String,
       else targetFiles.fold(content)(n => content.coalesce(n))
     val (unique, stats) = writeDir(table, out, mapping, content.schema)
     claimedOrKeyed(spark, table, commitKey, "selective compaction")(
-      commitLoop(spark, snap, unique, commitKey, compacts = None,
-        schemaDdl = snap.schemaDdl.getOrElse(content.schema.toDDL),
-        cleanupOnKeyLoss = true, pinned = true, rewriteOnlyConflict = true,
-        op = Some("compact"), statsJson = Some(stats),
-        replaces = folded.map(_.dir.split('/').last) ++ alsoReplaces))
+      commitLoop(spark, snap, Fold)(_.draft(unique, commitKey,
+          snap.schemaDdl.getOrElse(content.schema.toDDL))
+        .copy(op = Some("compact"), stats = Some(stats),
+          replaces = folded.map(_.dir.split('/').last) ++ alsoReplaces)))
   }
 
   private def doCompact(spark: SparkSession, snap: Snapshot,
@@ -1526,12 +1468,10 @@ final class VersionedParquetSink(basePath: String,
     // result is the compaction's own version, NOT the latest: an append
     // racing past the compaction must not be reported as it.
     claimedOrKeyed(spark, table, commitKey, "compaction")(
-      commitLoop(spark, snap, unique, commitKey,
-        compacts = Some(snap.version),
-        schemaDdl = snap.schemaDdl.getOrElse(cur.schema.toDDL),
-        cleanupOnKeyLoss = true, // same-key racer won: drop our rewrite
-        pinned = true, rewriteOnlyConflict = true, op = Some("compact"),
-        statsJson = Some(stats)))
+      commitLoop(spark, snap, Fold)(_.draft(unique, commitKey,
+          snap.schemaDdl.getOrElse(cur.schema.toDDL))
+        .copy(compacts = Some(snap.version), op = Some("compact"),
+          stats = Some(stats))))
   }
 
   /** DELETE (Delta `DELETE FROM t WHERE cond` parity): copy-on-write —
@@ -1615,9 +1555,8 @@ final class VersionedParquetSink(basePath: String,
       dv.sort("path", "pos").write.mode(SaveMode.ErrorIfExists)
         .parquet(s"${tableDir(table)}/$unique")
       claimedOrKeyed(spark, table, commitKey, "dv-delete")(
-        commitLoop(spark, snap, unique, commitKey, compacts = None,
-          schemaDdl = snap.schemaDdl.getOrElse(cur.schema.toDDL),
-          cleanupOnKeyLoss = true, pinned = true, op = Some("dv")))
+        commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey,
+          snap.schemaDdl.getOrElse(cur.schema.toDDL)).copy(op = Some("dv"))))
     }
 
   /** UPDATE via merge-on-read (Delta's DV-backed `UPDATE ... SET`):
@@ -1685,9 +1624,8 @@ final class VersionedParquetSink(basePath: String,
           .write.mode(SaveMode.ErrorIfExists)
           .parquet(s"${tableDir(table)}/$unique/_dv")
         claimedOrKeyed(spark, table, commitKey, "update")(
-          commitLoop(spark, snap, unique, commitKey, compacts = None,
-            schemaDdl = ddl, cleanupOnKeyLoss = true, pinned = true,
-            op = Some("update"), statsJson = Some(stats)))
+          commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey, ddl)
+            .copy(op = Some("update"), stats = Some(stats))))
       } finally { matched.unpersist(); () }
     }
   }
@@ -1792,8 +1730,8 @@ final class VersionedParquetSink(basePath: String,
       require(bad == 0,
         s"cannot add CHECK constraint '$name' to '$table': existing rows " +
           s"violate ($sqlExpr)")
-      commitMetadata(spark, snap, commitKey, cur.schema,
-        Some(VersionedParquetSink.Constraints.render(
+      commitMetadata(spark, snap, commitKey, cur.schema, "constraint")(
+        _.copy(constraints = VersionedParquetSink.Constraints.render(
           existing :+ (name -> sqlExpr))))
     }
   }
@@ -1808,8 +1746,8 @@ final class VersionedParquetSink(basePath: String,
         s"no constraint '$name' on '$table' " +
           s"(have: ${existing.map(_._1).mkString(", ")})")
       commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
-        Some(VersionedParquetSink.Constraints.render(
-          existing.filterNot(_._1 == name))))
+        "constraint")(_.copy(constraints = VersionedParquetSink.Constraints
+          .render(existing.filterNot(_._1 == name))))
     }
 
   /** The table's TBLPROPERTIES (key -> value), empty if none were ever
@@ -1828,10 +1766,9 @@ final class VersionedParquetSink(basePath: String,
       commitKey: Option[String] = None): Long =
     retryingRewrite(spark, table, "properties", commitKey) { snap =>
       val merged = (snap.properties ++ props).toSeq
-      commitMetadata(spark, snap, commitKey,
-        schemaOf(spark, snap), constraints = None,
-        props = Some(VersionedParquetSink.Constraints.render(merged)),
-        opName = "properties")
+      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+        "properties")(
+        _.copy(props = VersionedParquetSink.Constraints.render(merged)))
     }
 
   /** ALTER TABLE UNSET TBLPROPERTIES: removes `keys` (missing keys are
@@ -1842,10 +1779,9 @@ final class VersionedParquetSink(basePath: String,
     retryingRewrite(spark, table, "properties", commitKey) { snap =>
       val remaining = VersionedParquetSink.Constraints.parse(snap.props)
         .filterNot(kv => keys.contains(kv._1))
-      commitMetadata(spark, snap, commitKey,
-        schemaOf(spark, snap), constraints = None,
-        props = Some(VersionedParquetSink.Constraints.render(remaining)),
-        opName = "properties")
+      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+        "properties")(
+        _.copy(props = VersionedParquetSink.Constraints.render(remaining)))
     }
 
   /** The table's generated columns (name -> SQL expression), empty if
@@ -1882,11 +1818,9 @@ final class VersionedParquetSink(basePath: String,
       require(bad == 0,
         s"cannot declare '$name' generated on '$table': existing rows " +
           s"differ from ($sqlExpr)")
-      commitMetadata(spark, snap, commitKey, cur.schema,
-        constraints = None,
-        generated = Some(VersionedParquetSink.Constraints.render(
-          existing :+ (name -> sqlExpr))),
-        opName = "generated")
+      commitMetadata(spark, snap, commitKey, cur.schema, "generated")(
+        _.copy(generated = VersionedParquetSink.Constraints.render(
+          existing :+ (name -> sqlExpr))))
     }
   }
 
@@ -1899,12 +1833,9 @@ final class VersionedParquetSink(basePath: String,
       require(existing.exists(_._1 == name),
         s"column '$name' of '$table' is not generated " +
           s"(generated: ${existing.map(_._1).mkString(", ")})")
-      commitMetadata(spark, snap, commitKey,
-        schemaOf(spark, snap),
-        constraints = None,
-        generated = Some(VersionedParquetSink.Constraints.render(
-          existing.filterNot(_._1 == name))),
-        opName = "generated")
+      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+        "generated")(_.copy(generated = VersionedParquetSink.Constraints
+          .render(existing.filterNot(_._1 == name))))
     }
 
   /** The table's column mapping (logical name -> physical name in the
@@ -1957,14 +1888,12 @@ final class VersionedParquetSink(basePath: String,
             .map(c => if (c == oldName) newName else c).mkString(",")
         case other => other
       }
-      commitMetadata(spark, snap, commitKey, newSchema,
-        constraints = None,
-        mapping = Some(VersionedParquetSink.ColumnMapping.render(renamed)),
-        generated = if (newGens == gens) None
-          else Some(VersionedParquetSink.Constraints.render(newGens)),
-        props = if (newProps == props) None
-          else Some(VersionedParquetSink.Constraints.render(newProps)),
-        opName = "rename_column")
+      commitMetadata(spark, snap, commitKey, newSchema, "rename_column")(d =>
+        d.copy(mapping = VersionedParquetSink.ColumnMapping.render(renamed),
+          generated = if (newGens == gens) d.generated
+            else VersionedParquetSink.Constraints.render(newGens),
+          props = if (newProps == props) d.props
+            else VersionedParquetSink.Constraints.render(newProps)))
     }
 
   /** ALTER TABLE DROP COLUMN (Delta column-mapping parity): a
@@ -1990,13 +1919,11 @@ final class VersionedParquetSink(basePath: String,
       requireConstraintsResolve(spark, table, snap, newSchema, newGens,
         s"drop column '$name'")
       val mapping = currentOrIdentityMapping(snap, schema)
-      commitMetadata(spark, snap, commitKey, newSchema,
-        constraints = None,
-        mapping = Some(VersionedParquetSink.ColumnMapping.render(
-          mapping.filterNot(_._1 == name))),
-        generated = if (newGens == gens) None
-          else Some(VersionedParquetSink.Constraints.render(newGens)),
-        opName = "drop_column")
+      commitMetadata(spark, snap, commitKey, newSchema, "drop_column")(d =>
+        d.copy(mapping = VersionedParquetSink.ColumnMapping.render(
+            mapping.filterNot(_._1 == name)),
+          generated = if (newGens == gens) d.generated
+            else VersionedParquetSink.Constraints.render(newGens)))
     }
 
   /** ALTER TABLE ADD COLUMN (Delta parity): a METADATA-ONLY commit that
@@ -2019,13 +1946,12 @@ final class VersionedParquetSink(basePath: String,
       val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
       val newMapping =
         if (mapping.isEmpty) None // mapping stays off until rename/drop
-        else Some(VersionedParquetSink.ColumnMapping.render(mapping :+
+        else VersionedParquetSink.ColumnMapping.render(mapping :+
           (name -> VersionedParquetSink.ColumnMapping.Entry(
             s"col-${UUID.randomUUID()}",
-            mapping.map(_._2.id).max + 1))))
-      commitMetadata(spark, snap, commitKey, newSchema,
-        constraints = None, mapping = newMapping,
-        opName = "add_column")
+            mapping.map(_._2.id).max + 1)))
+      commitMetadata(spark, snap, commitKey, newSchema, "add_column")(d =>
+        d.copy(mapping = newMapping.orElse(d.mapping)))
     }
 
   /** GENERATED ALWAYS AS IDENTITY (Delta identity-column parity):
@@ -2063,17 +1989,14 @@ final class VersionedParquetSink(basePath: String,
       val mapping = VersionedParquetSink.ColumnMapping.parse(snap.mapping)
       val newMapping =
         if (mapping.isEmpty) None
-        else Some(VersionedParquetSink.ColumnMapping.render(mapping :+
+        else VersionedParquetSink.ColumnMapping.render(mapping :+
           (name -> VersionedParquetSink.ColumnMapping.Entry(
-            s"col-${UUID.randomUUID()}", mapping.map(_._2.id).max + 1))))
-      val props = snap.properties
-      val merged = props + (s"graft.identity.$name" ->
+            s"col-${UUID.randomUUID()}", mapping.map(_._2.id).max + 1)))
+      val merged = snap.properties + (s"graft.identity.$name" ->
         s"$startWith:$incrementBy:${startWith - incrementBy}")
-      commitMetadata(spark, snap, commitKey, newSchema,
-        constraints = None, mapping = newMapping,
-        props = Some(VersionedParquetSink.Constraints.render(
-          merged.toSeq)),
-        opName = "identity_column")
+      commitMetadata(spark, snap, commitKey, newSchema, "identity_column")(
+        d => d.copy(mapping = newMapping.orElse(d.mapping),
+          props = VersionedParquetSink.Constraints.render(merged.toSeq)))
     }
   }
 
@@ -2116,17 +2039,12 @@ final class VersionedParquetSink(basePath: String,
         dummy.select(expr(sql)).queryExecution.analyzed) }
   }
 
-  /** A data-free commit carrying a metadata change (constraint set
-    * and/or column mapping + schema): the dir is an empty parquet write
-    * (so every reader/vacuum invariant holds unchanged), the marker
-    * carries the new metadata. */
+  /** A data-free [[Rewrite]] commit of `schema` carrying a metadata
+    * change: `change` sets the payloads it changes on the draft, which
+    * inherits the rest. */
   private def commitMetadata(spark: SparkSession, snap: Snapshot,
-      commitKey: Option[String], schema: StructType,
-      constraints: Option[Option[String]],
-      mapping: Option[Option[String]] = None,
-      generated: Option[Option[String]] = None,
-      props: Option[Option[String]] = None,
-      opName: String = "constraint"): Long = {
+      commitKey: Option[String], schema: StructType, opName: String)(
+      change: Commit => Commit): Long = {
     val table = snap.table
     val unique = s"d-${UUID.randomUUID()}"
     // the commit's data dir exists (every reader/vacuum invariant over
@@ -2134,11 +2052,8 @@ final class VersionedParquetSink(basePath: String,
     // only: explicit-schema parquet scans skip file-less dirs
     fs(spark, tableDir(table)).mkdirs(new Path(s"${tableDir(table)}/$unique"))
     claimedOrKeyed(spark, table, commitKey, s"$opName change")(
-      commitLoop(spark, snap, unique, commitKey,
-        compacts = None, schemaDdl = schema.toDDL,
-        cleanupOnKeyLoss = true, pinned = true, op = Some(opName),
-        newConstraints = constraints, newMapping = mapping,
-        newGenerated = generated, newProps = props))
+      commitLoop(spark, snap, Rewrite)(on => change(
+        on.draft(unique, commitKey, schema.toDDL).copy(op = Some(opName)))))
   }
 
   /** Fuse the table's CHECK constraints into a write as a per-row guard:
@@ -2179,12 +2094,11 @@ final class VersionedParquetSink(basePath: String,
       val out = content(spark, atTo)
       val (unique, stats) = writeDir(table, out, restoredMap, out.schema)
       claimedOrKeyed(spark, table, commitKey, "restore")(
-        commitLoop(spark, snap, unique, commitKey,
-          compacts = Some(snap.version),
-          schemaDdl = atTo.schemaDdl.getOrElse(out.schema.toDDL),
-          cleanupOnKeyLoss = true, pinned = true, op = Some("restore"),
-          statsJson = Some(stats), newMapping = Some(atTo.mapping),
-          newGenerated = Some(atTo.generated)))
+        commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey,
+            atTo.schemaDdl.getOrElse(out.schema.toDDL))
+          .copy(compacts = Some(snap.version), op = Some("restore"),
+            stats = Some(stats), mapping = atTo.mapping,
+            generated = atTo.generated)))
     }
 
   /** The table's content as of `snap`: its live dirs, live masks
@@ -2267,11 +2181,10 @@ final class VersionedParquetSink(basePath: String,
       val out = transform(snap, content(spark, snap))
       val (unique, stats) = writeDir(table, out, mapping, out.schema)
       claimedOrKeyed(spark, table, commitKey, opName)(
-        commitLoop(spark, snap, unique, commitKey,
-          compacts = Some(snap.version),
-          schemaDdl = snap.schemaDdl.getOrElse(out.schema.toDDL),
-          cleanupOnKeyLoss = true, pinned = true, op = Some(opName),
-          statsJson = Some(stats)))
+        commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey,
+            snap.schemaDdl.getOrElse(out.schema.toDDL))
+          .copy(compacts = Some(snap.version), op = Some(opName),
+            stats = Some(stats))))
     }
 
   /** Change-data-feed between two versions (Delta CDF parity): the rows
@@ -2455,11 +2368,10 @@ final class VersionedParquetSink(basePath: String,
       else fb.listStatus(d).toSeq.filter(st => st.isFile &&
           (st.getPath.getName.endsWith(".json") ||
             st.getPath.getName.endsWith(".json.failed")))
-        .flatMap { st =>
-          VersionedParquetSink.Staged
-            .parseTxn(readSmallFile(spark, st.getPath.toString))._2
-            .filter(_.table == table).map(_.unique)
-        }.toSet
+        // an unparseable manifest fails the vacuum naming the file: the
+        // dirs it pins are unknowable
+        .flatMap(st => readTxn(spark, st.getPath).get._2
+          .filter(_.table == table).map(_.unique)).toSet
     }
     val now = System.currentTimeMillis()
     // Clone holds: every registered clone (a `_clones/<name>` breadcrumb
@@ -2564,10 +2476,8 @@ final class VersionedParquetSink(basePath: String,
       return
     }
     retryingRewrite(spark, table, "overwrite", commitKey, Some(first)) { snap =>
-      val gensJson = snap.generated
-      val completed = completeGenerated(df, gensJson, None, table)
-      val cons = snap.constraints
-      val guarded = constraintGuard(completed, cons, table)
+      val completed = completeGenerated(df, snap.generated, None, table)
+      val guarded = constraintGuard(completed, snap.constraints, table)
       val mappingJson = snap.mapping
       val mapping = VersionedParquetSink.ColumnMapping.parse(mappingJson)
       val kept = mapping.filter { case (n, _) =>
@@ -2584,15 +2494,11 @@ final class VersionedParquetSink(basePath: String,
       val (unique, stats) =
         writeDir(table, guarded, extended, completed.schema)
       claimedOrKeyed(spark, table, commitKey, "overwrite")(
-        commitLoop(spark, snap, unique, commitKey = commitKey,
-          compacts = Some(snap.version),
-          schemaDdl = completed.schema.toDDL, cleanupOnKeyLoss = true,
-          pinned = true, op = Some("overwrite"), statsJson = Some(stats),
-          enforcedConstraints = Some(cons),
-          newMapping = if (mappingJson.isDefined)
-            Some(VersionedParquetSink.ColumnMapping.render(extended))
-          else None,
-          enforcedGenerated = Some(gensJson)))
+        commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey,
+            completed.schema.toDDL)
+          .copy(compacts = Some(snap.version), op = Some("overwrite"),
+            stats = Some(stats), mapping = mappingJson.flatMap(_ =>
+              VersionedParquetSink.ColumnMapping.render(extended)))))
     }
     ()
   }
@@ -2653,22 +2559,6 @@ final class VersionedParquetSink(basePath: String,
   def readAtWhere(spark: SparkSession, table: String, v: Long,
       condition: org.apache.spark.sql.Column): DataFrame =
     readAt(spark, table, v).filter(condition)
-
-  /** Test/observability hook: (files surviving pruning, total files) for
-    * a predicate at the latest version — the file index's answer to the
-    * data filters the planner derives for [[readWhere]]. */
-  private[graft] def pruningStats(spark: SparkSession, table: String,
-      condition: org.apache.spark.sql.Column): (Int, Int) = {
-    val scan = readWhere(spark, table, condition).queryExecution.sparkPlan
-      .collectFirst {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.getOrElse(throw new IllegalStateException(
-        s"readWhere on '$table' planned no file scan"))
-    def files(filters: Seq[org.apache.spark.sql.catalyst.expressions
-        .Expression]): Int =
-      scan.relation.location.listFiles(Nil, filters).map(_.files.size).sum
-    (files(scan.dataFilters), files(Nil))
-  }
 
   /** Timestamp time travel (Delta's `timestampAsOf`): the table as of the
     * LAST version committed at or before `ts` — commit wall-clocks come
@@ -2919,10 +2809,53 @@ object VersionedParquetSink {
   private[engine] final case class Staged(table: String, unique: String,
       schemaDdl: String, statsJson: String, constraints: Option[String],
       mapping: Option[String], newMapping: Option[String],
-      generated: Option[String])
+      generated: Option[String]) {
+    /** The governance the rows were validated against: the constraint
+      * and generated-column sets, and the mapping whenever the table is
+      * mapped (the files carry its physical names, so a concurrent
+      * rename/drop must abort the claim — otherwise a drop racing a
+      * non-extending evolution append could re-add the column under the
+      * dropped column's frozen physical name and resurrect old data). */
+    def pins: Map[Pin, Option[String]] =
+      Map[Pin, Option[String]](Pin.Constraints -> constraints,
+        Pin.Generated -> generated) ++ mapping.map(_ => Pin.Mapping -> mapping)
+
+    /** This dir's marker draft on `on`. */
+    def draft(on: Snapshot, key: Option[String]): Commit = {
+      val d = on.draft(unique, key, schemaDdl)
+      d.copy(stats = Some(statsJson), mapping = newMapping.orElse(d.mapping))
+    }
+  }
+
+  /** The conflict rule of a commit claim: what a commit that landed after
+    * the claim's snapshot does to it (the table in `commitLoop`'s doc). */
+  private[engine] sealed trait Conflict
+  /** Lands past newer commits; `pins` must still be the latest commit's
+    * payloads and the latest schema must accept the draft's. */
+  private[engine] final case class Append(allowEvolution: Boolean,
+      pins: Map[Pin, Option[String]]) extends Conflict
+  /** Any newer commit aborts: a read-modify-write of the whole table. */
+  private[engine] case object Rewrite extends Conflict
+  /** Only a newer compaction, fold or merge-on-read commit aborts. */
+  private[engine] case object Fold extends Conflict
+
+  /** A metadata payload an [[Append]] can pin. */
+  private[engine] sealed abstract class Pin(val of: Snapshot => Option[String])
+  private[engine] object Pin {
+    case object Props extends Pin(_.props)
+    case object Constraints extends Pin(_.constraints)
+    case object Mapping extends Pin(_.mapping)
+    case object Generated extends Pin(_.generated)
+    /** The order a claim checks them in. */
+    val values: Seq[Pin] = Seq(Props, Constraints, Mapping, Generated)
+  }
 
   private[engine] object Staged {
     private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.core.JsonParser.Feature
+        .STRICT_DUPLICATE_DETECTION)
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature
+        .FAIL_ON_TRAILING_TOKENS)
     def renderTxn(key: String, staged: Seq[Staged]): String = {
       val root = mapper.createObjectNode()
       root.put("key", key)
@@ -2940,17 +2873,24 @@ object VersionedParquetSink {
       }
       mapper.writeValueAsString(root)
     }
+    /** Throws on anything that is not one well-formed manifest. */
     def parseTxn(json: String): (String, Seq[Staged]) = {
       import scala.jdk.CollectionConverters._
+      type Node = com.fasterxml.jackson.databind.JsonNode
+      def opt(n: Node, f: String): Option[String] = Option(n.get(f)).map { v =>
+        require(v.isTextual, s"field '$f' is not a string"); v.asText }
+      def req(n: Node, f: String): String =
+        opt(n, f).getOrElse(throw new IllegalArgumentException(s"no '$f' field"))
       val root = mapper.readTree(json)
-      val staged = root.get("tables").elements().asScala.map { n =>
-        def opt(f: String) = Option(n.get(f)).map(_.asText)
-        Staged(n.get("table").asText, n.get("dir").asText,
-          n.get("schemaDdl").asText, n.get("stats").asText,
-          opt("constraints"), opt("mapping"), opt("newMapping"),
-          opt("generated"))
+      require(root != null && root.isObject, "not a JSON object")
+      val tables = Option(root.get("tables")).filter(_.isArray)
+        .getOrElse(throw new IllegalArgumentException("no 'tables' array"))
+      val staged = tables.elements().asScala.map { n =>
+        Staged(req(n, "table"), req(n, "dir"), req(n, "schemaDdl"),
+          req(n, "stats"), opt(n, "constraints"), opt(n, "mapping"),
+          opt(n, "newMapping"), opt(n, "generated"))
       }.toSeq
-      (root.get("key").asText, staged)
+      (req(root, "key"), staged)
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.VersionedParquetSink
+import graft.PruningStats._
 
 /** Bloom-filter file skipping (Delta bloom-index parity): per-file
   * filters on `graft.bloom.columns` prune point lookups that min/max

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.VersionedParquetSink
+import graft.PruningStats._
 
 /** Column mapping on the versioned sink (Delta `name`-mode parity):
   * RENAME/DROP COLUMN are metadata-only commits; parquet files keep

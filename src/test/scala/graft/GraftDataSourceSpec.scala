@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.VersionedParquetSink
+import graft.PruningStats._
 
 /** `format("graft")`: the sink as a first-class Spark data source —
   * commit-log stats pruning inside the PLANNER's own file listing,

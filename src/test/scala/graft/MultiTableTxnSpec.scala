@@ -191,6 +191,38 @@ class MultiTableTxnSpec extends AnyFunSuite {
     assert(sink.vacuum(spark, "b", graceMs = 0L) == 1)
   }
 
+  test("a corrupt manifest is quarantined after the others heal") {
+    val base = TestSpark.tmpDir("txncorrupt")
+    val sink = new VersionedParquetSink(base)
+    sink.multiAppendOnce(Seq(batch(2) -> "a", batch(2) -> "b"), "seed")
+    sink.txnClaimHook = t =>
+      if (t == "b") throw new RuntimeException("die")
+    intercept[RuntimeException] {
+      sink.multiAppendOnce(Seq(batch(3) -> "a", batch(3) -> "b"), "kc")
+    }
+    sink.txnClaimHook = _ => ()
+    // a truncated manifest and one without its table list
+    val txn = java.nio.file.Paths.get(s"$base/_txn")
+    java.nio.file.Files.writeString(txn.resolve("cut.json"),
+      """{"key":"x","tables":[{"table":"a","di""")
+    java.nio.file.Files.writeString(txn.resolve("bare.json"), """{"key":"y"}""")
+    val e = intercept[IllegalStateException] {
+      new VersionedParquetSink(base).recoverTransactions(spark) }
+    Seq("cut.json", "bare.json").foreach(n =>
+      assert(e.getMessage.contains(s"$n.failed"), e.getMessage))
+    // the valid crashed transaction healed; the garbage is quarantined
+    assert(sink.read(spark, "b").count() == 5)
+    assert(txn.toFile.list().sorted.toSeq ==
+      Seq("bare.json.failed", "cut.json.failed"))
+    assert(sink.multiAppendOnce(Seq(batch(1) -> "a", batch(1) -> "b"), "k6"))
+    assert(sink.read(spark, "a").count() == 6)
+    // vacuum cannot know which dirs a garbage manifest pins: it refuses,
+    // naming the file
+    val v = intercept[IllegalStateException](
+      sink.vacuum(spark, "a", graceMs = 0L))
+    assert(v.getMessage.contains(".json.failed"), v.getMessage)
+  }
+
   test("pipeline batch rides the transaction on the versioned sink") {
     val feeds = TestSpark.tmpDir("txnfeeds")
     java.nio.file.Files.write(java.nio.file.Paths.get(feeds, "b.json"),

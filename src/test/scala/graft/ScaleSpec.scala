@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{ParquetTableSink, Skew, VersionedParquetSink, ZOrder}
+import graft.PruningStats._
 
 /** Scale-mechanics checks: salted-join equivalence and partition-pruned
   * reads of the partitioned sink layout. */
