@@ -38,7 +38,7 @@ object CatalogReadProbe {
     val base = sys.env.getOrElse("SPARK_GRAFT_CATALOG_PROBE_DIR",
       s"/tmp/graft_catalog_probe${factor}x")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = graft.engine.LocalFs.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

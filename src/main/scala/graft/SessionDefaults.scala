@@ -49,6 +49,9 @@ object SessionDefaults {
       // scale. 71.0 -> 62.1 s; scale-adaptive by construction.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.ui.enabled", "false")
+    // file: store that sets modes and reads links without a process
+    // per file operation (engine/LocalFs)
+    graft.engine.LocalFs.configure(b)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim)
       .filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -1730,7 +1730,8 @@ final class VersionedParquetSink(basePath: String,
       require(bad == 0,
         s"cannot add CHECK constraint '$name' to '$table': existing rows " +
           s"violate ($sqlExpr)")
-      commitMetadata(spark, snap, commitKey, cur.schema, "constraint")(
+      commitMetadata(spark, snap, commitKey, tableSchema(spark, snap),
+        "constraint")(
         _.copy(constraints = VersionedParquetSink.Constraints.render(
           existing :+ (name -> sqlExpr))))
     }
@@ -1745,7 +1746,7 @@ final class VersionedParquetSink(basePath: String,
       require(existing.exists(_._1 == name),
         s"no constraint '$name' on '$table' " +
           s"(have: ${existing.map(_._1).mkString(", ")})")
-      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+      commitMetadata(spark, snap, commitKey, tableSchema(spark, snap),
         "constraint")(_.copy(constraints = VersionedParquetSink.Constraints
           .render(existing.filterNot(_._1 == name))))
     }
@@ -1766,7 +1767,7 @@ final class VersionedParquetSink(basePath: String,
       commitKey: Option[String] = None): Long =
     retryingRewrite(spark, table, "properties", commitKey) { snap =>
       val merged = (snap.properties ++ props).toSeq
-      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+      commitMetadata(spark, snap, commitKey, tableSchema(spark, snap),
         "properties")(
         _.copy(props = VersionedParquetSink.Constraints.render(merged)))
     }
@@ -1779,7 +1780,7 @@ final class VersionedParquetSink(basePath: String,
     retryingRewrite(spark, table, "properties", commitKey) { snap =>
       val remaining = VersionedParquetSink.Constraints.parse(snap.props)
         .filterNot(kv => keys.contains(kv._1))
-      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+      commitMetadata(spark, snap, commitKey, tableSchema(spark, snap),
         "properties")(
         _.copy(props = VersionedParquetSink.Constraints.render(remaining)))
     }
@@ -1818,7 +1819,8 @@ final class VersionedParquetSink(basePath: String,
       require(bad == 0,
         s"cannot declare '$name' generated on '$table': existing rows " +
           s"differ from ($sqlExpr)")
-      commitMetadata(spark, snap, commitKey, cur.schema, "generated")(
+      commitMetadata(spark, snap, commitKey, tableSchema(spark, snap),
+        "generated")(
         _.copy(generated = VersionedParquetSink.Constraints.render(
           existing :+ (name -> sqlExpr))))
     }
@@ -1833,7 +1835,7 @@ final class VersionedParquetSink(basePath: String,
       require(existing.exists(_._1 == name),
         s"column '$name' of '$table' is not generated " +
           s"(generated: ${existing.map(_._1).mkString(", ")})")
-      commitMetadata(spark, snap, commitKey, schemaOf(spark, snap),
+      commitMetadata(spark, snap, commitKey, tableSchema(spark, snap),
         "generated")(_.copy(generated = VersionedParquetSink.Constraints
           .render(existing.filterNot(_._1 == name))))
     }

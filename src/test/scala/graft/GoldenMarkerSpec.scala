@@ -309,13 +309,13 @@ class GoldenMarkerSpec extends AnyFunSuite {
       |dir=d-<uuid>
       |op=constraint
       |constraintsB64={"pos":"id > 0"}
-      |schemaB64=id BIGINT,v STRING
+      |schemaB64=id BIGINT NOT NULL,v STRING
       |ts=<ts>""")
     s.dropConstraint(spark, "t", "pos")
     check(b, "t", 2, """version=2
       |dir=d-<uuid>
       |op=constraint
-      |schemaB64=id BIGINT,v STRING
+      |schemaB64=id BIGINT NOT NULL,v STRING
       |ts=<ts>""")
   }
 
@@ -326,14 +326,14 @@ class GoldenMarkerSpec extends AnyFunSuite {
       |dir=d-<uuid>
       |op=properties
       |propsB64={"a":"1","b":"2"}
-      |schemaB64=id BIGINT,v STRING
+      |schemaB64=id BIGINT NOT NULL,v STRING
       |ts=<ts>""")
     s.unsetProperties(spark, "t", Seq("a"))
     check(b, "t", 2, """version=2
       |dir=d-<uuid>
       |op=properties
       |propsB64={"b":"2"}
-      |schemaB64=id BIGINT,v STRING
+      |schemaB64=id BIGINT NOT NULL,v STRING
       |ts=<ts>""")
   }
 
@@ -375,13 +375,13 @@ class GoldenMarkerSpec extends AnyFunSuite {
       |dir=d-<uuid>
       |op=generated
       |gensB64={"v":"concat('v', cast(id as string))"}
-      |schemaB64=id BIGINT,v STRING
+      |schemaB64=id BIGINT NOT NULL,v STRING
       |ts=<ts>""")
     s.dropGeneratedColumn(spark, "t", "v")
     check(b, "t", 2, """version=2
       |dir=d-<uuid>
       |op=generated
-      |schemaB64=id BIGINT,v STRING
+      |schemaB64=id BIGINT NOT NULL,v STRING
       |ts=<ts>""")
   }
 

@@ -179,4 +179,32 @@ class GovernanceSpec extends AnyFunSuite {
     assert(c1 == c2)
     assert(sink.versions(spark, "t").size == 4)
   }
+
+  test("metadata commands commit the declared schema, nullability kept") {
+    val store = TestSpark.tmpDir("gov10")
+    val sink = new VersionedParquetSink(store)
+    sink.append(Seq((1L, "a")).toDF("id", "v"), "t") // id BIGINT NOT NULL
+    def committedDdl(v: Long): String = {
+      val marker = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$store/t/_commits/$v.commit")), "UTF-8")
+      val b64 = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(marker).get("schemaB64").asText
+      new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
+    }
+    val commands: Seq[(String, () => Long)] = Seq(
+      "addConstraint" -> (() => sink.addConstraint(spark, "t", "pos", "id > 0")),
+      "dropConstraint" -> (() => sink.dropConstraint(spark, "t", "pos")),
+      "setProperties" -> (() => sink.setProperties(spark, "t", Map("a" -> "1"))),
+      "unsetProperties" -> (() => sink.unsetProperties(spark, "t", Seq("a"))),
+      "setGeneratedColumn" -> (() =>
+        sink.setGeneratedColumn(spark, "t", "v", "concat('a', '')")),
+      "dropGeneratedColumn" -> (() => sink.dropGeneratedColumn(spark, "t", "v")))
+    for ((name, run) <- commands)
+      assert(committedDdl(run()) == "id BIGINT NOT NULL,v STRING", name)
+    // a later schema command builds on the committed schema, so the
+    // declared nullability carries past the metadata commands
+    val v = sink.addColumn(spark, "t", "n",
+      org.apache.spark.sql.types.IntegerType)
+    assert(committedDdl(v) == "id BIGINT NOT NULL,v STRING,n INT")
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * configuration, including the graft extensions). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.engine.LocalFs.configure(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
