@@ -125,13 +125,14 @@ object BloomIndex {
       hfs.create(successMarkAt(bloomOut), true).close()
       return
     }
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    // shipped once to the tasks, not inside each task's closure
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration))
     val fallback = math.max(1L, (counts.values ++ Seq(1L)).max)
     val colNames = cols.map(_.name)
     val colTypes = cols.map(_.dataType)
     val outStr = bloomOut
-    spark.read.schema(physSchema).parquet(dataDir)
+    try spark.read.schema(physSchema).parquet(dataDir)
       .select(input_file_name().as("__file") +: colNames.map(col): _*)
       .repartition(col("__file"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
@@ -156,7 +157,7 @@ object BloomIndex {
             i += 1
           }
         }
-        val hfs = new Path(outStr).getFileSystem(conf.value)
+        val hfs = new Path(outStr).getFileSystem(conf.value.value)
         filters.foreach { case (name, fl) =>
           colNames.indices.foreach { i =>
             val out = hfs.create(sidecarAt(outStr, name, colNames(i)), true)
@@ -164,6 +165,7 @@ object BloomIndex {
           }
         }
       }
+    finally conf.destroy()
     // marker through bloomOut's FileSystem (matches the per-task
     // sidecar writes above) — dataDir may live on another filesystem
     // when a clone builds sidecars for an inherited source dir

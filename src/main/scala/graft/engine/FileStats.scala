@@ -27,9 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`statsB64`) and the external `_delta_log` mirror.
   *
   * Stats are collected INSIDE the write, as Delta's
-  * `DeltaJobStatisticsTracker` does: [[Tracker]] rides Spark's
-  * `FileFormatWriter` beside its basic stats tracker
-  * (`org.apache.spark.sql.graft.StatsWrite.writeWithStats`), each write
+  * `DeltaJobStatisticsTracker` does: [[Tracker]] rides the write's job
+  * description beside Spark's basic stats tracker
+  * (`org.apache.spark.sql.graft.StatsWrite.writeWithStats`, whose tasks
+  * run `FileFormatWriter.executeTask`), each write
   * task folds its rows into per-file accumulators, and the driver merges
   * the committed tasks' results into the JSON. Values are EXACT (footer
   * stats can be writer-truncated for strings, which would make

@@ -74,8 +74,7 @@ object GraftRelation {
       if (maskedPaths.isEmpty) None
       else Some(GraftMasks(
         dvs.map(d => VersionedParquetSink.resolveDir(tableDir, d.dir)),
-        maskedPaths, new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)))
+        maskedPaths))
     }
   }
 
@@ -151,15 +150,16 @@ object GraftRelation {
   * directories; `maskedPaths` the table-relative paths of files with at
   * least one masked row. Serializable and small — O(#masked files). */
 final case class GraftMasks(maskDirs: Seq[String],
-    maskedPaths: Set[String],
-    conf: org.apache.spark.util.SerializableConfiguration) {
+    maskedPaths: Set[String]) {
 
   /** All masked positions for ONE data file, read ON THE EXECUTOR from
     * the mask parquet with a `path = <file>` record filter. The sink
     * writes masks globally sorted by (path, pos), so parquet row-group
     * statistics skip every block without this file's rows; legacy
     * unsorted masks still answer correctly, just without skipping. */
-  def positionsFor(rel: String): java.util.HashSet[java.lang.Long] = {
+  def positionsFor(rel: String,
+      conf: org.apache.hadoop.conf.Configuration):
+      java.util.HashSet[java.lang.Long] = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
     import org.apache.parquet.hadoop.ParquetReader
@@ -170,13 +170,13 @@ final case class GraftMasks(maskDirs: Seq[String],
       Binary.fromString(rel))
     maskDirs.foreach { d =>
       val dir = new Path(d)
-      val fs = dir.getFileSystem(conf.value)
+      val fs = dir.getFileSystem(conf)
       if (fs.exists(dir)) {
         fs.listStatus(dir).filter(st => st.isFile &&
             st.getPath.getName.endsWith(".parquet")).foreach { st =>
           val reader = ParquetReader
             .builder(new GroupReadSupport(), st.getPath)
-            .withConf(conf.value)
+            .withConf(conf)
             .withFilter(FilterCompat.get(pred))
             .build()
           try {
@@ -474,6 +474,9 @@ final class GraftParquetFileFormat(mappingMap: Map[String, String],
         val noFilters = super.buildReaderWithPartitionValues(sparkSession,
           trans(dataSchema), partitionSchema, trans(requiredSchema),
           Nil, options, hadoopConf)
+        // the mask reads' conf, shipped once rather than in every task
+        val confB = sparkSession.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf))
         file => {
           // mask paths are `<commitDir>/<file>.parquet`, relative to the
           // table dir — recover that suffix from the task's file path
@@ -486,7 +489,7 @@ final class GraftParquetFileFormat(mappingMap: Map[String, String],
                 "isSplitable must return false for masked files")
             // EXECUTOR-side position fetch: only this file's mask rows
             // are read (row-group skipping via the sorted mask layout)
-            val dead = m.positionsFor(rel)
+            val dead = m.positionsFor(rel, confB.value.value)
             var idx = -1L
             noFilters(file).filter { _ => idx += 1; !dead.contains(idx) }
           }

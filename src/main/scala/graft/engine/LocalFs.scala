@@ -6,9 +6,9 @@ import java.nio.file.{Files, InvalidPathException}
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FSLinkResolver, FsConstants, FsServerDefaults, LocalFileSystem, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem,
+  FSDataInputStream, FileStatus, FSLinkResolver, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
@@ -71,7 +71,10 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 /** `fs.AbstractFileSystem.file.impl` (FileContext): stock `LocalFs`'s
   * checksum layer over [[NioRawLocalFileSystem]]. The overrides are
-  * `local.RawLocalFs`'s, whose constructors are package-private. */
+  * `local.RawLocalFs`'s, whose constructors are package-private, plus
+  * `open(Path)`: `FilterFs` hands that one to the raw store, so Spark's
+  * checkpoint reads (offsets, commits, state-store deltas) skipped their
+  * `.crc`; here it is the checksummed `open(path, bufferSize)`. */
 class NioLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new DelegateToFileSystem(FsConstants.LOCAL_FS_URI,
       new NioRawLocalFileSystem, conf, FsConstants.LOCAL_FS_URI.getScheme,
@@ -82,7 +85,10 @@ class NioLocalFs(uri: URI, conf: Configuration)
       override def getServerDefaults(): FsServerDefaults =
         LocalConfigKeys.getServerDefaults
       override def isValidName(src: String): Boolean = true
-    })
+    }) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalFs {
 

@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
@@ -71,8 +72,9 @@ final class GraftStreamingWrite(base: String, table: String,
       "spark.sql.session.timeZone")
       .foreach(k => conf.set(k, spark.conf.get(k)))
     val codec = spark.conf.get("spark.sql.parquet.compression.codec")
+    // one copy of the conf per epoch, not one inside every task
     new GraftStreamWriterFactory(s"${base.stripSuffix("/")}/$table",
-      runId, new SerializableConfiguration(conf),
+      runId, spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
       GraftStreamingWrite.codecName(codec))
   }
 
@@ -128,13 +130,13 @@ private[sources] case class GraftWriterMessage(file: Option[String],
     rows: Long) extends WriterCommitMessage
 
 private[sources] final class GraftStreamWriterFactory(tableDir: String,
-    runId: String, conf: SerializableConfiguration,
+    runId: String, conf: Broadcast[SerializableConfiguration],
     codec: CompressionCodecName) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftStreamDataWriter(
       s"$tableDir/d-stream-$runId-$epochId", partitionId, taskId,
-      conf.value, codec)
+      conf.value.value, codec)
 }
 
 /** Executor-side parquet writer: rows stream straight to a uniquely

@@ -147,12 +147,37 @@ class LocalFsSpec extends AnyFunSuite {
     out2.close()
     assert(Files.exists(Paths.get(dir, ".fc.bin.crc")))
     flip("fc.bin")
-    // the two-argument open: `FilterFs.open(Path)` reaches the raw store
-    // and skips verification, stock `LocalFs` included
-    intercept[ChecksumException] {
-      val in = fc.open(q, 4096)
-      try in.readFully(new Array[Byte](data.length)) finally in.close()
-    }
+    // both opens: stock `LocalFs` hands the one-argument one (Spark's
+    // checkpoint reads) to the raw store, which skips verification
+    for (open <- Seq(() => fc.open(q), () => fc.open(q, 4096)))
+      intercept[ChecksumException] {
+        val in = open()
+        try in.readFully(new Array[Byte](data.length)) finally in.close()
+      }
+  }
+
+  test("a flipped byte in a committed offset fails the stream's restart") {
+    val src = TestSpark.tmpDir("lfs-osrc")
+    val ckpt = TestSpark.tmpDir("lfs-ockpt")
+    spark.range(3).write.mode("overwrite").parquet(src)
+    def drain(): Unit = spark.readStream.schema("id BIGINT").parquet(src)
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    drain()
+    val offset = Paths.get(ckpt, "offsets", "0")
+    assert(Files.exists(Paths.get(ckpt, "offsets", ".0.crc")))
+    // one digit of the batch timestamp: the file still parses
+    val text = new String(Files.readAllBytes(offset), "UTF-8")
+    val at = text.indexOf("\"batchTimestampMs\":") + 19
+    val digit = text.charAt(at)
+    assert(digit.isDigit, text)
+    Files.write(offset, (text.take(at) + ((digit - '0' + 1) % 10) +
+      text.drop(at + 1)).getBytes("UTF-8"))
+    val e = intercept[Exception](drain())
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(_.toString.contains("ChecksumException")), e)
   }
 
   test("the session's FileSystem and FileContext are the fork-free classes") {
