@@ -53,7 +53,7 @@ object AnnIngest {
     val cap = sys.env.get("GRAFT_TRAIN_CAP").map(_.trim)
       .filter(_.nonEmpty).map(positiveInt("GRAFT_TRAIN_CAP", _))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.engine.LocalFs.configure(SparkSession.builder())
+    val spark = graft.engine.EngineSession.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

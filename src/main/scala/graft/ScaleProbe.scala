@@ -204,7 +204,7 @@ object ScaleProbe {
     // plan (a production 100 TB scan arrives in thousands of splits).
     // Setting this to corpus_bytes/cores reproduces the deployment
     // split shape without touching any query.
-    val builder = graft.engine.LocalFs.configure(SparkSession.builder())
+    val builder = graft.engine.EngineSession.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -49,9 +49,9 @@ object SessionDefaults {
       // scale. 71.0 -> 62.1 s; scale-adaptive by construction.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.ui.enabled", "false")
-    // file: store that sets modes and reads links without a process
-    // per file operation (engine/LocalFs)
-    graft.engine.LocalFs.configure(b)
+    // the engine's own settings: the fork-free file: store and the
+    // codegen cache size (engine/EngineSession)
+    graft.engine.EngineSession.configure(b)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim)
       .filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -6,6 +6,7 @@ import java.util.UUID
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.StatsWrite
 import org.apache.spark.sql.types.StructType
 
 /** Write-side mirror of the sink's commit log as a `_delta_log/`
@@ -414,9 +415,8 @@ object DeltaLogMirror {
 
     val built = rows.result()
     val tmpDir = s"$tableDir/_delta_log/.ck-tmp-${UUID.randomUUID()}"
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(built, 1), ckSchema)
-      .coalesce(1).write.mode("overwrite").parquet(tmpDir)
+    StatsWrite.write(spark.createDataFrame(
+      spark.sparkContext.parallelize(built, 1), ckSchema).coalesce(1), tmpDir)
     val part = fs.listStatus(new Path(tmpDir)).toSeq
       .find(st => st.isFile && st.getPath.getName.startsWith("part-") &&
         st.getPath.getName.endsWith(".parquet"))

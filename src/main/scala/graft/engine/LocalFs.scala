@@ -11,7 +11,6 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem,
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 
 /** Hadoop's raw local filesystem with the two calls that start an OS
   * process when libhadoop is absent done through java.nio instead:
@@ -88,13 +87,4 @@ class NioLocalFs(uri: URI, conf: Configuration)
     }) {
   override def open(f: Path): FSDataInputStream =
     open(f, getServerDefaults(f).getFileBufferSize)
-}
-
-object LocalFs {
-
-  /** Puts both Hadoop APIs' `file:` scheme on the fork-free classes. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-      classOf[NioLocalFs].getName)
 }

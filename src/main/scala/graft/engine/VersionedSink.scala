@@ -6,7 +6,7 @@ import java.util.{Base64, UUID}
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -1552,8 +1552,7 @@ final class VersionedParquetSink(basePath: String,
       // globally sorted by (path, pos): executor-side mask resolution
       // (GraftMasks.positionsFor) filters on path, and sortedness turns
       // that into parquet row-group skipping
-      dv.sort("path", "pos").write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"${tableDir(table)}/$unique")
+      StatsWrite.write(dv.sort("path", "pos"), s"${tableDir(table)}/$unique")
       claimedOrKeyed(spark, table, commitKey, "dv-delete")(
         commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey,
           snap.schemaDdl.getOrElse(cur.schema.toDDL)).copy(op = Some("dv"))))
@@ -1618,11 +1617,10 @@ final class VersionedParquetSink(basePath: String,
           VersionedParquetSink.ColumnMapping.physicalSchema(
             StructType(StructType.fromDDL(ddl)
               .fields.map(_.copy(nullable = true))), mapping))
-        matched
+        StatsWrite.write(matched
           .select(col("__dv_path").as("path"), col("__dv_pos").as("pos"))
-          .sort("path", "pos") // row-group-skippable executor mask reads
-          .write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"${tableDir(table)}/$unique/_dv")
+          .sort("path", "pos"), // row-group-skippable executor mask reads
+          s"${tableDir(table)}/$unique/_dv")
         claimedOrKeyed(spark, table, commitKey, "update")(
           commitLoop(spark, snap, Rewrite)(_.draft(unique, commitKey, ddl)
             .copy(op = Some("update"), stats = Some(stats))))

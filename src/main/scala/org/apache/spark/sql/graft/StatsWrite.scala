@@ -114,6 +114,12 @@ object StatsWrite {
     }
   }
 
+  /** The same write for a dir whose file stats nobody reads: a
+    * deletion-vector mask or a `_delta_log` checkpoint. */
+  def write(df: DataFrame, dir: String): Unit = {
+    writeWithStats(df, dir, new StructType()); ()
+  }
+
   /** One write task over the broadcast description. `executeTask` sets
     * the attempt's ids on the description's configuration, and the
     * broadcast object is shared by the tasks of a JVM, so each task

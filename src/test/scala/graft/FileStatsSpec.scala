@@ -174,4 +174,32 @@ class FileStatsSpec extends AnyFunSuite {
       TestSpark.tmpDir("fstats_retype") + "/d")
     assert(stats.size == 2 && stats.values.forall(_.nulls("gone") == 20))
   }
+
+  test("a stats-free write (mask, log checkpoint) writes df.write.parquet's bytes") {
+    // each part file's bytes, in part order (names carry a per-write uuid)
+    def parts(d: String): Seq[Seq[Byte]] = new java.io.File(d).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName.take(10))
+      .map(f => java.nio.file.Files.readAllBytes(f.toPath).toSeq).toSeq
+    def same(df: DataFrame): Unit = {
+      val viaJob = TestSpark.tmpDir("fstats_free") + "/d"
+      StatsWrite.write(df, viaJob)
+      val plain = TestSpark.tmpDir("fstats_free_plain") + "/d"
+      df.write.parquet(plain)
+      assert(parts(viaJob).nonEmpty && parts(viaJob) == parts(plain))
+    }
+    // a deletion-vector mask: (path, pos), globally sorted
+    same((0 until 300).map(i => (s"d-${i % 7}/part-$i", i.toLong * 3))
+      .toDF("path", "pos").repartition(3).sort("path", "pos"))
+    // a checkpoint: one partition of nested, mostly-null action rows
+    val action = StructType(Seq(
+      StructField("add", StructType(Seq(StructField("path", StringType),
+        StructField("partitionValues", MapType(StringType, StringType)),
+        StructField("size", LongType)))),
+      StructField("protocol", StructType(Seq(
+        StructField("minReaderVersion", IntegerType))))))
+    val actions = Row(null, Row(1)) +: (0 until 20).map(i =>
+      Row(Row(s"d-$i/p.parquet", Map.empty[String, String], i * 100L), null))
+    same(spark.createDataFrame(spark.sparkContext.parallelize(actions, 1),
+      action).coalesce(1))
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,31 +23,12 @@ class MultiJvmRaceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Launches RaceWorker in a fresh JVM with this JVM's classpath and
-    * --add-opens set (Spark 4 on JDK 17 needs them; sbt's fork injects
-    * them into THIS process, so mirror whatever is present). */
+  /** Launches RaceWorker in a fresh JVM ([[TestSpark.forkJvm]]). */
   private def launch(dir: String, role: String, id: Int, n: Int,
-      env: Map[String, String] = Map.empty): Process = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toList
-    val opens = jvmArgs.sliding(2).collect {
-      case List(flag, value)
-        if flag == "--add-opens" || flag == "--add-exports" =>
-        List(flag, value)
-    }.flatten.toList ++
-      jvmArgs.filter(a => a.startsWith("--add-opens=") ||
-        a.startsWith("--add-exports="))
-    val cmd = (javaBin :: opens) ++ List(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.RaceWorker", dir, role, id.toString, n.toString)
-    val pb = new ProcessBuilder(cmd.asJava)
-      .redirectOutput(new java.io.File(s"$dir/worker-$role-$id.out"))
-      .redirectErrorStream(true)
-    env.foreach { case (k, v) => pb.environment().put(k, v); () }
-    pb.start()
-  }
+      env: Map[String, String] = Map.empty): Process =
+    TestSpark.forkJvm("graft.RaceWorker",
+      Seq(dir, role, id.toString, n.toString),
+      new java.io.File(s"$dir/worker-$role-$id.out"), env)
 
   private def await(ps: Seq[Process], dir: String): Unit =
     ps.zipWithIndex.foreach { case (p, i) =>

@@ -37,7 +37,7 @@ object RaceWorker {
     val Array(dir, role, idStr, nStr) = args
     val id = idStr.toInt
     val n = nStr.toInt
-    val spark = graft.engine.LocalFs.configure(SparkSession.builder())
+    val spark = graft.engine.EngineSession.configure(SparkSession.builder())
       .master("local[2]")
       .appName(s"race-$role-$id")
       .config("spark.sql.shuffle.partitions", "2")

@@ -9,7 +9,7 @@ import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.StatsWrite
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.BroadcastBlockId
@@ -117,6 +117,10 @@ class TaskBinarySpec extends AnyFunSuite {
     sink.append(rows(1 to 40).repartition(4), "t")
     sink.deleteVectored(spark, "t", col("id") <= 5)
     rows(1 to 30).repartition(2).write.parquet(s"$base/bloomsrc")
+    // versions 0-9: the next commit is due a _delta_log checkpoint
+    (1 to 10).foreach(i => sink.append(rows(i to i), "ck"))
+    val checkpoint = new File(s"$base/ck/_delta_log",
+      f"${10L}%020d.checkpoint.parquet")
     spark.conf.set("spark.sql.catalog.tbin", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.tbin.path", TestSpark.tmpDir("tbin-cat"))
     spark.sql("CREATE TABLE tbin.out (id INT, v STRING)")
@@ -144,7 +148,18 @@ class TaskBinarySpec extends AnyFunSuite {
       "masked scan" -> (() =>
         assert(sink.read(spark, "t").count() == 35)),
       "bloom build" -> (() => BloomIndex.buildDir(spark, s"$base/bloomsrc",
-        schema, schema.fields.toSeq, Map.empty, 0.01)))
+        schema, schema.fields.toSeq, Map.empty, 0.01)),
+      "deletion-vector delete" -> (() => {
+        sink.deleteVectored(spark, "t", col("id") === 7); ()
+      }),
+      "deletion-vector update" -> (() => {
+        sink.updateVectored(spark, "t", col("id") === 8,
+          Map("v" -> lit("u"))); ()
+      }),
+      "_delta_log checkpoint" -> (() => {
+        sink.append(rows(11 to 11), "ck")
+        assert(checkpoint.isFile, s"no $checkpoint")
+      }))
     try {
       val over = ops.flatMap { case (name, op) =>
         val perJob = recording { r => op(); r.taskBinaryBytes }
