@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
 
 /** Batch end-to-end wiring (SURVEY.md §3.1): the reference's
@@ -19,8 +20,35 @@ import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
   * adds nothing here, since the batch holds each id once. Re-running
   * on the same snapshots appends nothing: the state anti-join (T1/T2)
   * makes the pipeline idempotent at the batch level.
+  *
+  * The writes are shaped from the materialized batch ([[writeShape]]):
+  * raw, curated and state are written from the cache coalesced to
+  * `ceil(cached bytes / 128 MiB)` partitions, so a poll lands one file
+  * per table instead of one per cached partition. Actors keeps the
+  * batch's partitioning: its analyzer runs in `mapPartitions` (an HTTP
+  * or LLM client in a deployment), and a coalesce above it would cap
+  * its request concurrency.
   */
 object Pipeline {
+
+  /** The write shape of a cached batch after the action that loaded it:
+    * a coalesce to `ceil(cached bytes / target)` partitions
+    * ([[VersionedParquetSink.sizedPartitions]] at the sink's write
+    * target), never more than the cache holds. The size is the cache's
+    * measured size, not a plan estimate. Only a fully loaded cache is
+    * shaped: a coalesce is narrow, so above a partition that is not
+    * cached yet it would compute that partition's upstream (the stateful
+    * dedup, the ingest scan) in fewer tasks. Anything else writes
+    * unshaped. */
+  def writeShape(cached: DataFrame): DataFrame => DataFrame =
+    cached.queryExecution.optimizedPlan match {
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        val n = VersionedParquetSink.sizedPartitions(r.stats.sizeInBytes,
+          VersionedParquetSink.WriteTargetBytes,
+          r.cacheBuilder.cachedColumnBuffers.getNumPartitions)
+        _.coalesce(n)
+      case _ => identity
+    }
 
   case class Result(newArticles: Long,
       quality: Map[String, Any] = Map.empty)
@@ -66,17 +94,19 @@ object Pipeline {
       if (n == 0) return Result(0, obs.get) // T3 empty-batch short-circuit
       val batchKey = s"ingest-$n-${head.getDecimal(1)}"
       val curated = Curate(fresh)
+      // the action above loaded every partition of the cache
+      val shape = writeShape(fresh)
       // ONE cross-table commit for the whole batch: on the versioned
       // sink the four tables land all-or-none (a crash between table
       // writes can no longer leave raw ahead of curated); on the plain
       // parquet sink this degrades to the per-table at-least-once the
       // reference itself has (collector.py:113-115)
       sink.multiAppendOnce(Seq(
-        fresh -> "raw",
-        curated -> "curated",
+        shape(fresh) -> "raw",
+        shape(curated) -> "curated",
         Analyze.explodeActors(Analyze.analyses(spark, curated, analyzer))
           -> "actors",
-        fresh.select("id") -> "state"), batchKey)
+        shape(fresh.select("id")) -> "state"), batchKey)
       Result(n, obs.get)
     } finally fresh.unpersist()
   }

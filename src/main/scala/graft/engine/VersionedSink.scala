@@ -607,13 +607,13 @@ final class VersionedParquetSink(basePath: String,
   /** Size-targeted partition count for an append: Catalyst's planned
     * size over the target bin, at least 1. */
   private def sizedPartitions(df: DataFrame,
-      props: Map[String, String]): Int = {
-    val target = props.get("graft.optimizeWrite.targetBytes")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(128L * 1024 * 1024)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    ((est + target - 1) / target).max(1).min(Int.MaxValue).toInt
-  }
+      props: Map[String, String]): Int =
+    VersionedParquetSink.sizedPartitions(
+      df.queryExecution.optimizedPlan.stats.sizeInBytes,
+      props.get("graft.optimizeWrite.targetBytes")
+        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+        .getOrElse(VersionedParquetSink.WriteTargetBytes),
+      Int.MaxValue)
 
   /** The frame's partition count, read without running it.
     * `df.rdd.getNumPartitions` would run every exchange below an
@@ -2773,6 +2773,17 @@ final class VersionedParquetSink(basePath: String,
 }
 
 object VersionedParquetSink {
+
+  /** Bytes of Catalyst-measured size per written file: the default of
+    * `graft.optimizeWrite.targetBytes`, and the target the pipelines
+    * shape their table writes to. */
+  val WriteTargetBytes: Long = 128L * 1024 * 1024
+
+  /** Files for `bytes` of rows at `target` bytes each:
+    * `ceil(bytes / target)`, at least 1 and at most `limit` (a
+    * coalesce can only merge the partitions a frame has). */
+  def sizedPartitions(bytes: BigInt, target: Long, limit: Int): Int =
+    ((bytes + target - 1) / target).max(1).min(limit.max(1)).toInt
 
   /** The ONE parser for the `graft.identity.<col>` = "start:step:hw"
     * TBLPROPERTIES codec — shared by the sink's allocation path and the

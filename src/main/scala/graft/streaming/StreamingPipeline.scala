@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.engine.{Analyze, Curate, Ingest, Schemas, TableSink}
+import graft.engine.{Analyze, Curate, Ingest, Pipeline, Schemas, TableSink}
 
 /** Structured-Streaming version of the pipeline (SURVEY.md §2.2, T1-T4).
   *
@@ -28,6 +28,12 @@ import graft.engine.{Analyze, Curate, Ingest, Schemas, TableSink}
   *    in [[Analyze.withAnalysis]] planned one side of the batch outside
   *    the cache, and the actors write ran the dedup a second time, so
   *    the state store counted every id twice.
+  *  - the empty-batch check is a count, which loads every partition of
+  *    the cache, so the raw and curated writes are then shaped from the
+  *    loaded batch ([[Pipeline.writeShape]]): one file per table for a
+  *    batch under 128 MiB, with the dedup already run, one task per
+  *    state partition. Actors keeps the batch's partitioning for its
+  *    `mapPartitions` analyzer, as on the batch path.
   *
   * Exactly-once: checkpointed offsets + state; on restart, a re-run
   * micro-batch re-appends only rows the dedup state has not seen.
@@ -39,6 +45,10 @@ object StreamingPipeline {
     *   without this a long-running stream appends one directory per
     *   batch per table forever (the small-file problem); compaction is
     *   itself a keyed commit, so a replayed maintenance batch is safe.
+    *   N counts batch ids, no-data batches included (a watermarked
+    *   stream runs one after a data batch that moves the watermark):
+    *   the fold runs at every id that is a positive multiple of N,
+    *   whether or not that batch has rows.
     * @param vacuumAfterCompact additionally reclaim the superseded
     *   pre-compaction directories right after each compaction — bounds
     *   TOTAL storage for an unbounded run at the documented cost of
@@ -92,10 +102,13 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // every action on the batch itself re-runs the stateful dedup,
-        // so even the empty-batch check reads the cache
+        // so even the empty-batch check reads the cache; a count, not
+        // isEmpty, so that every partition is loaded before the writes
+        // are shaped
         val cached = batch.cache()
         try {
-          if (!cached.isEmpty) {
+          if (cached.count() > 0) {
+            val shape = Pipeline.writeShape(cached)
             // ONE cross-table transaction per micro-batch, keyed by
             // batchId: on a VersionedParquetSink the three tables land
             // all-or-none (a crash can no longer leave raw ahead of
@@ -127,33 +140,34 @@ object StreamingPipeline {
               case _ => Seq.empty
             }
             sink.multiAppendOnce(Seq(
-              cached -> "raw",
-              curated -> "curated",
+              shape(cached) -> "raw",
+              shape(curated) -> "curated",
               Analyze.explodeActors(Analyze.analyses(
                 cached.sparkSession, curated, analyzer)) -> "actors") ++ extras,
               s"batch-$batchId")
-            // periodic OPTIMIZE: only meaningful on the versioned sink
-            // (the plain parquet sink appends files, not directories);
-            // keyed by batchId so a crash-recovered replay of this batch
-            // skips the whole-table rewrite instead of re-copying it
-            (sink, compactEvery) match {
-              case (v: graft.engine.VersionedParquetSink, Some(n))
-                  if n > 0 && batchId > 0 && batchId % n == 0 =>
-                Seq("raw", "curated", "actors").foreach { t =>
-                  if (v.exists(cached.sparkSession, t)) {
-                    v.compact(cached.sparkSession, t,
-                      commitKey = Some(s"compact-$batchId"))
-                    // vacuum is naturally idempotent (deleting nothing
-                    // is a no-op), so no key needed on replay; graceMs=0
-                    // is safe ONLY because foreachBatch serializes this
-                    // stream's writes — concurrent writers need the grace
-                    if (vacuumAfterCompact)
-                      v.vacuum(cached.sparkSession, t, graceMs = 0L,
-                        includeSuperseded = true)
-                  }
+          }
+          // periodic OPTIMIZE: only meaningful on the versioned sink
+          // (the plain parquet sink appends files, not directories);
+          // keyed by batchId so a crash-recovered replay of this batch
+          // skips the whole-table rewrite instead of re-copying it. Due
+          // by batch id, so a due no-data batch folds too
+          (sink, compactEvery) match {
+            case (v: graft.engine.VersionedParquetSink, Some(n))
+                if n > 0 && batchId > 0 && batchId % n == 0 =>
+              Seq("raw", "curated", "actors").foreach { t =>
+                if (v.exists(cached.sparkSession, t)) {
+                  v.compact(cached.sparkSession, t,
+                    commitKey = Some(s"compact-$batchId"))
+                  // vacuum is naturally idempotent (deleting nothing
+                  // is a no-op), so no key needed on replay; graceMs=0
+                  // is safe ONLY because foreachBatch serializes this
+                  // stream's writes — concurrent writers need the grace
+                  if (vacuumAfterCompact)
+                    v.vacuum(cached.sparkSession, t, graceMs = 0L,
+                      includeSuperseded = true)
                 }
-              case _ => ()
-            }
+              }
+            case _ => ()
           }
         } finally cached.unpersist()
       }

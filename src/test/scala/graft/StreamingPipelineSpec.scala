@@ -100,6 +100,36 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(sink.read(spark, "raw").count() == 2)
   }
 
+  test("a compaction due on a no-data batch runs on that batch") {
+    val feeds = TestSpark.tmpDir("nfeeds")
+    val ckpt = TestSpark.tmpDir("nckpt")
+    val sink = new graft.engine.VersionedParquetSink(TestSpark.tmpDir("nstore"))
+    // each run is a data batch and then the no-data batch its watermark
+    // move schedules: ids 0 (data), 1, 2 (data), 3
+    def run(file: String, guid: String, published: String) = {
+      Files.write(Paths.get(feeds, file), entry(guid,
+        "President Alice Smith resigns").replace(
+        "Mon, 05 Feb 2024 10:30:00 GMT", published).getBytes)
+      val q = StreamingPipeline.stream(spark, feeds, sink, ckpt,
+        compactEvery = Some(3))
+      q.awaitTermination()
+      q.recentProgress.toSeq.map(p => p.batchId -> p.numInputRows)
+    }
+    val batches = (run("n1.json", "n1", "Mon, 05 Feb 2024 10:30:00 GMT") ++
+      run("n2.json", "n2", "Tue, 20 Feb 2024 10:30:00 GMT")).toMap
+    assert(batches == Map(0L -> 1L, 1L -> 0L, 2L -> 1L, 3L -> 0L),
+      s"batches: $batches")
+    Seq("raw", "curated", "actors").foreach { t =>
+      val keys = sink.history(spark, t).select("commitKey")
+        .collect().map(_.getString(0)).toSeq
+      assert(keys.contains("compact-3"), s"$t commit keys: $keys")
+    }
+    val raw = sink.read(spark, "raw")
+    assert(raw.count() == 2)
+    assert(raw.inputFiles.map(_.split("/raw/")(1).split("/")(0))
+      .distinct.length == 1)
+  }
+
   test("each micro-batch runs the stateful dedup once") {
     val feeds = TestSpark.tmpDir("ofeeds")
     val ckpt = TestSpark.tmpDir("ockpt")
