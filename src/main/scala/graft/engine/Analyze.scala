@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The row-wise text-analysis stage (SURVEY.md §2.6): per-article actor/
@@ -90,13 +90,19 @@ object Analyze {
     * rows equal those of [[withAnalysis]]. */
   def analyses(
       spark: SparkSession, news: DataFrame,
-      analyzer: TextAnalyzer = RuleBasedAnalyzer): DataFrame = {
-    import spark.implicits._
+      analyzer: TextAnalyzer = RuleBasedAnalyzer): DataFrame =
     news
-      .select("id", "title", "description").as[(String, String, String)]
-      .mapPartitions(analyzer.analyzeBatch)
+      .select("id", "title", "description").as(inputEncoder)
+      .mapPartitions(analyzer.analyzeBatch)(outputEncoder)
       .toDF("id", "analysis")
-  }
+
+  // derived once: `spark.implicits._` derives a product encoder by Scala
+  // runtime reflection on every call, and [[analyses]] runs once per
+  // poll and per micro-batch, on the driver, before the commit
+  private lazy val inputEncoder: Encoder[(String, String, String)] =
+    Encoders.product
+  private lazy val outputEncoder: Encoder[(String, Option[Analysis])] =
+    Encoders.product
 
   /** news -> news + nested `analysis` struct column: `news` left-joined
     * to [[analyses]] on `id`. This is a self-join of `news`, and one of

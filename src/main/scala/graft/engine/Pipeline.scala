@@ -98,7 +98,8 @@ object Pipeline {
       val shape = writeShape(fresh)
       // ONE cross-table commit for the whole batch: on the versioned
       // sink the four tables land all-or-none (a crash between table
-      // writes can no longer leave raw ahead of curated); on the plain
+      // writes can no longer leave raw ahead of curated), their writes
+      // staged side by side and claimed in table order; on the plain
       // parquet sink this degrades to the per-table at-least-once the
       // reference itself has (collector.py:113-115)
       sink.multiAppendOnce(Seq(

@@ -2,12 +2,16 @@ package graft.engine
 
 import java.nio.charset.StandardCharsets
 import java.util.{Base64, UUID}
+import java.util.concurrent.{CompletableFuture, CompletionException,
+  ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.graft.StatsWrite
@@ -745,7 +749,13 @@ final class VersionedParquetSink(basePath: String,
     *
     *  1. stage each table's data dir ([[stageAppend]]) — invisible until
     *     a marker claims it; a crash here orphans unclaimed dirs that
-    *     [[vacuum]] collects, and NO table shows the batch;
+    *     [[vacuum]] collects, and NO table shows the batch. The tables
+    *     stage concurrently, one task each
+    *     ([[VersionedParquetSink.concurrently]]): the step takes as long
+    *     as its slowest write, not the sum of them. It ends only when
+    *     every write has ended, also when one fails or the caller is
+    *     interrupted, and then throws the first failure with no manifest
+    *     published;
     *  2. atomically rename ONE txn manifest into `_txn/` — the commit
     *     point. From this instant the batch is durable for ALL tables:
     *     [[recoverTransactions]] (run at the start of every
@@ -778,8 +788,11 @@ final class VersionedParquetSink(basePath: String,
     val pending = writes.map { case (df, t) => (df, readLog(spark, t)) }
       .filter { case (_, snap) => snap.versionOf(txnKey).isEmpty }
     if (pending.isEmpty) return false // full keyed replay: no-op
-    val staged = pending.map { case (df, snap) =>
-      snap -> stageAppend(df, snap, allowEvolution = false) }
+    // the tables stage side by side; the call goes on (or throws) only
+    // once every staging write has ended
+    val staged = VersionedParquetSink.concurrently(spark, pending) {
+      case (df, snap) => snap -> stageAppend(df, snap, allowEvolution = false)
+    }
     f.mkdirs(new Path(txnDir))
     if (!coordinator.publishIfAbsent(f,
         new Path(s"$txnDir/${txnFileName(txnKey)}"),
@@ -2797,6 +2810,51 @@ object VersionedParquetSink {
     }
   /** Serializes marker claims within one JVM (see commitLoop). */
   private[engine] val localClaimLock = new Object
+
+  /** Daemon threads for [[concurrently]]: a cached pool, so it holds as
+    * many threads as tasks are in flight, and idle ones retire after a
+    * minute. */
+  private lazy val stagingPool: ExecutorService = {
+    val ids = new AtomicInteger
+    Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-stage-${ids.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** `f` over every element of `xs` at once, one task each, results in
+    * `xs` order. Each task runs through `withThreadLocalCaptured`, so it
+    * sees the caller's active session and local properties: its jobs
+    * join the caller's SQL execution and job group, and cancelling the
+    * group (a stream's `stop()`) cancels them too. Returns or throws only
+    * after every task has ended, also when a task fails or the caller is
+    * interrupted while it waits; then throws the first failure in `xs`
+    * order (the others suppressed on it), or an `InterruptedException`
+    * when every task succeeded but the wait was interrupted. */
+  private def concurrently[A, B](spark: SparkSession, xs: Seq[A])(
+      f: A => B): Seq[B] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val tasks = xs.map(x =>
+      SQLExecution.withThreadLocalCaptured(session, stagingPool)(f(x)))
+    // join() waits through an interrupt and sets the flag again after
+    Try(CompletableFuture.allOf(tasks: _*).join())
+    val interrupted = Thread.interrupted()
+    val failures = tasks.flatMap(t => Try(t.join()).failed.toOption.map {
+      case e: CompletionException if e.getCause != null => e.getCause
+      case e => e
+    })
+    if (failures.nonEmpty || interrupted) {
+      val first = failures.headOption.getOrElse(new InterruptedException(
+        "interrupted while staging; every staging write has ended"))
+      failures.drop(1).foreach(first.addSuppressed)
+      // a failure thrown in place of the interrupt keeps it pending
+      if (interrupted && failures.nonEmpty)
+        Thread.currentThread().interrupt()
+      throw first
+    }
+    tasks.map(_.join())
+  }
 
   /** Resolve a commit's data dir against its table dir. A plain dir is
     * the fast-path concatenation; a `../`-escaping dir (written by

@@ -113,6 +113,9 @@ object CorpusMonitor {
       .withColumn("batch_key", lit(batchKey))
       .select("batch_key", "lang", "n_docs", "n_tokens", "mean_chars",
         "quality_rate", "dup_rate", "share", "prior_share", "drift")
+      // one row per language: written as one file, not one per shuffle
+      // partition the aggregation leaves
+      .coalesce(1)
     Some(rows)
   }
 

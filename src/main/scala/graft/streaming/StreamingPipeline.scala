@@ -159,9 +159,13 @@ object StreamingPipeline {
                   v.compact(cached.sparkSession, t,
                     commitKey = Some(s"compact-$batchId"))
                   // vacuum is naturally idempotent (deleting nothing
-                  // is a no-op), so no key needed on replay; graceMs=0
-                  // is safe ONLY because foreachBatch serializes this
-                  // stream's writes — concurrent writers need the grace
+                  // is a no-op), so no key needed on replay. graceMs=0
+                  // is safe ONLY because no write of this stream is in
+                  // flight here: foreachBatch runs one batch at a time,
+                  // and multiAppendOnce, whose tables stage side by
+                  // side, returns or throws only after every one of its
+                  // staging writes has ended. Any other writer of
+                  // these tables needs the grace
                   if (vacuumAfterCompact)
                     v.vacuum(cached.sparkSession, t, graceMs = 0L,
                       includeSuperseded = true)

@@ -141,6 +141,20 @@ class ShapedWriteSpec extends AnyFunSuite {
     assert(files(sink, "actors") > 2)
   }
 
+  test("the stream's corpus_stats and reservoir land one file per micro-batch") {
+    val feeds = TestSpark.tmpDir("shapexfeed")
+    val ckpt = TestSpark.tmpDir("shapexckpt")
+    val sink = new VersionedParquetSink(TestSpark.tmpDir("shapexstore"))
+    Seq("x", "y").zipWithIndex.foreach { case (prefix, i) =>
+      writeFeed(feeds, s"$prefix.json", prefix, 40)
+      StreamingPipeline.stream(spark, feeds, sink, ckpt, monitorStats = true,
+        reservoirK = Some(8)).awaitTermination()
+      Seq("corpus_stats", "reservoir").foreach(t =>
+        assert(files(sink, t) == i + 1, s"$t: ${files(sink, t)} files " +
+          s"after ${i + 1} micro-batches"))
+    }
+  }
+
   test("sizing: ceil(bytes / target), at least 1, at most the batch's partitions") {
     val mib = 1024L * 1024
     def n(bytes: Long, limit: Int) =
